@@ -1,9 +1,7 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // shuffle/spill files on the memory-backed tmpfs when the host has
     // one: three rounds of official-artifact attribution traced the
     // recorded spike clusters to host DISK slow windows landing on
@@ -17,40 +15,9 @@ object Bench {
     // RAM-backed tmpfs (Docker's default /dev/shm is 64 MiB) would
     // ENOSPC or worsen the pressure it is relieving — require several
     // GiB usable before taking the tmpfs, else default local dirs.
-    val shm = java.nio.file.Paths.get("/dev/shm")
-    def shmUsable: Boolean =
-      try java.nio.file.Files.getFileStore(shm).getUsableSpace >= (8L << 30)
-      catch { case _: Throwable => false }
-    val localDir =
-      if (!sys.env.contains("SPARK_GRAFT_NO_SHM") &&
-          java.nio.file.Files.isDirectory(shm) &&
-          java.nio.file.Files.isWritable(shm) && shmUsable)
-        Some(java.nio.file.Files.createDirectories(
-          shm.resolve("graft_spark_local")).toString)
-      else None
-    val builder0 = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // Spark 4.1's unionOutputPartitioning (default on) lets UnionExec
-      // ADVERTISE its children's common hash partitioning while the
-      // union RDD physically has the SUM of their partitions — a
-      // downstream co-partitioned join then zips 32-vs-64 partition
-      // RDDs and fails (observed on q319 once the table loader hash-
-      // partitions embeddings); an aggregate could silently duplicate
-      // split keys. Off = the pre-4.1 Unknown partitioning, which
-      // re-inserts the exchange EnsureRequirements always added.
-      .config("spark.sql.unionOutputPartitioning", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true") // events.ts is TIMESTAMP(NANOS)
-      // sf0.x parquet is a single small file per table; the default
-      // 128m split size would leave every scan single-task. 1m splits
-      // emulate the many-block layout a real table has at scale.
-      .config("spark.sql.files.maxPartitionBytes", "1m")
-      .config("spark.sql.files.openCostInBytes", "65536")
-      .config("spark.ui.enabled", "false")
-    val spark = localDir.fold(builder0)(d => builder0.config("spark.local.dir", d))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val localDir = Sessions.shm(8L << 30)
+      .map(shm => java.nio.file.Files.createDirectories(shm.resolve("graft_spark_local")).toString)
+    val spark = Sessions.create(Sessions.harness ++ localDir.map("spark.local.dir" -> _))
     import scala.jdk.CollectionConverters._
     def gcMillis: Long = java.lang.management.ManagementFactory
       .getGarbageCollectorMXBeans.asScala.map(_.getCollectionTime).sum

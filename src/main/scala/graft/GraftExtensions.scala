@@ -8,10 +8,9 @@ import graft.functions.{CosineSim, HilbertIndex, SimHash64}
 /** Session extensions exposing the engine's native expressions to SQL:
   *
   * {{{
-  * SparkSession.builder()
-  *   .withExtensions(new GraftExtensions)   // or
-  *   .config("spark.sql.extensions", "graft.GraftExtensions")
-  * ...
+  * // or spark-submit --conf spark.sql.extensions=graft.GraftExtensions
+  * val spark = graft.Sessions.create(
+  *   graft.Sessions.harness + ("spark.sql.extensions" -> "graft.GraftExtensions"))
   * spark.sql("SELECT simhash64(split(text, ' ')), cosine_sim(a, b) ...")
   * }}}
   */

@@ -21,73 +21,66 @@ object Main {
 
   def main(args: Array[String]): Unit = sys.exit(run(args))
 
-  def run(args: Array[String]): Int = {
-    if (args.length < 2) { usage(); return 2 }
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", s"local[${Runtime.getRuntime.availableProcessors()}]"))
-      .appName("graft-ingestion")
-      .config("spark.sql.session.timeZone", "UTC")
-      // Spark 4.1's unionOutputPartitioning (default on) lets UnionExec
-      // ADVERTISE its children's common hash partitioning while the
-      // union RDD physically has the SUM of their partitions — a
-      // downstream co-partitioned join then zips 32-vs-64 partition
-      // RDDs and fails (observed on q319 once the table loader hash-
-      // partitions embeddings); an aggregate could silently duplicate
-      // split keys. Off = the pre-4.1 Unknown partitioning, which
-      // re-inserts the exchange EnsureRequirements always added.
-      .config("spark.sql.unionOutputPartitioning", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+  /** Bad usage, found before any session is built (exit 2). */
+  private final class Usage(msg: String) extends RuntimeException(msg)
+
+  def run(args: Array[String], newSession: () => SparkSession = defaultSession): Int =
     try {
-      args(0) match {
-        case "csv" =>
-          val res = CsvIngestion.run(spark, PipelineConfig.fromJsonFile(args(1)),
-            showPreview = true)
-          println(s"[graft] wrote ${res.rows} rows -> ${res.dataFile}")
-          println(s"[graft] manifest -> ${res.manifestFile}")
-          0
-        case "api" =>
-          if (args.length < 4) { usage(); return 2 }
-          val usersCfg = PipelineConfig.fromJsonFile(args(1))
-          val postsCfg = PipelineConfig.fromJsonFile(args(2))
-          val target = args(3)
-          val transport = parseFixtures(args.drop(4)) match {
-            case Some(fixtures) =>
-              val api = usersCfg.api.getOrElse(
-                throw new IllegalArgumentException("config has no api section"))
-              new FixtureTransport(fixtures.map { case (k, v) =>
-                (api.baseUrl + api.endpoints.getOrElse(k, k)) -> v
-              })
-            case None => new HttpTransport
-          }
-          val res = ApiIngestion.run(spark, usersCfg, postsCfg, transport, target,
-            showDisplay = true)
-          println(s"[graft] users: ${res.users.rows} rows -> ${res.users.dataFile}")
-          println(s"[graft] posts(user=${res.targetUserId}): ${res.posts.rows} rows -> ${res.posts.dataFile}")
-          0
-        case other =>
-          System.err.println(s"unknown subcommand: $other"); usage(); 2
-      }
+      val job = parse(args)
+      val spark = newSession()
+      try job(spark) finally spark.stop()
+      0
     } catch {
+      case e: Usage =>
+        if (e.getMessage.nonEmpty) System.err.println(e.getMessage)
+        usage(); 2
       case e: TargetUserNotFound => System.err.println(s"[graft] ${e.getMessage}"); 2
       case e: SchemaError => System.err.println(s"[graft] schema error: ${e.getMessage}"); 3
       case e @ (_: java.io.FileNotFoundException | _: java.nio.file.NoSuchFileException) =>
         System.err.println(s"[graft] input not found: ${e.getMessage}"); 4
       case e @ (_: ApiError | _: org.apache.spark.sql.AnalysisException) =>
         System.err.println(s"[graft] ${e.getMessage}"); 1
-    } finally spark.stop()
-  }
+    }
 
-  /** `--fixture users=<path> posts=<path>` → endpoint-key → file map. */
-  private def parseFixtures(rest: Array[String]): Option[Map[String, String]] =
-    if (rest.isEmpty || rest(0) != "--fixture") None
-    else Some(rest.drop(1).flatMap { kv =>
-      kv.split("=", 2) match {
-        case Array(k, v) => Some(k -> v)
-        case _ => None
+  private val defaultSession: () => SparkSession = () => Sessions.create(
+    Map("spark.app.name" -> "graft-ingestion") ++ sys.env.get("SPARK_MASTER").map("spark.master" -> _))
+
+  /** Every check that needs no session: subcommand, arity, configs and
+    * `--fixture` tokens. Returns the run to do once a session exists. */
+  private def parse(args: Array[String]): SparkSession => Unit = args.toList match {
+    case "csv" :: cfgPath :: _ =>
+      val cfg = PipelineConfig.fromJsonFile(cfgPath)
+      spark => {
+        val res = CsvIngestion.run(spark, cfg, showPreview = true)
+        println(s"[graft] wrote ${res.rows} rows -> ${res.dataFile}")
+        println(s"[graft] manifest -> ${res.manifestFile}")
       }
-    }.toMap)
+    case "api" :: usersPath :: postsPath :: target :: rest =>
+      val usersCfg = PipelineConfig.fromJsonFile(usersPath)
+      val postsCfg = PipelineConfig.fromJsonFile(postsPath)
+      val transport = rest match {
+        case "--fixture" :: tokens =>
+          val api = usersCfg.api.getOrElse(
+            throw new IllegalArgumentException("config has no api section"))
+          new FixtureTransport(tokens.map { kv =>
+            kv.split("=", 2) match {
+              case Array(k, path) if api.endpoints.contains(k) => (api.baseUrl + api.endpoints(k)) -> path
+              case Array(k, _) => throw new Usage(
+                s"unknown fixture key '$k' (endpoints: ${api.endpoints.keys.toSeq.sorted.mkString(", ")})")
+              case _ => throw new Usage(s"fixture token '$kv' is not <endpoint>=<path>")
+            }
+          }.toMap)
+        case _ => new HttpTransport
+      }
+      spark => {
+        val res = ApiIngestion.run(spark, usersCfg, postsCfg, transport, target,
+          showDisplay = true)
+        println(s"[graft] users: ${res.users.rows} rows -> ${res.users.dataFile}")
+        println(s"[graft] posts(user=${res.targetUserId}): ${res.posts.rows} rows -> ${res.posts.dataFile}")
+      }
+    case ("csv" | "api") :: _ | Nil | _ :: Nil => throw new Usage("")
+    case other :: _ => throw new Usage(s"unknown subcommand: $other")
+  }
 
   private def usage(): Unit = System.err.println(
     """usage: graft.Main csv <config.json>

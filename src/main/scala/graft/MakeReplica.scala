@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Builds an N× workload replica of a testdata scale dir for scale
@@ -22,24 +22,7 @@ object MakeReplica {
       "usage: graft.MakeReplica <sfDir> <factor:int>=1> <outDir>")
     val Array(sfDir, factorS, outDir) = args.take(3)
     val factor = factorS.toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // Spark 4.1's unionOutputPartitioning (default on) lets UnionExec
-      // ADVERTISE its children's common hash partitioning while the
-      // union RDD physically has the SUM of their partitions — a
-      // downstream co-partitioned join then zips 32-vs-64 partition
-      // RDDs and fails (observed on q319 once the table loader hash-
-      // partitions embeddings); an aggregate could silently duplicate
-      // split keys. Off = the pre-4.1 Unknown partitioning, which
-      // re-inserts the exchange EnsureRequirements always added.
-      .config("spark.sql.unionOutputPartitioning", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.create(Sessions.harness - Sessions.SplitBytes - Sessions.OpenCost)
 
     def src(t: String): DataFrame = spark.read.parquet(s"$sfDir/$t.parquet")
     def out(t: String, df: DataFrame): Unit = {

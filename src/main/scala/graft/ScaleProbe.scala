@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.sink.TxLogTable
@@ -27,25 +26,7 @@ object ScaleProbe {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, factorS, workDir) = args.take(3)
     val factor = factorS.toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // Spark 4.1's unionOutputPartitioning (default on) lets UnionExec
-      // ADVERTISE its children's common hash partitioning while the
-      // union RDD physically has the SUM of their partitions — a
-      // downstream co-partitioned join then zips 32-vs-64 partition
-      // RDDs and fails (observed on q319 once the table loader hash-
-      // partitions embeddings); an aggregate could silently duplicate
-      // split keys. Off = the pre-4.1 Unknown partitioning, which
-      // re-inserts the exchange EnsureRequirements always added.
-      .config("spark.sql.unionOutputPartitioning", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.files.maxPartitionBytes", "16m")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.create(Sessions.harness - Sessions.OpenCost + (Sessions.SplitBytes -> "16m"))
 
     val orders = spark.read.parquet(s"$sfDir/orders.parquet")
     val nBase = orders.count()
@@ -63,7 +44,7 @@ object ScaleProbe {
 
     // ingest, date-clustered so band predicates prune files
     val (_, tIngest) = timed {
-      TxLogTable.append(replica.repartitionByRange(cpus.toInt * 2, col("od")), t)
+      TxLogTable.append(replica.repartitionByRange(Sessions.cpus.toInt * 2, col("od")), t)
     }
     results("ingest") = tIngest
     results("rows") = nBase.toDouble * factor

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -11,29 +10,7 @@ object Verify {
       case Array(a, b)    => (a, b, Seq.empty[String])
       case Array(a, b, f) => (a, b, f.split(",").toSeq)
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // Spark 4.1's unionOutputPartitioning (default on) lets UnionExec
-      // ADVERTISE its children's common hash partitioning while the
-      // union RDD physically has the SUM of their partitions — a
-      // downstream co-partitioned join then zips 32-vs-64 partition
-      // RDDs and fails (observed on q319 once the table loader hash-
-      // partitions embeddings); an aggregate could silently duplicate
-      // split keys. Off = the pre-4.1 Unknown partitioning, which
-      // re-inserts the exchange EnsureRequirements always added.
-      .config("spark.sql.unionOutputPartitioning", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true") // events.ts is TIMESTAMP(NANOS)
-      // sf0.x parquet is a single small file per table; the default
-      // 128m split size would leave every scan single-task. 1m splits
-      // emulate the many-block layout a real table has at scale.
-      .config("spark.sql.files.maxPartitionBytes", "1m")
-      .config("spark.sql.files.openCostInBytes", "65536")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.create()
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only.exists(name.startsWith) }

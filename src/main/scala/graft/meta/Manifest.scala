@@ -96,7 +96,6 @@ object Manifest {
       df: DataFrame,
       filePath: String,
       dataset: DatasetInfo,
-      withPreview: Boolean = true,
       extra: Map[String, String] = Map.empty,
       clock: java.time.Clock = java.time.Clock.systemDefaultZone()): Manifest = {
     val p = new Path(filePath)
@@ -117,7 +116,7 @@ object Manifest {
         dtypes = dtypes(df),
         rows = rows,
         nullCounts = nulls,
-        preview = if (withPreview) preview(df) else Nil),
+        preview = preview(df)),
       extra = extra)
   }
 

@@ -27,7 +27,7 @@ object Pinned {
     * expensive graph queries because their real join/aggregate
     * shapes sat behind `localCheckpoint()`. All query/operator pins
     * go through here; in audit mode ([[withAuditTap]], used by
-    * `graft.PlanAudit`) the PRE-pin physical plan is recorded before
+    * `graft.Dev`'s plan and audit) the PRE-pin physical plan is recorded before
     * the cut. Normal runs pay one null-check.
     */
   def pin(df: DataFrame): DataFrame = {
@@ -41,7 +41,7 @@ object Pinned {
   @volatile private var auditThread: Thread = null
 
   /** Run `body` with every [[pin]]'s pre-checkpoint plan streamed to
-    * `sink`. Audit-only (PlanAudit runs queries one at a time); the
+    * `sink`. Audit-only (`graft.Dev` runs queries one at a time); the
     * single-thread restriction is ENFORCED, not just documented: the
     * tap fires only for pins executed on the installing thread, so a
     * concurrent pin (e.g. a streaming query's foreachBatch in the

@@ -7,7 +7,6 @@ import graft.config.PipelineConfig
 import graft.meta.{DatasetInfo, Manifest}
 import graft.sink.BronzeWriter
 import graft.sources.{ApiSource, ApiTransport}
-import graft.validate.Validate
 
 /** End-to-end API ingestion (reference pipeline 1,
   * app/ingestao_api.py:133-244): fetch users → project+rename+clean →
@@ -56,25 +55,12 @@ object ApiIngestion {
     shape(raw, Seq("userId", "id", "title", "body"), cfg)
   }
 
-  /** Project the payload columns, rename per config, apply declared
-    * casts, and enforce both schema gates.
+  /** Project the payload columns present, then conform them. Payload
+    * columns are optional: no required-column gate applies here.
     */
   private def shape(raw: DataFrame, payloadCols: Seq[String], cfg: PipelineConfig): DataFrame = {
     val present = payloadCols.filter(raw.columns.contains)
-    val projected = raw.select(present.map(col).toIndexedSeq: _*)
-    val renamed = Casts.renameColumns(projected, cfg.schema.renameMap)
-    Validate.ensureRequiredColumns(renamed, cfg.schema.requiredColumns.filter(renamed.columns.contains))
-    val cast = Casts.applyCasts(
-      renamed,
-      integerFields = cfg.schema.integerFields,
-      stringFields = cfg.schema.stringFields,
-      floatFields = cfg.schema.floatFields)
-    Validate.checkDtypes(
-      cast,
-      integerFields = cfg.schema.integerFields,
-      stringFields = cfg.schema.stringFields,
-      floatFields = cfg.schema.floatFields)
-    cast
+    CsvIngestion.conform(raw.select(present.map(col).toIndexedSeq: _*), cfg, required = Nil)
   }
 
   /** Scalar lookup: first user whose `nome` equals the target

@@ -31,21 +31,21 @@ object CsvIngestion {
     */
   def prepare(spark: SparkSession, cfg: PipelineConfig): (DataFrame, Seq[String]) = {
     val csvCfg = cfg.csv.getOrElse(throw new IllegalArgumentException("config has no csv section"))
-    val raw = CsvSource.read(spark, csvCfg)
-    val renamed = Casts.renameColumns(raw, cfg.schema.renameMap)
-    Validate.ensureRequiredColumns(renamed, cfg.schema.requiredColumns)
-    val extras = Validate.undeclaredColumns(renamed, cfg.schema.declared)
-    val cast = Casts.applyCasts(
-      renamed,
-      integerFields = cfg.schema.integerFields,
-      stringFields = cfg.schema.stringFields,
-      floatFields = cfg.schema.floatFields)
-    Validate.checkDtypes(
-      cast,
-      integerFields = cfg.schema.integerFields,
-      stringFields = cfg.schema.stringFields,
-      floatFields = cfg.schema.floatFields)
-    (cast, extras)
+    val cast = conform(CsvSource.read(spark, csvCfg), cfg, cfg.schema.requiredColumns)
+    (cast, Validate.undeclaredColumns(cast, cfg.schema.declared))
+  }
+
+  /** The sequence both pipelines run on their raw frame: rename per
+    * config → `required` gate → declared casts → dtype gate. Casts keep
+    * every column name, so callers may inspect names on the result.
+    */
+  private[pipeline] def conform(raw: DataFrame, cfg: PipelineConfig, required: Seq[String]): DataFrame = {
+    val s = cfg.schema
+    val renamed = Casts.renameColumns(raw, s.renameMap)
+    Validate.ensureRequiredColumns(renamed, required)
+    val cast = Casts.applyCasts(renamed, s.integerFields, s.stringFields, s.floatFields)
+    Validate.checkDtypes(cast, s.integerFields, s.stringFields, s.floatFields)
+    cast
   }
 
   /** Preview projection + limit (reference app/ingestao_csv.py:80-88). */

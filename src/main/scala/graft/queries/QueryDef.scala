@@ -33,23 +33,11 @@ object QueryDef {
     // local-SSD tier; tmpfs is the single-node equivalent, and losing
     // scratch on restart IS the contract (every site re-creates via
     // [[scratch]]).
-    //
-    // Guards (round 16): SPARK_GRAFT_NO_SHM — the kill-switch
-    // SCALE.md advertises — gates this choice too, not just Bench's
-    // spark.local.dir; and tmpfs is only taken when its filestore
-    // reports a usable-space floor (4 GiB). Docker's default /dev/shm
-    // is 64 MiB — writable, but ENOSPC on the first ORC round-trip;
-    // the old /tmp fallback is the right answer there.
-    val shm = java.nio.file.Paths.get("/dev/shm")
-    def shmUsable: Boolean =
-      try java.nio.file.Files.getFileStore(shm).getUsableSpace >= (4L << 30)
-      catch { case _: Throwable => false }
-    val base =
-      if (!sys.env.contains("SPARK_GRAFT_NO_SHM") &&
-          java.nio.file.Files.isDirectory(shm) &&
-          java.nio.file.Files.isWritable(shm) && shmUsable)
-        java.nio.file.Files.createTempDirectory(shm, "graft_scratch")
-      else java.nio.file.Files.createTempDirectory("graft_scratch")
+    // The 4 GiB floor and the SPARK_GRAFT_NO_SHM kill-switch fall
+    // back to /tmp where tmpfs is small or unwanted.
+    val base = graft.Sessions.shm(4L << 30)
+      .fold(java.nio.file.Files.createTempDirectory("graft_scratch"))(
+        java.nio.file.Files.createTempDirectory(_, "graft_scratch"))
     Runtime.getRuntime.addShutdownHook(new Thread(() => deleteRecursively(base)))
     base
   }

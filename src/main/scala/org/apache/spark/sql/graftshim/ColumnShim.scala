@@ -75,8 +75,8 @@ object ColumnShim {
   }
 
   /** Drain the context's listener bus (private[spark]) — event
-    * delivery is async, so a listener-based counter (graft.Profile's
-    * jobs: mode) must flush before reading its totals.
+    * delivery is async, so a listener-based counter (graft.Dev's
+    * jobs command) must flush before reading its totals.
     */
   def drainListenerBus(spark: org.apache.spark.sql.SparkSession): Unit =
     spark.sparkContext.listenerBus.waitUntilEmpty()

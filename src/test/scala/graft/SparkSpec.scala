@@ -20,25 +20,13 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
 object SparkSpec {
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[2]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.session.timeZone", "UTC")
-      // Spark 4.1's unionOutputPartitioning (default on) lets UnionExec
-      // ADVERTISE its children's common hash partitioning while the
-      // union RDD physically has the SUM of their partitions — a
-      // downstream co-partitioned join then zips 32-vs-64 partition
-      // RDDs and fails (observed on q319 once the table loader hash-
-      // partitions embeddings); an aggregate could silently duplicate
-      // split keys. Off = the pre-4.1 Unknown partitioning, which
-      // re-inserts the exchange EnsureRequirements always added.
-      .config("spark.sql.unionOutputPartitioning", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = Sessions.create(Map(
+      "spark.master" -> "local[2]",
+      "spark.app.name" -> "graft-test",
+      "spark.sql.shuffle.partitions" -> "2",
+      "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+      "spark.sql.warehouse.dir" ->
+        java.nio.file.Files.createTempDirectory("graft-warehouse").toString))
     s.sparkContext.setLogLevel("ERROR")
     s
   }
