@@ -75,7 +75,7 @@ object Casts {
     val strs = stringFields.toSet
     val flts = floatFields.toSet
     val projected = df.columns.map { name =>
-      val c = col(name)
+      val c = literalCol(name)
       val cast =
         if (ints.contains(name)) toLongLenient(c)
         else if (strs.contains(name)) toCleanString(c)
@@ -85,6 +85,13 @@ object Casts {
     }
     df.select(projected.toIndexedSeq: _*)
   }
+
+  /** A reference to the column named exactly `name`. `col` parses its
+    * argument, so a CSV header such as `Pop. 4G` would resolve as a
+    * struct field `Pop` → ` 4G` and fail; a backtick-quoted name is
+    * taken literally.
+    */
+  def literalCol(name: String): Column = col("`" + name.replace("`", "``") + "`")
 
   /** Rename columns per mapping; unmatched keys are no-ops (pandas
     * `rename` semantics, reference app/ingestao_csv.py:19-20).

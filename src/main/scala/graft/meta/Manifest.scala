@@ -1,18 +1,21 @@
 package graft.meta
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.cast.Casts
 
 /** Governance manifest sidecar — the engine's dataset-stats surface.
   *
   * Mirrors the reference's three-section manifest (CoreInfo /
   * DatasetInfo / SchemaStats dataclasses, app/utils/metadata.py:52-81,
   * assembled by write_metadata_from_df at :85-150), re-designed for
-  * Spark: the row count and ALL per-column null counts are computed in
-  * ONE aggregate job (partial + final hash agg; a single pass over the
-  * table regardless of column count), not N jobs — this is what keeps
-  * manifest generation viable at 100 TB.
+  * Spark: the row count and ALL per-column null counts are one set of
+  * aggregate expressions ([[statsExprs]]), not N jobs. A landing
+  * observes them on the job that writes the bronze file, so the counts
+  * cost no extra pass and describe exactly the rows written;
+  * [[tableStats]] runs the same expressions as one aggregate over any
+  * frame. This is what keeps manifest generation viable at 100 TB.
   */
 final case class CoreInfo(
     fileName: String,
@@ -47,17 +50,29 @@ final case class Manifest(
 
 object Manifest {
 
-  /** Row count + per-column null counts in a single job
-    * (reference computes these separately: len(df) at
-    * app/utils/metadata.py:122, isna().sum() per column at :32-33).
+  /** Row count + per-column null counts as aggregate expressions, to
+    * run in one pass: as an aggregate ([[tableStats]]) or as an
+    * `Observation` riding another job (reference computes these
+    * separately: len(df) at app/utils/metadata.py:122, isna().sum()
+    * per column at :32-33). `count` keeps every value 0, never NULL,
+    * when no rows flow.
     */
+  def statsExprs(columns: Seq[String]): Seq[Column] =
+    count(lit(1)).as("rows") +: columns.zipWithIndex.map { case (c, i) =>
+      count(when(Casts.literalCol(c).isNull, 1)).as(s"nulls_$i")
+    }
+
+  /** Row count and null counts per column from the values of
+    * [[statsExprs]]`(columns)`, looked up by alias. */
+  def statsOf(columns: Seq[String], value: String => Any): (Long, Map[String, Long]) =
+    (value("rows").asInstanceOf[Long],
+      columns.zipWithIndex.map { case (c, i) => c -> value(s"nulls_$i").asInstanceOf[Long] }.toMap)
+
+  /** [[statsExprs]] as one aggregate over `df`. */
   def tableStats(df: DataFrame): (Long, Map[String, Long]) = {
-    val nullAggs = df.columns.map(c =>
-      sum(when(col(c).isNull, 1L).otherwise(0L)).as(s"__nulls_$c"))
-    val row = df.agg(count(lit(1)).as("__rows"), nullAggs.toIndexedSeq: _*).head()
-    val rows = row.getAs[Long]("__rows")
-    val nulls = df.columns.map(c => c -> row.getAs[Long](s"__nulls_$c")).toMap
-    (rows, nulls)
+    val exprs = statsExprs(df.columns.toIndexedSeq)
+    val row = df.agg(exprs.head, exprs.tail: _*).head()
+    statsOf(df.columns.toIndexedSeq, row.getAs[Any](_))
   }
 
   /** Dtype capture is metadata-only — no job
@@ -65,9 +80,12 @@ object Manifest {
   def dtypes(df: DataFrame): Map[String, String] =
     df.schema.fields.map(f => f.name -> f.dataType.simpleString).toMap
 
-  /** Head-N preview as JSON records (reference app/utils/metadata.py:36-38). */
+  /** Head-N preview as JSON records (reference app/utils/metadata.py:36-38).
+    * `head` plans a `CollectLimit`: one job, where `limit(n).collect()`
+    * adds a shuffle and a second job under adaptive execution.
+    */
   def preview(df: DataFrame, n: Int = 3): Seq[String] =
-    df.limit(n).toJSON.collect().toIndexedSeq
+    df.toJSON.head(n).toIndexedSeq
 
   /** Streaming MD5 over a file's bytes, 1 MiB chunks — constant memory
     * (reference _md5, app/utils/metadata.py:15-20) — via Hadoop FS so it
@@ -90,19 +108,22 @@ object Manifest {
     java.time.LocalDateTime.now(clock).truncatedTo(java.time.temporal.ChronoUnit.SECONDS)
       .format(java.time.format.DateTimeFormatter.ISO_LOCAL_DATE_TIME)
 
-  /** Assemble the full manifest for a written file + its DataFrame. */
+  /** Assemble the full manifest for a written file, its DataFrame and
+    * the row and null counts observed while it was written.
+    */
   def forWrittenFile(
       spark: SparkSession,
       df: DataFrame,
       filePath: String,
       dataset: DatasetInfo,
-      extra: Map[String, String] = Map.empty,
-      clock: java.time.Clock = java.time.Clock.systemDefaultZone()): Manifest = {
+      rows: Long,
+      nulls: Map[String, Long],
+      extra: Map[String, String],
+      clock: java.time.Clock): Manifest = {
     val p = new Path(filePath)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) throw new java.io.FileNotFoundException(filePath)
     val status = fs.getFileStatus(p)
-    val (rows, nulls) = tableStats(df)
     Manifest(
       core = CoreInfo(
         fileName = p.getName,

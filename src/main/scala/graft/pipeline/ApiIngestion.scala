@@ -2,10 +2,9 @@ package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StringType
 import graft.cast.Casts
 import graft.config.PipelineConfig
-import graft.meta.{DatasetInfo, Manifest}
-import graft.sink.BronzeWriter
 import graft.sources.{ApiSource, ApiTransport}
 
 /** End-to-end API ingestion (reference pipeline 1,
@@ -55,12 +54,16 @@ object ApiIngestion {
     shape(raw, Seq("userId", "id", "title", "body"), cfg)
   }
 
-  /** Project the payload columns present, then conform them. Payload
-    * columns are optional: no required-column gate applies here.
+  /** Project the payload columns, then conform them. A column the
+    * payload lacks becomes an all-null string column, as the
+    * reference's `pd.DataFrame(data, columns=[...])` does
+    * (app/ingestao_api.py:70,97), so an empty payload `[]` lands a
+    * header-only file. No required-column gate applies here.
     */
   private def shape(raw: DataFrame, payloadCols: Seq[String], cfg: PipelineConfig): DataFrame = {
-    val present = payloadCols.filter(raw.columns.contains)
-    CsvIngestion.conform(raw.select(present.map(col).toIndexedSeq: _*), cfg, required = Nil)
+    val cols = payloadCols.map(c =>
+      if (raw.columns.contains(c)) col(c) else lit(null).cast(StringType).as(c))
+    CsvIngestion.conform(raw.select(cols: _*), cfg, required = Nil)
   }
 
   /** Scalar lookup: first user whose `nome` equals the target
@@ -95,25 +98,12 @@ object ApiIngestion {
     }
 
     val partValue = Casts.todayYyyymmdd(clock)
-    def land(df: DataFrame, cfg: PipelineConfig, endpointKey: String,
-        extra: Map[String, String]): IngestionResult = {
-      val dataFile = BronzeWriter.write(spark, df, cfg.sink, partValue)
-      // manifest records the full source URL (reference passes
-      // endpoint=url into write_metadata_from_df, app/ingestao_api.py:205-215)
-      val endpoint = cfg.api.map(a => a.baseUrl + a.endpoints.getOrElse(endpointKey, endpointKey))
-      val info = DatasetInfo(
-        datasetId = cfg.datasetId,
-        origin = cfg.origin,
-        delimiter = ";",
-        encoding = "UTF-8",
-        partitionKey = cfg.sink.partitionKey,
-        partitionValue = partValue,
-        runId = runId,
-        producer = "graft",
-        endpoint = endpoint)
-      val m = Manifest.forWrittenFile(spark, df, dataFile, info, extra = extra, clock = clock)
-      IngestionResult(dataFile, Manifest.write(spark, m, dataFile), m.schemaStats.rows, Nil)
-    }
+    // manifest records the full source URL (reference passes
+    // endpoint=url into write_metadata_from_df, app/ingestao_api.py:205-215)
+    def land(df: DataFrame, cfg: PipelineConfig, endpointKey: String, extra: Map[String, String]) =
+      CsvIngestion.land(spark, df, cfg, partValue, runId, clock,
+        endpoint = cfg.api.map(a => a.baseUrl + a.endpoints.getOrElse(endpointKey, endpointKey)),
+        extra = extra)
     val usersRes = land(users, usersCfg, "users", Map.empty)
     val postsRes = land(posts, postsCfg, "posts", Map("user_id" -> userId.toString))
     ApiIngestionResult(usersRes, postsRes, userId)

@@ -1,7 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import graft.cast.Casts
 import graft.config.PipelineConfig
 import graft.meta.{DatasetInfo, Manifest}
@@ -15,8 +14,9 @@ import graft.validate.Validate
   * gate → preview → partitioned bronze write → manifest sidecar.
   *
   * Unlike the reference, every step up to the write is LAZY plan
-  * construction — one Spark job materializes the write and one
-  * aggregate job computes the manifest stats.
+  * construction: one Spark job reads the header, one writes the bronze
+  * file while observing the manifest's row and null counts, and one
+  * takes the manifest preview.
   */
 final case class IngestionResult(
     dataFile: String,
@@ -51,7 +51,7 @@ object CsvIngestion {
   /** Preview projection + limit (reference app/ingestao_csv.py:80-88). */
   def previewDf(df: DataFrame, cfg: PipelineConfig): DataFrame = {
     val cols = Validate.ensureProjectable(df, cfg.previewColumns)
-    df.select(cols.map(col).toIndexedSeq: _*).limit(cfg.previewLimit)
+    df.select(cols.map(Casts.literalCol).toIndexedSeq: _*).limit(cfg.previewLimit)
   }
 
   def run(
@@ -65,8 +65,31 @@ object CsvIngestion {
       System.err.println(s"[csv-ingestion] undeclared columns kept: ${extras.mkString(", ")}")
     if (showPreview && cfg.previewColumns.nonEmpty) previewDf(cleaned, cfg).show(truncate = false)
 
-    val partValue = Casts.todayYyyymmdd(clock)
-    val dataFile = BronzeWriter.write(spark, cleaned, cfg.sink, partValue)
+    land(spark, cleaned, cfg, Casts.todayYyyymmdd(clock), runId, clock).copy(undeclaredColumns = extras)
+  }
+
+  /** Land `df` as one bronze file plus its manifest sidecar: the steps
+    * both pipelines end with. The manifest's row and null counts ride
+    * the write job as an observation, so they describe exactly the rows
+    * written and cost no second pass over the source.
+    */
+  private[pipeline] def land(
+      spark: SparkSession,
+      df: DataFrame,
+      cfg: PipelineConfig,
+      partValue: String,
+      runId: String,
+      clock: java.time.Clock,
+      endpoint: Option[String] = None,
+      extra: Map[String, String] = Map.empty): IngestionResult = {
+    val columns = df.columns.toIndexedSeq
+    val exprs = Manifest.statsExprs(columns)
+    // Retry-safe: the observation sits in the write job's result stage,
+    // and Spark applies a result stage's accumulator updates once per
+    // partition, however many attempts a task took.
+    val stats = Observation()
+    val dataFile = BronzeWriter.write(spark, df.observe(stats, exprs.head, exprs.tail: _*), cfg.sink, partValue)
+    val (rows, nulls) = Manifest.statsOf(columns, stats.get)
     val info = DatasetInfo(
       datasetId = cfg.datasetId,
       origin = cfg.origin,
@@ -75,9 +98,9 @@ object CsvIngestion {
       partitionKey = cfg.sink.partitionKey,
       partitionValue = partValue,
       runId = runId,
-      producer = "graft")
-    val manifest = Manifest.forWrittenFile(spark, cleaned, dataFile, info, clock = clock)
-    val manifestFile = Manifest.write(spark, manifest, dataFile)
-    IngestionResult(dataFile, manifestFile, manifest.schemaStats.rows, extras)
+      producer = "graft",
+      endpoint = endpoint)
+    val manifest = Manifest.forWrittenFile(spark, df, dataFile, info, rows, nulls, extra, clock)
+    IngestionResult(dataFile, Manifest.write(spark, manifest, dataFile), rows, Nil)
   }
 }

@@ -61,7 +61,8 @@ object BronzeWriter {
     require(parts.length == 1, s"expected exactly one part file in $dir, found ${parts.length}")
     val target = new Path(d, fileName)
     if (fs.exists(target)) fs.delete(target, false)
-    fs.rename(parts.head.getPath, target)
+    if (!fs.rename(parts.head.getPath, target))
+      throw new java.io.IOException(s"could not rename ${parts.head.getPath} to $target")
     // drop Spark's _SUCCESS marker and crc sidecars for a clean bronze dir
     fs.listStatus(d).foreach { s =>
       val n = s.getPath.getName

@@ -16,6 +16,50 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   def causeMessages(t: Throwable): Seq[String] =
     Option(t).toSeq.flatMap(e =>
       Option(e.getMessage).toSeq ++ causeMessages(e.getCause))
+
+  /** `f`'s result and the number of Spark jobs it submitted. Jobs are
+    * matched by a local property set on this thread, so other threads'
+    * jobs do not count; the listener bus delivers events on its own
+    * thread, so it is drained before the count is read.
+    */
+  def countJobs[T](f: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val key = "graft.spec.jobs"
+    val tag = java.util.UUID.randomUUID().toString
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(j.properties).exists(_.getProperty(key) == tag)) jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    sc.setLocalProperty(key, tag)
+    try {
+      val result = f
+      org.apache.spark.sql.graftshim.ColumnShim.drainListenerBus(spark)
+      (result, jobs.get)
+    } finally {
+      sc.setLocalProperty(key, null)
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  /** A bronze file's manifest sidecar, parsed. */
+  def readManifest(dataFile: String): com.fasterxml.jackson.databind.JsonNode =
+    new com.fasterxml.jackson.databind.ObjectMapper().readTree(
+      new java.io.File(new org.apache.hadoop.fs.Path(dataFile + ".manifest.json").toUri.getPath))
+
+  /** Assert the manifest's `linhas`/`nulos` equal `Manifest.tableStats`
+    * of the bronze file read back (all columns as strings; the writer
+    * lands NULL as an empty field, which reads back as NULL).
+    */
+  def assertManifestCountsMatchBronze(dataFile: String): Unit = {
+    import scala.jdk.CollectionConverters._
+    val stats = readManifest(dataFile).get("schema_stats")
+    val bronze = graft.sources.CsvSource.read(spark, graft.config.CsvReadConfig(dataFile))
+    val (rows, nulls) = graft.meta.Manifest.tableStats(bronze)
+    assert(stats.get("linhas").asLong() === rows)
+    assert(stats.get("nulos").properties().asScala.map(e => e.getKey -> e.getValue.asLong()).toMap === nulls)
+  }
 }
 
 object SparkSpec {

@@ -83,6 +83,44 @@ class ApiIngestionSpec extends SparkSpec {
     assert(postsManifest.contains("\"Int64\"")) // user_id dtype, pandas name
   }
 
+  test("one run takes 7 jobs (2 payload reads, lookup, 2 x write + preview); manifest counts match") {
+    val tmp = Files.createTempDirectory("graft-api-jobs")
+    val (uf, pf) = writeFixtures(tmp)
+    val transport = new FixtureTransport(Map(
+      "https://api.test/users" -> uf, "https://api.test/posts" -> pf))
+    val (usersCfg, postsCfg) = cfgs(tmp.resolve("bronze").toString)
+    val (res, jobs) = countJobs(ApiIngestion.run(spark, usersCfg, postsCfg, transport,
+      targetName = "Kurtis Weissnat", runId = "run-jobs", clock = clock))
+    assert(jobs === 7)
+    assertManifestCountsMatchBronze(res.users.dataFile)
+    assertManifestCountsMatchBronze(res.posts.dataFile)
+  }
+
+  test("a target user with no posts lands a header-only posts file, as the reference does") {
+    val tmp = Files.createTempDirectory("graft-api-noposts")
+    val (uf, _) = writeFixtures(tmp)
+    val pf = tmp.resolve("other-posts.json")
+    Files.write(pf, """[{"userId": 1, "id": 1, "title": "other user", "body": "x"}]""".getBytes("UTF-8"))
+    val transport = new FixtureTransport(Map(
+      "https://api.test/users" -> uf, "https://api.test/posts" -> pf.toString))
+    val (usersCfg, postsCfg) = cfgs(tmp.resolve("bronze").toString)
+
+    val res = ApiIngestion.run(spark, usersCfg, postsCfg, transport,
+      targetName = "Kurtis Weissnat", runId = "run-noposts", clock = clock)
+
+    assert(res.posts.rows === 0L)
+    val bronze = new String(Files.readAllBytes(java.nio.file.Paths.get(
+      new org.apache.hadoop.fs.Path(res.posts.dataFile).toUri.getPath)), "UTF-8")
+    assert(bronze === "user_id;post_id;titulo;conteudo\n")
+    val stats = readManifest(res.posts.dataFile).get("schema_stats")
+    assert(stats.get("linhas").asLong() === 0L)
+    assert(stats.get("dtypes").get("post_id").asText() === "Int64")
+    assert(stats.get("dtypes").get("titulo").asText() === "object")
+    Seq("user_id", "post_id", "titulo", "conteudo").foreach(c =>
+      assert(stats.get("nulos").get(c).asLong() === 0L, c))
+    assert(stats.get("preview").isNull)
+  }
+
   test("missing target user raises TargetUserNotFound") {
     val tmp = Files.createTempDirectory("graft-api-miss")
     val (uf, pf) = writeFixtures(tmp)

@@ -92,12 +92,46 @@ class CsvIngestionSpec extends SparkSpec {
   test("undeclared extra columns are kept and reported") {
     val tmp = Files.createTempDirectory("graft-csv-extra")
     val f = tmp.resolve("extra.csv")
+    // a dot in a header is part of the name, not a struct path
     Files.write(f,
-      "Ano;Código Município;Município;Densidade;Surprise\n2023;1;X;1,0;zzz\n"
+      "Ano;Código Município;Município;Densidade;Surprise;Pop. 4G\n2023;1;X;1,0;zzz;\n"
         .getBytes("UTF-8"))
     val c = cfg(f.toString, tmp.resolve("bronze").toString)
     val (df, extras) = CsvIngestion.prepare(spark, c)
-    assert(extras === Seq("Surprise"))
+    assert(extras === Seq("Surprise", "Pop. 4G"))
     assert(df.columns.contains("Surprise"))
+    assert(CsvIngestion.previewDf(df, c.copy(previewColumns = Seq("Pop. 4G"))).columns === Array("Pop. 4G"))
+
+    val res = CsvIngestion.run(spark, c, runId = "run-extra", clock = clock)
+    assert(res.undeclaredColumns === Seq("Surprise", "Pop. 4G"))
+    val stats = readManifest(res.dataFile).get("schema_stats")
+    assert(stats.get("nulos").get("Pop. 4G").asLong() === 1L)
+    assert(stats.get("preview").get(0).get("Surprise").asText() === "zzz")
+  }
+
+  test("one run takes 3 jobs (header, write, preview); manifest counts match the bronze file") {
+    val tmp = Files.createTempDirectory("graft-csv-jobs")
+    val c = cfg(writeFixture(tmp), tmp.resolve("bronze").toString)
+    val (res, jobs) = countJobs(CsvIngestion.run(spark, c, runId = "run-jobs", clock = clock))
+    assert(jobs === 3)
+    assertManifestCountsMatchBronze(res.dataFile)
+  }
+
+  test("a header-only CSV lands a 0-row file with zero counts and no preview") {
+    val tmp = Files.createTempDirectory("graft-csv-empty")
+    val f = tmp.resolve("empty.csv")
+    Files.write(f, "Ano;Código Município;Município;Densidade\n".getBytes("UTF-8"))
+    val res = CsvIngestion.run(spark, cfg(f.toString, tmp.resolve("bronze").toString),
+      runId = "run-empty", clock = clock)
+
+    assert(res.rows === 0L)
+    val bronze = new String(Files.readAllBytes(java.nio.file.Paths.get(
+      new org.apache.hadoop.fs.Path(res.dataFile).toUri.getPath)), "UTF-8")
+    assert(bronze === "ano;codigo_municipio;municipio;densidade\n")
+    val stats = readManifest(res.dataFile).get("schema_stats")
+    assert(stats.get("linhas").asLong() === 0L)
+    Seq("ano", "codigo_municipio", "municipio", "densidade").foreach(col =>
+      assert(stats.get("nulos").get(col).asLong() === 0L, col))
+    assert(stats.get("preview").isNull)
   }
 }

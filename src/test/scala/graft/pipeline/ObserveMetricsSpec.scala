@@ -8,8 +8,8 @@ import org.apache.spark.sql.functions._
   * counts, null counts, and domain violations are collected DURING
   * the one planned pass over the data — no second scan, no collect.
   * This is how an ingestion job reports manifest-style stats at
-  * 100 TB without doubling its I/O (the Manifest sidecar covers the
-  * governance artifact; observe() covers the zero-cost live gauge).
+  * 100 TB without doubling its I/O; the pipelines' landing step takes
+  * the manifest's row and null counts this way.
   */
 class ObserveMetricsSpec extends SparkSpec {
   import spark.implicits._

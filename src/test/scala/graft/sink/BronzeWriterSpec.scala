@@ -33,10 +33,30 @@ class BronzeWriterSpec extends SparkSpec {
     assert(back.columns.toSet === Set("id", "v"))
   }
 
+  test("a refused rename raises an IOException naming both paths") {
+    spark.sparkContext.hadoopConfiguration.set("fs.norename.impl", classOf[RefusingRenameFs].getName)
+    val base = Files.createTempDirectory("graft-bw-rename").toString
+    val e = intercept[java.io.IOException] {
+      BronzeWriter.write(spark, df3, SinkConfig(s"norename://$base", "t4", "refused.txt"), "20251020")
+    }
+    assert(e.getMessage.contains("/t4/anomesdia=20251020/part-"))
+    assert(e.getMessage.contains("/t4/anomesdia=20251020/refused.txt"))
+  }
+
   test("unsupported format raises") {
     intercept[IllegalArgumentException] {
       BronzeWriter.write(spark, df3,
         SinkConfig("/tmp/x", "t3", "f", format = "avro"), "20251020")
     }
   }
+}
+
+/** The local file system under the `norename` scheme, except that a
+  * rename onto a file named `refused.txt` reports failure, as some
+  * stores do instead of throwing.
+  */
+class RefusingRenameFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("norename:///")
+  override def rename(src: org.apache.hadoop.fs.Path, dst: org.apache.hadoop.fs.Path): Boolean =
+    dst.getName != "refused.txt" && super.rename(src, dst)
 }
