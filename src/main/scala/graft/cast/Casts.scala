@@ -14,6 +14,10 @@ import org.apache.spark.sql.types._
   * All casts are *permissive*: unparseable input yields NULL (the
   * reference's `errors="coerce"` behavior), which under Spark 4's
   * default ANSI mode requires `try_cast` rather than `cast`.
+  *
+  * No cast evaluates a regular expression per row: the string kernels
+  * are `translate`, `btrim` and prefix/suffix tests, each one scan of
+  * the value.
   */
 object Casts {
 
@@ -34,24 +38,41 @@ object Casts {
     when(floor(d) === d, d.try_cast(LongType))
   }
 
-  /** Trim + strip one layer of surrounding double quotes.
-    * Reference `to_str` (app/utils/casting.py:9-10). NULL stays NULL
+  /** The characters Python's `str.isspace()` accepts, which pandas'
+    * `str.strip()` removes from both ends of a value.
+    */
+  private val PythonWhitespace: String =
+    "\t\n\u000b\f\r\u001c\u001d\u001e\u001f \u0085\u00a0\u1680" +
+      "\u2000\u2001\u2002\u2003\u2004\u2005\u2006\u2007\u2008\u2009\u200a" +
+      "\u2028\u2029\u202f\u205f\u3000"
+
+  /** Strip whitespace, then one leading and one trailing double quote.
+    * Reference `to_str` (app/utils/casting.py:9-10):
+    * `re.sub(r'^"|"$', '', s.strip())`. Once both ends are stripped of
+    * [[PythonWhitespace]], the pattern can only match the first and
+    * the last character, so dropping a leading `"` and then a trailing
+    * `"` of what is left is the same function. NULL stays NULL
     * (divergence from pandas' astype(str) which renders "nan"; see
     * SURVEY.md §7.4 — golden data has no nulls in string fields).
     */
-  def toCleanString(c: Column): Column =
-    regexp_replace(trim(c.cast(StringType)), "^\"|\"$", "")
+  def toCleanString(c: Column): Column = {
+    val stripped = btrim(c.cast(StringType), lit(PythonWhitespace))
+    val unlead = when(stripped.startsWith("\""), stripped.substr(lit(2), length(stripped)))
+      .otherwise(stripped)
+    when(unlead.endsWith("\""), unlead.substr(lit(1), length(unlead) - 1)).otherwise(unlead)
+  }
 
   /** Brazilian-locale numeric string → nullable DOUBLE.
     *
     * Reference `to_float_pt` (app/utils/casting.py:13-24): remove `.`
-    * thousands separators FIRST, then swap decimal `,` → `.`, then
-    * coerce; unparseable → NULL. Order matters: "1.234,56" → "1234,56"
-    * → "1234.56" → 1234.56.
+    * thousands separators, swap decimal `,` → `.`, then coerce;
+    * unparseable → NULL. "1.234,56" → "1234.56" → 1234.56. One
+    * `translate` does both edits: it maps each input character once,
+    * deleting every `.` and turning every `,` into `.`, which is what
+    * the reference's two passes produce.
     */
   def toDoublePt(c: Column): Column =
-    regexp_replace(regexp_replace(c.cast(StringType), "\\.", ""), ",", ".")
-      .try_cast(DoubleType)
+    translate(c.cast(StringType), ",.", ".").try_cast(DoubleType)
 
   /** Already-numeric columns pass through `to_float_pt` unchanged in the
     * reference (app/utils/casting.py:14-16); callers on typed columns

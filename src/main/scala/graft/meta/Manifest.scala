@@ -4,6 +4,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.cast.Casts
+import graft.sink.BronzeWriter
 
 /** Governance manifest sidecar — the engine's dataset-stats surface.
   *
@@ -89,11 +90,12 @@ object Manifest {
 
   /** Streaming MD5 over a file's bytes, 1 MiB chunks — constant memory
     * (reference _md5, app/utils/metadata.py:15-20) — via Hadoop FS so it
-    * works against any supported filesystem, not just local disk.
+    * works against any supported filesystem, not just local disk. The
+    * raw file system reads the file's bytes only, not a checksum sidecar.
     */
   def md5OfFile(spark: SparkSession, path: String): String = {
     val p = new Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = BronzeWriter.rawFileSystem(spark, p)
     val digest = java.security.MessageDigest.getInstance("MD5")
     val in = fs.open(p)
     try {
@@ -187,11 +189,11 @@ object Manifest {
   }
 
   /** Serialize and write `<filePath>.manifest.json` next to the data
-    * (reference app/utils/metadata.py:147-150).
+    * (reference app/utils/metadata.py:147-150), with no checksum sidecar.
     */
   def write(spark: SparkSession, m: Manifest, filePath: String): String = {
     val target = new Path(filePath + ".manifest.json")
-    val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = BronzeWriter.rawFileSystem(spark, target)
     val out = fs.create(target, true)
     try out.write(toJson(m).getBytes("UTF-8")) finally out.close()
     target.toString

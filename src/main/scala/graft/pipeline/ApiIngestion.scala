@@ -1,5 +1,7 @@
 package graft.pipeline
 
+import java.util.concurrent.{ExecutionException, FutureTask}
+import scala.util.{Failure, Success, Try}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StringType
@@ -18,6 +20,15 @@ import graft.sources.{ApiSource, ApiTransport}
   * the user_id is resolved on the driver (one `head()` on a tiny
   * frame) and pushed into the source request — the same shape as
   * DataSource V2 filter pushdown.
+  *
+  * Both frames are fetched, validated and looked up before anything
+  * lands. The two landings (bronze write, manifest) then run at the
+  * same time, users on its own thread and posts on the caller's, and
+  * the run waits for both. If the users landing fails, its exception
+  * is rethrown with any posts failure attached as suppressed;
+  * otherwise a posts failure is rethrown. Unlike a one-after-the-other
+  * run, the posts file can therefore land although the users landing
+  * failed.
   */
 final case class ApiIngestionResult(
     users: IngestionResult,
@@ -104,8 +115,18 @@ object ApiIngestion {
       CsvIngestion.land(spark, df, cfg, partValue, runId, clock,
         endpoint = cfg.api.map(a => a.baseUrl + a.endpoints.getOrElse(endpointKey, endpointKey)),
         extra = extra)
-    val usersRes = land(users, usersCfg, "users", Map.empty)
-    val postsRes = land(posts, postsCfg, "posts", Map("user_id" -> userId.toString))
-    ApiIngestionResult(usersRes, postsRes, userId)
+    // The two landings share no output, so users lands on a fresh thread
+    // while posts lands on this one. A fresh thread inherits this one's
+    // SparkContext local properties (job group, scheduler pool, tags);
+    // a pooled thread would keep those of whoever created it.
+    val usersLanding = new FutureTask(() => land(users, usersCfg, "users", Map.empty))
+    new Thread(usersLanding, "graft-users-landing").start()
+    val postsRes = Try(land(posts, postsCfg, "posts", Map("user_id" -> userId.toString)))
+    val usersRes = Try(usersLanding.get()).recoverWith { case e: ExecutionException => Failure(e.getCause) }
+    (usersRes, postsRes) match {
+      case (Success(u), Success(p)) => ApiIngestionResult(u, p, userId)
+      case (Failure(u), p) => p.failed.foreach(u.addSuppressed); throw u
+      case (_, Failure(p)) => throw p
+    }
   }
 }

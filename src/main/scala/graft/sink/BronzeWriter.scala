@@ -1,6 +1,6 @@
 package graft.sink
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{ChecksumFileSystem, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.config.SinkConfig
@@ -56,7 +56,7 @@ object BronzeWriter {
     */
   private def renameSinglePart(spark: SparkSession, dir: String, fileName: String): String = {
     val d = new Path(dir)
-    val fs = d.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = rawFileSystem(spark, d)
     val parts = fs.listStatus(d).filter(s => s.getPath.getName.startsWith("part-"))
     require(parts.length == 1, s"expected exactly one part file in $dir, found ${parts.length}")
     val target = new Path(d, fileName)
@@ -70,4 +70,18 @@ object BronzeWriter {
     }
     target.toString
   }
+
+  /** `path`'s file system without a checksum layer. The local file
+    * system is a `ChecksumFileSystem`: it writes a hidden `.<name>.crc`
+    * beside each file it creates, hides those from `listStatus`, and
+    * reads them along with the file on `open`. A bronze directory holds
+    * only the data file and its manifest, so the landing steps after
+    * the Spark write go through the raw file system. The checksum
+    * instance is cached and shared, so it is not reconfigured instead.
+    */
+  private[graft] def rawFileSystem(spark: SparkSession, path: Path): FileSystem =
+    path.getFileSystem(spark.sparkContext.hadoopConfiguration) match {
+      case c: ChecksumFileSystem => c.getRawFileSystem
+      case fs => fs
+    }
 }

@@ -23,6 +23,20 @@ class CastPropertiesSpec extends SparkSpec {
     out.foreach(r => assert(r.getDouble(0) === r.getDouble(1), r))
   }
 
+  test("toDoublePt equals the reference's two passes (drop '.', then ',' -> '.') on random strings") {
+    val draw = new scala.util.Random(7)
+    val alphabet = "0123456789.,-+e \u00e9\u20ac\u00a0"
+    val strings = Seq.fill(2000) {
+      if (draw.nextInt(50) == 0) null
+      else Seq.fill(draw.nextInt(12))(alphabet(draw.nextInt(alphabet.length))).mkString
+    }
+    val twoPasses = regexp_replace(regexp_replace(col("s"), "\\.", ""), ",", ".").try_cast("double")
+    val out = strings.toDF("s").select(col("s"), Casts.toDoublePt(col("s")), twoPasses).collect()
+    assert(out.count(_.isNullAt(0)) > 0)
+    assert(out.count(!_.isNullAt(2)) > 100) // enough parseable values to compare
+    out.foreach(r => assert(r.get(1) === r.get(2), r))
+  }
+
   test("toLongLenient parses any long's toString, with or without .0") {
     val longs = Seq.fill(200)(rnd.nextLong() % 1000000000L)
     val out = longs.toDF("v")

@@ -42,6 +42,27 @@ class CastsSpec extends SparkSpec {
     assert(one(Casts.toCleanString(lit("\"a \"b\" c\""))) === "a \"b\" c")
   }
 
+  test("toCleanString matches the reference's re.sub(r'^\"|\"$', '', s.strip())") {
+    // expected values computed with the reference expression in Python
+    val table = Seq(
+      "\"a\"\n" -> "a",
+      "\"a\" \t" -> "a",
+      "\u00a0\"x\"\u3000" -> "x",
+      "\"" -> "",
+      "\"\"" -> "",
+      "\"\"a\"\"" -> "\"a\"",
+      "a\"\r" -> "a")
+    val out = table.map(_._1).toDF("s").select(Casts.toCleanString(col("s"))).as[String].collect()
+    assert(out.toSeq === table.map(_._2))
+  }
+
+  test("the cast projection evaluates no regular expression") {
+    val df = spark.range(3).select(Seq("i", "s", "f").map(n => col("id").cast("string").as(n)): _*)
+    val plan = Casts.applyCasts(df, Seq("i"), Seq("s"), Seq("f")).queryExecution.optimizedPlan
+    assert(!plan.exists(_.expressions.exists(_.exists(
+      _.isInstanceOf[org.apache.spark.sql.catalyst.expressions.RegExpReplace]))), plan)
+  }
+
   test("toDoublePt parses Brazilian decimal comma") {
     assert(one(Casts.toDoublePt(lit("29,45"))) === 29.45)
   }

@@ -27,7 +27,10 @@ class ApiIngestionSpec extends SparkSpec {
     (uf.toString, pf.toString)
   }
 
-  private def cfgs(baseDir: String): (PipelineConfig, PipelineConfig) = {
+  private def cfgs(
+      baseDir: String,
+      usersFormat: String = "csv",
+      postsFormat: String = "csv"): (PipelineConfig, PipelineConfig) = {
     val users = PipelineConfig.fromJson(
       s"""{
          | "dataset_id": "tb_test_users", "origin": "api-fixture",
@@ -38,7 +41,8 @@ class ApiIngestionSpec extends SparkSpec {
          |   "required_columns": ["user_id", "nome", "usuario", "email"],
          |   "integer_fields": ["user_id"],
          |   "string_fields": ["nome", "usuario", "email"]},
-         | "sink": {"base_dir": "$baseDir", "table": "tb_test_users", "file_name": "users.txt"}
+         | "sink": {"base_dir": "$baseDir", "table": "tb_test_users", "file_name": "users.txt",
+         |          "format": "$usersFormat"}
          |}""".stripMargin)
     val posts = PipelineConfig.fromJson(
       s"""{
@@ -50,7 +54,8 @@ class ApiIngestionSpec extends SparkSpec {
          |   "required_columns": ["user_id", "post_id", "titulo", "conteudo"],
          |   "integer_fields": ["user_id", "post_id"],
          |   "string_fields": ["titulo", "conteudo"]},
-         | "sink": {"base_dir": "$baseDir", "table": "tb_test_posts", "file_name": "posts.txt"}
+         | "sink": {"base_dir": "$baseDir", "table": "tb_test_posts", "file_name": "posts.txt",
+         |          "format": "$postsFormat"}
          |}""".stripMargin)
     (users, posts)
   }
@@ -94,6 +99,49 @@ class ApiIngestionSpec extends SparkSpec {
     assert(jobs === 7)
     assertManifestCountsMatchBronze(res.users.dataFile)
     assertManifestCountsMatchBronze(res.posts.dataFile)
+  }
+
+  private def landed(bronze: String, table: String, file: String): Boolean =
+    Files.exists(java.nio.file.Paths.get(bronze, table, "anomesdia=20251020", file))
+
+  test("the landings run concurrently: a users failure is rethrown, posts still lands") {
+    val tmp = Files.createTempDirectory("graft-api-users-fail")
+    val (uf, pf) = writeFixtures(tmp)
+    val transport = new FixtureTransport(Map(
+      "https://api.test/users" -> uf, "https://api.test/posts" -> pf))
+    val bronze = tmp.resolve("bronze").toString
+    val (usersCfg, postsCfg) = cfgs(bronze, usersFormat = "bogus")
+    val e = intercept[IllegalArgumentException] {
+      ApiIngestion.run(spark, usersCfg, postsCfg, transport, targetName = "Kurtis Weissnat", clock = clock)
+    }
+    assert(e.getMessage === "unsupported bronze format: bogus")
+    assert(e.getSuppressed.isEmpty)
+    assert(landed(bronze, "tb_test_posts", "posts.txt"))
+    assert(landed(bronze, "tb_test_posts", "posts.txt.manifest.json"))
+    assert(!landed(bronze, "tb_test_users", "users.txt"))
+
+    // both fail: the users error wins and carries the posts error
+    val (bothUsers, bothPosts) = cfgs(bronze, usersFormat = "bogus", postsFormat = "bogus-posts")
+    val both = intercept[IllegalArgumentException] {
+      ApiIngestion.run(spark, bothUsers, bothPosts, transport, targetName = "Kurtis Weissnat", clock = clock)
+    }
+    assert(both.getMessage === "unsupported bronze format: bogus")
+    assert(both.getSuppressed.map(_.getMessage).toSeq === Seq("unsupported bronze format: bogus-posts"))
+  }
+
+  test("a posts landing failure is rethrown, and users still lands") {
+    val tmp = Files.createTempDirectory("graft-api-posts-fail")
+    val (uf, pf) = writeFixtures(tmp)
+    val transport = new FixtureTransport(Map(
+      "https://api.test/users" -> uf, "https://api.test/posts" -> pf))
+    val bronze = tmp.resolve("bronze").toString
+    val (usersCfg, postsCfg) = cfgs(bronze, postsFormat = "bogus")
+    val e = intercept[IllegalArgumentException] {
+      ApiIngestion.run(spark, usersCfg, postsCfg, transport, targetName = "Kurtis Weissnat", clock = clock)
+    }
+    assert(e.getMessage === "unsupported bronze format: bogus")
+    assert(landed(bronze, "tb_test_users", "users.txt"))
+    assert(landed(bronze, "tb_test_users", "users.txt.manifest.json"))
   }
 
   test("a target user with no posts lands a header-only posts file, as the reference does") {

@@ -58,6 +58,12 @@ class CsvIngestionSpec extends SparkSpec {
     assert(res.dataFile.contains("tb_test_municipios/anomesdia=20251020/munic.txt"))
     assert(new java.io.File(new java.net.URI(res.manifestFile).getPath).exists
       || new java.io.File(res.manifestFile).exists)
+    // the partition directory holds the data file and its manifest only:
+    // no _SUCCESS marker, no hidden .crc checksum sidecars
+    val partDir = java.nio.file.Paths.get(new org.apache.hadoop.fs.Path(res.dataFile).toUri.getPath).getParent
+    val names = scala.util.Using.resource(Files.list(partDir))(
+      _.toArray.map(_.asInstanceOf[java.nio.file.Path].getFileName.toString).toSet)
+    assert(names === Set("munic.txt", "munic.txt.manifest.json"))
 
     val (df, extras) = CsvIngestion.prepare(spark, cfg(input, bronze))
     assert(extras.isEmpty)
