@@ -1,8 +1,9 @@
 package graft.meta
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.IngestShim
 import graft.cast.Casts
 import graft.sink.BronzeWriter
 
@@ -11,12 +12,13 @@ import graft.sink.BronzeWriter
   * Mirrors the reference's three-section manifest (CoreInfo /
   * DatasetInfo / SchemaStats dataclasses, app/utils/metadata.py:52-81,
   * assembled by write_metadata_from_df at :85-150), re-designed for
-  * Spark: the row count and ALL per-column null counts are one set of
-  * aggregate expressions ([[statsExprs]]), not N jobs. A landing
-  * observes them on the job that writes the bronze file, so the counts
-  * cost no extra pass and describe exactly the rows written;
-  * [[tableStats]] runs the same expressions as one aggregate over any
-  * frame. This is what keeps manifest generation viable at 100 TB.
+  * Spark: the row count, ALL per-column null counts and the head-N
+  * preview are aggregates observed on the job that writes the bronze
+  * file ([[observed]]), not N jobs. They cost no extra pass and
+  * describe exactly the rows written. [[tableStats]] runs the count
+  * expressions as one aggregate over any frame, and [[preview]] takes
+  * the preview as its own job; the landings use neither. This is what
+  * keeps manifest generation viable at 100 TB.
   */
 final case class CoreInfo(
     fileName: String,
@@ -63,6 +65,31 @@ object Manifest {
       count(when(Casts.literalCol(c).isNull, 1)).as(s"nulls_$i")
     }
 
+  /** `df`, unchanged, with [[statsExprs]] and a first-`n` preview
+    * observed on `obs` by the job that runs it. The preview keeps the
+    * `n` rows with the smallest `monotonically_increasing_id`, that is
+    * by partition index and then position in the partition: the rows
+    * [[preview]] returns, rendered the same way, and only those rows
+    * are rendered. The id is taken in a projection below the
+    * observation, where it sees the partition index of the scan; a
+    * coalesce above it may run several partitions in one task.
+    * [[statsOf]] and [[previewOf]] read the values.
+    */
+  def observed(df: DataFrame, obs: Observation, n: Int = 3): DataFrame = {
+    val columns = df.columns.toIndexedSeq
+    val cols = columns.map(Casts.literalCol)
+    val key = Iterator.iterate("_preview_key")(_ + "_").find(k => !columns.exists(_.equalsIgnoreCase(k))).get
+    val exprs = statsExprs(columns) :+
+      IngestShim.firstRowsJson(df.sparkSession, col(key), struct(cols: _*), n).as("preview")
+    df.withColumn(key, monotonically_increasing_id())
+      .observe(obs, exprs.head, exprs.tail: _*)
+      .select(cols: _*)
+  }
+
+  /** The preview of an [[observed]] frame, from its observed values. */
+  def previewOf(value: String => Any): Seq[String] =
+    value("preview").asInstanceOf[scala.collection.Seq[String]].toIndexedSeq
+
   /** Row count and null counts per column from the values of
     * [[statsExprs]]`(columns)`, looked up by alias. */
   def statsOf(columns: Seq[String], value: String => Any): (Long, Map[String, Long]) =
@@ -83,7 +110,9 @@ object Manifest {
 
   /** Head-N preview as JSON records (reference app/utils/metadata.py:36-38).
     * `head` plans a `CollectLimit`: one job, where `limit(n).collect()`
-    * adds a shuffle and a second job under adaptive execution.
+    * adds a shuffle and a second job under adaptive execution. The
+    * landings observe the same records on their write ([[observed]]);
+    * this stands alone for frames that are not being written.
     */
   def preview(df: DataFrame, n: Int = 3): Seq[String] =
     df.toJSON.head(n).toIndexedSeq
@@ -111,7 +140,8 @@ object Manifest {
       .format(java.time.format.DateTimeFormatter.ISO_LOCAL_DATE_TIME)
 
   /** Assemble the full manifest for a written file, its DataFrame and
-    * the row and null counts observed while it was written.
+    * the row counts, null counts and preview observed while it was
+    * written.
     */
   def forWrittenFile(
       spark: SparkSession,
@@ -120,6 +150,7 @@ object Manifest {
       dataset: DatasetInfo,
       rows: Long,
       nulls: Map[String, Long],
+      preview: Seq[String],
       extra: Map[String, String],
       clock: java.time.Clock): Manifest = {
     val p = new Path(filePath)
@@ -139,7 +170,7 @@ object Manifest {
         dtypes = dtypes(df),
         rows = rows,
         nullCounts = nulls,
-        preview = preview(df)),
+        preview = preview),
       extra = extra)
   }
 

@@ -17,9 +17,11 @@ import graft.sources.{ApiSource, ApiTransport}
   *
   * The users→posts lookup is relationally
   * `posts SEMI JOIN (SELECT user_id FROM users WHERE nome = ?)`; here
-  * the user_id is resolved on the driver (one `head()` on a tiny
-  * frame) and pushed into the source request — the same shape as
-  * DataSource V2 filter pushdown.
+  * the user_id is resolved on the driver and pushed into the source
+  * request — the same shape as DataSource V2 filter pushdown. The
+  * payloads are local frames (`ApiSource.fetchDf`), so the lookup's
+  * `head()` is evaluated by the optimizer on the driver, and a run
+  * takes two Spark jobs: the two writes.
   *
   * Both frames are fetched, validated and looked up before anything
   * lands. The two landings (bronze write, manifest) then run at the

@@ -14,9 +14,9 @@ import graft.validate.Validate
   * gate → preview → partitioned bronze write → manifest sidecar.
   *
   * Unlike the reference, every step up to the write is LAZY plan
-  * construction: one Spark job reads the header, one writes the bronze
-  * file while observing the manifest's row and null counts, and one
-  * takes the manifest preview.
+  * construction, and the run is ONE Spark job: the driver reads the
+  * header (`CsvSource`), and the job that writes the bronze file also
+  * observes the manifest's row count, null counts and preview.
   */
 final case class IngestionResult(
     dataFile: String,
@@ -69,9 +69,10 @@ object CsvIngestion {
   }
 
   /** Land `df` as one bronze file plus its manifest sidecar: the steps
-    * both pipelines end with. The manifest's row and null counts ride
-    * the write job as an observation, so they describe exactly the rows
-    * written and cost no second pass over the source.
+    * both pipelines end with, in one Spark job. The manifest's row
+    * count, null counts and preview ride the write job as an
+    * observation, so they describe exactly the rows written and cost no
+    * second pass over the source.
     */
   private[pipeline] def land(
       spark: SparkSession,
@@ -82,14 +83,13 @@ object CsvIngestion {
       clock: java.time.Clock,
       endpoint: Option[String] = None,
       extra: Map[String, String] = Map.empty): IngestionResult = {
-    val columns = df.columns.toIndexedSeq
-    val exprs = Manifest.statsExprs(columns)
     // Retry-safe: the observation sits in the write job's result stage,
     // and Spark applies a result stage's accumulator updates once per
     // partition, however many attempts a task took.
     val stats = Observation()
-    val dataFile = BronzeWriter.write(spark, df.observe(stats, exprs.head, exprs.tail: _*), cfg.sink, partValue)
-    val (rows, nulls) = Manifest.statsOf(columns, stats.get)
+    val dataFile = BronzeWriter.write(spark, Manifest.observed(df, stats), cfg.sink, partValue)
+    val observed = stats.get
+    val (rows, nulls) = Manifest.statsOf(df.columns.toIndexedSeq, observed)
     val info = DatasetInfo(
       datasetId = cfg.datasetId,
       origin = cfg.origin,
@@ -100,7 +100,8 @@ object CsvIngestion {
       runId = runId,
       producer = "graft",
       endpoint = endpoint)
-    val manifest = Manifest.forWrittenFile(spark, df, dataFile, info, rows, nulls, extra, clock)
+    val manifest = Manifest.forWrittenFile(spark, df, dataFile, info, rows, nulls,
+      Manifest.previewOf(observed), extra, clock)
     IngestionResult(dataFile, Manifest.write(spark, manifest, dataFile), rows, Nil)
   }
 }

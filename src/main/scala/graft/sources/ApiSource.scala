@@ -1,6 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graftshim.IngestShim
 import graft.config.ApiConfig
 
 /** REST/JSON source layer.
@@ -8,10 +9,11 @@ import graft.config.ApiConfig
   * The reference fetches JSON over HTTP with a retrying session
   * (app/ingestao_api.py:25-56) and builds a frame from the payload.
   * There is no Spark primitive for REST, so the fetch happens on the
-  * DRIVER behind a transport trait; the payload then enters the
-  * distributed plan via `spark.read.json`. Predicates that the API can
-  * evaluate (e.g. `?userId=7`) are passed as request params — the
-  * moral equivalent of DataSource V2 filter pushdown
+  * DRIVER behind a transport trait. The payload is parsed there too,
+  * as the reference's `response.json()` does, into a local frame with
+  * the columns and types `spark.read.json` would infer. Predicates
+  * that the API can evaluate (e.g. `?userId=7`) are passed as request
+  * params — the moral equivalent of DataSource V2 filter pushdown
   * (reference app/ingestao_api.py:88).
   */
 final class ApiError(msg: String, cause: Throwable = null)
@@ -121,10 +123,12 @@ object ApiSource {
     throw new ApiError(s"GET $url failed after ${retries + 1} attempts", lastError)
   }
 
-  /** Fetch an endpoint and parse the JSON payload into a DataFrame.
-    * The JSON string is parsed distributed via `spark.read.json` on a
-    * single-element Dataset — fine for API-sized payloads; bulk data
-    * enters through file sources, not this path.
+  /** Fetch an endpoint and parse the JSON payload into a local frame
+    * (`LocalRelation`) on the driver, with Spark's JSON inference and
+    * parser (`IngestShim.jsonFrame`): the columns, types and rows
+    * `spark.read.json` gives on a one-element Dataset, and no Spark
+    * job. API payloads are small; bulk data enters through file
+    * sources, not this path.
     */
   def fetchDf(
       spark: SparkSession,
@@ -134,8 +138,7 @@ object ApiSource {
       params: Map[String, String] = Map.empty): DataFrame = {
     val endpoint = cfg.endpoints.getOrElse(endpointKey, throw new ApiError(s"unknown endpoint '$endpointKey'"))
     val body = safeGet(transport, cfg.baseUrl + endpoint, params, cfg.timeoutSec, cfg.retries)
-    import spark.implicits._
-    val parsed = spark.read.json(spark.createDataset(Seq(body)))
+    val parsed = IngestShim.jsonFrame(spark, body)
     if (parsed.columns.contains("_corrupt_record"))
       throw new ApiError(s"endpoint '$endpointKey' returned unparseable JSON")
     parsed

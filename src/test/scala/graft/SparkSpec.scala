@@ -43,6 +43,10 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  /** A local file named by a Hadoop path string (`file:/...` or `/...`). */
+  def localPath(file: String): java.nio.file.Path =
+    java.nio.file.Paths.get(new org.apache.hadoop.fs.Path(file).toUri.getPath)
+
   /** A bronze file's manifest sidecar, parsed. */
   def readManifest(dataFile: String): com.fasterxml.jackson.databind.JsonNode =
     new com.fasterxml.jackson.databind.ObjectMapper().readTree(

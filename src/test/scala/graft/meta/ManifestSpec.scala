@@ -18,6 +18,44 @@ class ManifestSpec extends SparkSpec {
     assert(nulls === Map("i" -> 1L, "s" -> 1L))
   }
 
+  /** The preview `Manifest.observed` records on a job that writes `df`
+    * (coalesced to one partition first, as a single-file landing is). */
+  private def observedPreview(df: org.apache.spark.sql.DataFrame, coalesce: Boolean): Seq[String] = {
+    val obs = org.apache.spark.sql.Observation()
+    val observed = Manifest.observed(df, obs)
+    (if (coalesce) observed.coalesce(1) else observed).write.format("noop").mode("overwrite").save()
+    Manifest.previewOf(obs.get)
+  }
+
+  test("observed preview equals Manifest.preview on multi-partition frames, NULL fields left out") {
+    val local = spark.createDataFrame(
+      (1 to 9).map(i => (i, if (i % 2 == 0) None else Some(s"s$i"), if (i == 1) None else Some(i * 1.5))))
+      .toDF("i", "s", "d")
+    val ranged = spark.range(0, 100, 1, 8).selectExpr(
+      "id", "IF(id % 3 = 0, NULL, CAST(id AS STRING)) AS `a.b`", "IF(id < 2, NULL, id / 4) AS q")
+    // a local frame is split into this many slices when it runs
+    spark.conf.set("spark.sql.leafNodeDefaultParallelism", "4")
+    try {
+      assert(local.rdd.getNumPartitions === 4)
+      assert(ranged.rdd.getNumPartitions === 8)
+      for (df <- Seq(local, ranged, ranged.filter("id >= 30")); coalesce <- Seq(false, true)) {
+        val want = Manifest.preview(df)
+        assert(want.length === 3)
+        assert(observedPreview(df, coalesce) === want)
+      }
+    } finally spark.conf.unset("spark.sql.leafNodeDefaultParallelism")
+    assert(Manifest.preview(local).head === """{"i":1,"s":"s1"}""")
+    assert(Manifest.preview(ranged).head === """{"id":0}""")
+  }
+
+  test("observed preview of a 0-row frame is empty, and the manifest writes null") {
+    val empty = spark.range(0, 10, 1, 4).toDF().filter("id < 0")
+    assert(observedPreview(empty, coalesce = true) === Nil)
+    val m = Manifest(CoreInfo("f", "/d", 0L, "00", "2025-10-20T12:00:00"), ds,
+      SchemaStats(Seq("id"), Map("id" -> "bigint"), 0L, Map("id" -> 0L), Nil))
+    assert(Manifest.toJson(m).contains("\"preview\": null"))
+  }
+
   test("forFileOnly: header columns, line count minus header, BOM stripped") {
     val tmp = Files.createTempDirectory("graft-manifest")
     val f = tmp.resolve("data.csv")

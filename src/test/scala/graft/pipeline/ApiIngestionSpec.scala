@@ -88,7 +88,7 @@ class ApiIngestionSpec extends SparkSpec {
     assert(postsManifest.contains("\"Int64\"")) // user_id dtype, pandas name
   }
 
-  test("one run takes 7 jobs (2 payload reads, lookup, 2 x write + preview); manifest counts match") {
+  test("one run takes 2 jobs (the two writes); manifest counts match") {
     val tmp = Files.createTempDirectory("graft-api-jobs")
     val (uf, pf) = writeFixtures(tmp)
     val transport = new FixtureTransport(Map(
@@ -96,9 +96,46 @@ class ApiIngestionSpec extends SparkSpec {
     val (usersCfg, postsCfg) = cfgs(tmp.resolve("bronze").toString)
     val (res, jobs) = countJobs(ApiIngestion.run(spark, usersCfg, postsCfg, transport,
       targetName = "Kurtis Weissnat", runId = "run-jobs", clock = clock))
-    assert(jobs === 7)
+    assert(jobs === 2)
     assertManifestCountsMatchBronze(res.users.dataFile)
     assertManifestCountsMatchBronze(res.posts.dataFile)
+  }
+
+  test("fetching users and resolving the target run no job") {
+    val tmp = Files.createTempDirectory("graft-api-lookup")
+    val (uf, pf) = writeFixtures(tmp)
+    val transport = new FixtureTransport(Map(
+      "https://api.test/users" -> uf, "https://api.test/posts" -> pf))
+    val (usersCfg, _) = cfgs(tmp.resolve("bronze").toString)
+    val (users, fetchJobs) = countJobs(ApiIngestion.fetchUsers(spark, usersCfg, transport))
+    val (userId, lookupJobs) = countJobs(ApiIngestion.resolveTargetUserId(users, "Kurtis Weissnat"))
+    assert((fetchJobs, lookupJobs) === (0, 0))
+    assert(userId === 7L)
+  }
+
+  test("users missing email land NULLs; a nested address object is not landed") {
+    val tmp = Files.createTempDirectory("graft-api-sparse")
+    val (_, pf) = writeFixtures(tmp)
+    val uf = tmp.resolve("sparse-users.json")
+    Files.write(uf,
+      """[
+        |{"id": 7, "name": "Kurtis Weissnat", "username": "Elwyn.Skiles",
+        | "address": {"street": "Rex Trail", "geo": {"lat": "24.8918", "lng": "21.8984"}}},
+        |{"id": 1, "name": "Leanne Graham", "username": "Bret", "email": "l@x.io",
+        | "address": {"street": "Kulas Light", "geo": {"lat": "-37.3159", "lng": "81.1496"}}}
+        |]""".stripMargin.getBytes("UTF-8"))
+    val transport = new FixtureTransport(Map(
+      "https://api.test/users" -> uf.toString, "https://api.test/posts" -> pf))
+    val (usersCfg, postsCfg) = cfgs(tmp.resolve("bronze").toString)
+    val res = ApiIngestion.run(spark, usersCfg, postsCfg, transport,
+      targetName = "Kurtis Weissnat", runId = "run-sparse", clock = clock)
+    val bronze = new String(Files.readAllBytes(localPath(res.users.dataFile)), "UTF-8")
+    assert(bronze === "user_id;nome;usuario;email\n7;Kurtis Weissnat;Elwyn.Skiles;\n1;Leanne Graham;Bret;l@x.io\n")
+    val stats = readManifest(res.users.dataFile).get("schema_stats")
+    assert(stats.get("nulos").get("email").asLong() === 1L)
+    assert(stats.get("preview").get(0).toString ===
+      """{"user_id":7,"nome":"Kurtis Weissnat","usuario":"Elwyn.Skiles"}""")
+    assertManifestCountsMatchBronze(res.users.dataFile)
   }
 
   private def landed(bronze: String, table: String, file: String): Boolean =

@@ -115,11 +115,11 @@ class CsvIngestionSpec extends SparkSpec {
     assert(stats.get("preview").get(0).get("Surprise").asText() === "zzz")
   }
 
-  test("one run takes 3 jobs (header, write, preview); manifest counts match the bronze file") {
+  test("one run takes 1 job (the write); manifest counts match bronze") {
     val tmp = Files.createTempDirectory("graft-csv-jobs")
     val c = cfg(writeFixture(tmp), tmp.resolve("bronze").toString)
     val (res, jobs) = countJobs(CsvIngestion.run(spark, c, runId = "run-jobs", clock = clock))
-    assert(jobs === 3)
+    assert(jobs === 1)
     assertManifestCountsMatchBronze(res.dataFile)
   }
 
