@@ -33,12 +33,25 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
   *   Readers resolve the file set exclusively from commits, so a
   *   crashed writer leaves invisible orphans (reclaimed by
   *   [[vacuum]]), never a torn table.
-  * - **Isolation**: the commit file is claimed with create-exclusive
-  *   (`FileSystem.create(overwrite = false)` — atomic on HDFS-like
-  *   stores). Losing a race throws [[CommitConflict]]; `append`
-  *   retries under a fresh version (its files are still unpublished,
-  *   so retry is safe), `overwrite` retries likewise under
-  *   last-write-wins semantics.
+  * - **Snapshot**: every operation lists `_txlog` ONCE and resolves
+  *   an immutable [[Snapshot]] from it — the newest readable
+  *   checkpoint plus the tail commits — with the version, schema,
+  *   live files and their stats, deletion vectors, column mapping,
+  *   properties, constraints, txn epochs and the last commit's
+  *   in-commit timestamp. Reads, DML planning and every commit check
+  *   use that one snapshot; each commit file is parsed at most once
+  *   per operation (the `DeltaLog`/`Snapshot` split of Delta Lake).
+  * - **Isolation**: every committing operation goes through ONE
+  *   optimistic loop ([[commitLoop]]): it builds the commit from the
+  *   current snapshot and claims `snapshot.version + 1` with a
+  *   no-replace rename. Losing the race throws [[CommitConflict]]
+  *   internally; the loop advances the snapshot by parsing only the
+  *   commits past its version and rebuilds the commit, so every
+  *   per-attempt check (file liveness, deletion-vector drift, the
+  *   write-protocol gate, feature declarations, schema DDL, txn
+  *   epochs) sees the state its commit lands on. An append's staged
+  *   files stay unpublished until a commit names them, so a retry
+  *   never duplicates data; `overwrite` retries under last-write-wins.
   * - **Time travel**: a read replays commits `1..asOfVersion`
   *   (`overwrite` resets the live set, `append` extends it) — the
   *   read side of Delta's `VERSION AS OF`.
@@ -66,7 +79,8 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
   *   Optional `clusterBy` range-partitions the rewrite so the new
   *   files carry tight min/max ranges for [[prunedRead]].
   * - **Log checkpoints**: every [[CheckpointInterval]]-th commit (and
-  *   every compaction) folds the materialized state — live files,
+  *   every commit that removes files), whichever operation made it,
+  *   folds the snapshot the commit loop already holds — live files,
   *   schema, per-file stats, per-app txn epochs — into
   *   `_txlog/<version>.checkpoint.txt`, the public protocol's
   *   checkpoint action. Reads load the newest checkpoint at or below
@@ -92,9 +106,9 @@ object TxLogTable {
   private val DataDir = "data"
   private val MaxCommitRetries = 20
 
-  /** Every N-th commit auto-folds a checkpoint (compactions always
-    * do); reads replay at most this many tail commits past the newest
-    * readable checkpoint.
+  /** Every N-th commit, whatever operation makes it, auto-folds a
+    * checkpoint (commits that remove files always do); reads replay at
+    * most this many tail commits past the newest readable checkpoint.
     */
   val CheckpointInterval = 10
 
@@ -147,10 +161,7 @@ object TxLogTable {
   def merge(spark: SparkSession, tablePath: String,
       updates: DataFrame, key: String): Long = {
     import org.apache.spark.sql.functions.{col, input_file_name, lit}
-    val fs = fileSystem(spark, tablePath)
-    val commits = committedVersions(fs, tablePath)
-    require(commits.nonEmpty, s"not a TxLog table (no commits): $tablePath")
-    val snap = snapshot(fs, tablePath, Some(commits.max))
+    val snap = openLog(spark, tablePath).snapshot()
     // the batch arrives under LOGICAL names; internal frames and the
     // staged bytes are physical (see the column-mapping notes above)
     val order = snap.logicalSchema.fieldNames.toSeq
@@ -172,7 +183,7 @@ object TxLogTable {
     // silently un-swapped under the wrong physical columns)
     if (snap.files.isEmpty)
       return write(up.select(order.map(col): _*), tablePath,
-        overwrite = false, txn = None)
+        overwrite = false, txn = None, base = Some(snap))
     val pkey = physicalNameOf(snap.renames, key)
     val keys = up.select(col(key).as(pkey)).distinct()
     val touched = {
@@ -193,7 +204,7 @@ object TxLogTable {
       .select(porder.map(col): _*)
     val v = write(keptTouched.unionAll(batch), tablePath, overwrite = false,
       txn = None, removes = touched, actionOverride = Some("rewrite"),
-      op = Some("merge"), expectDvs = snap.dvs)
+      op = Some("merge"), expectDvs = snap.dvs, base = Some(snap))
     val oldMatched = snapFrame(spark, tablePath, snap, touched)
       .join(keys, Seq(pkey), "left_semi")
       .select(porder.map(col): _*)
@@ -247,14 +258,10 @@ object TxLogTable {
     */
   def delete(spark: SparkSession, tablePath: String, predicate: String): Long = {
     import org.apache.spark.sql.functions.{expr, input_file_name, not}
-    val fs = fileSystem(spark, tablePath)
-    val commits = committedVersions(fs, tablePath)
-    require(commits.nonEmpty, s"not a TxLog table (no commits): $tablePath")
-    val base = commits.max
-    val snap = snapshot(fs, tablePath, Some(base))
-    if (snap.files.isEmpty) return base
+    val snap = openLog(spark, tablePath).snapshot()
+    if (snap.files.isEmpty) return snap.version
     val touched = touchedEntries(spark, tablePath, snap, expr(predicate))
-    if (touched.isEmpty) return base
+    if (touched.isEmpty) return snap.version
     // a rewrite applies the touched files' outstanding deletion
     // vectors first — masked rows must never resurrect. The predicate
     // is user-authored (logical names); write() maps back to physical.
@@ -263,7 +270,7 @@ object TxLogTable {
     val kept = toPhysicalDf(lf.filter(not(expr(predicate))), snap.renames)
     val v = write(kept, tablePath, overwrite = false, txn = None,
       removes = touched, actionOverride = Some("rewrite"),
-      op = Some("delete"), expectDvs = snap.dvs)
+      op = Some("delete"), expectDvs = snap.dvs, base = Some(snap))
     // persist the exact logical diff as a change-feed cache: the
     // deleted rows are precisely the touched rows matching the
     // predicate — O(touched files), no snapshot diff ever needed.
@@ -289,19 +296,15 @@ object TxLogTable {
       set: Map[String, String]): Long = {
     import org.apache.spark.sql.functions.{col, expr, input_file_name, when}
     require(set.nonEmpty, "update needs at least one SET assignment")
-    val fs = fileSystem(spark, tablePath)
-    val commits = committedVersions(fs, tablePath)
-    require(commits.nonEmpty, s"not a TxLog table (no commits): $tablePath")
-    val base = commits.max
-    val snap = snapshot(fs, tablePath, Some(base))
+    val snap = openLog(spark, tablePath).snapshot()
     // SET names and the WHERE predicate are user-authored → logical
     val lsch = snap.logicalSchema
     val unknown = set.keySet -- lsch.fieldNames.toSet
     require(unknown.isEmpty,
       s"update assigns to column(s) not in the table: ${unknown.mkString(", ")}")
-    if (snap.files.isEmpty) return base
+    if (snap.files.isEmpty) return snap.version
     val touched = touchedEntries(spark, tablePath, snap, expr(where))
-    if (touched.isEmpty) return base
+    if (touched.isEmpty) return snap.version
     val cols = lsch.fields.toSeq.map { f =>
       set.get(f.name) match {
         case Some(e) =>
@@ -315,7 +318,7 @@ object TxLogTable {
     val rewritten = toPhysicalDf(lf.select(cols: _*), snap.renames)
     val v = write(rewritten, tablePath, overwrite = false, txn = None,
       removes = touched, actionOverride = Some("rewrite"),
-      op = Some("update"), expectDvs = snap.dvs)
+      op = Some("update"), expectDvs = snap.dvs, base = Some(snap))
     // change-feed cache: old/new images of the matched rows, with
     // no-op assignments cancelled via multiset difference so the
     // cached feed is EXACTLY the snapshot diff ((untouched ∪ old) \
@@ -365,47 +368,30 @@ object TxLogTable {
     * committed (or current) version.
     */
   def restore(spark: SparkSession, tablePath: String, toVersion: Long): Long = {
-    val fs = fileSystem(spark, tablePath)
-    val commits0 = committedVersions(fs, tablePath)
-    require(commits0.nonEmpty, s"not a TxLog table (no commits): $tablePath")
-    require(commits0.contains(toVersion),
-      s"version $toVersion does not exist; have ${commits0.sorted.mkString(", ")}")
+    val log = openLog(spark, tablePath)
+    val cur = log.state
+    require(log.has(toVersion),
+      s"version $toVersion does not exist; have ${log.commits.mkString(", ")}")
     // restore WRITES a new commit: the CURRENT protocol governs it.
     // The gate runs BEFORE the restore-to-current no-op return — a
     // caller restoring to current on a table that requires writer
     // features this build lacks must hear that the table is
-    // unwritable NOW, not on the next (mutating) call; trading one
-    // replayState for that early signal is the right price.
-    checkWriteProtocol(
-      replayState(fs, tablePath, commits0.max, commits0).props, tablePath)
+    // unwritable NOW, not on the next (mutating) call
+    checkWriteProtocol(cur.props, tablePath)
     // restore-to-current is a no-op — nothing to commit
-    if (commits0.max == toVersion) return toVersion
-    val target = snapshot(fs, tablePath, Some(toVersion))
-    var attempt = 0
-    var result = -1L
-    while (result < 0) {
-      attempt += 1
-      if (attempt > MaxCommitRetries) throw new IllegalStateException(
-        s"gave up after $MaxCommitRetries restore attempts on $tablePath")
-      val version = committedVersions(fs, tablePath).max + 1L
-      try {
-        claimCommit(fs, tablePath, version,
-          Commit("overwrite", target.schema.toDDL, target.files,
-            txn = None, stats = target.stats,
-            op = Some(s"restore to v$toVersion"),
-            // the target's outstanding deletion vectors are part of
-            // its logical contents — the restore re-references them
-            dvAdds = target.dvs,
-            // so are its column mapping and drop tombstones (overwrite
-            // replay resets them, this commit re-establishes them)
-            renames = target.renames, dropped = target.dropped))
-        result = version
-      } catch { case _: CommitConflict => () }
+    if (cur.version == toVersion) return toVersion
+    val target = log.snapshot(Some(toVersion))
+    commitLoop(log.fs, tablePath, cur) { _ =>
+      Some(Commit("overwrite", target.schema.toDDL, target.files,
+        txn = None, stats = target.stats,
+        op = Some(s"restore to v$toVersion"),
+        // the target's outstanding deletion vectors are part of its
+        // logical contents — the restore re-references them
+        dvAdds = target.dvs,
+        // so are its column mapping and drop tombstones (overwrite
+        // replay resets them, this commit re-establishes them)
+        renames = target.renames, dropped = target.dropped))
     }
-    if (result % CheckpointInterval == 0)
-      try writeCheckpoint(fs, tablePath, result)
-      catch { case scala.util.control.NonFatal(_) => () }
-    result
   }
 
   /** SHALLOW CLONE: create `dstPath` as a new table whose first
@@ -425,13 +411,8 @@ object TxLogTable {
   def shallowClone(spark: SparkSession, srcPath: String, dstPath: String,
       srcVersion: Option[Long] = None): Long = {
     val srcFs = fileSystem(spark, srcPath)
-    val srcCommits = committedVersions(srcFs, srcPath)
-    require(srcCommits.nonEmpty, s"not a TxLog table (no commits): $srcPath")
-    val dstFs = fileSystem(spark, dstPath)
-    require(committedVersions(dstFs, dstPath).isEmpty,
-      s"shallow clone target must be a fresh table: $dstPath already has commits")
-    val v = srcVersion.getOrElse(srcCommits.max)
-    val snap = snapshot(srcFs, srcPath, Some(v))
+    val snap = openLog(spark, srcPath).snapshot(srcVersion)
+    val v = snap.version
     val srcData = srcFs.makeQualified(new Path(srcPath, DataDir))
     val absolute = snap.files.map(f =>
       if (isAbsoluteEntry(f)) f // clone of a clone keeps the original refs
@@ -450,17 +431,19 @@ object TxLogTable {
     // table properties AND check constraints travel too — a clone of
     // a bloom-indexed / constrained table must keep maintaining
     // blooms and validating constraints on NEW writes, not just
-    // prune on the copied stats (both ride the snapshot's replayed
-    // state — no second log replay)
-    claimCommit(dstFs, dstPath, 1L,
-      Commit("overwrite", snap.schema.toDDL, absolute,
+    // prune on the copied stats (both ride the source snapshot)
+    val dst = openLog(spark, dstPath)
+    commitLoop(dst.fs, dstPath, dst.current) { s =>
+      require(s.version == 0L,
+        s"shallow clone target must be a fresh table: $dstPath already has commits")
+      Some(Commit("overwrite", snap.schema.toDDL, absolute,
         stats = stats, op = Some(s"shallow clone of $srcPath@v$v"),
         dvAdds = dvs,
         // the source's column mapping and drop tombstones travel with
         // its files
         renames = snap.renames, dropped = snap.dropped,
         propSets = snap.props, constraintAdds = snap.constraints))
-    1L
+    }
   }
 
   /** Create an EMPTY table: version 1 is a metadata-only commit that
@@ -484,9 +467,7 @@ object TxLogTable {
   def create(spark: SparkSession, tablePath: String,
       schema: StructType, props: Map[String, String] = Map.empty): Long = {
     require(schema.nonEmpty, s"cannot create a zero-column table: $tablePath")
-    val fs = fileSystem(spark, tablePath)
-    require(committedVersions(fs, tablePath).isEmpty,
-      s"table already exists: $tablePath")
+    val log = openLog(spark, tablePath)
     // GENERATED ALWAYS AS declarations: the column must exist in the
     // declared schema and the expression must resolve against it
     // (probed on an empty frame — the table has no data yet, so the
@@ -512,10 +493,11 @@ object TxLogTable {
     // properties commit would leave a crash window where the table
     // exists without its declared properties (bloom columns,
     // constraints-adjacent metadata)
-    claimCommit(fs, tablePath, 1L,
-      Commit("create", schema.toDDL, Nil, op = Some("CREATE TABLE"),
+    commitLoop(log.fs, tablePath, log.current) { s =>
+      require(s.version == 0L, s"table already exists: $tablePath")
+      Some(Commit("create", schema.toDDL, Nil, op = Some("CREATE TABLE"),
         propSets = props, constraintAdds = genConstraints))
-    1L
+    }
   }
 
   /** ALTER TABLE ... ADD COLUMNS as a METADATA-ONLY commit: the new
@@ -526,23 +508,12 @@ object TxLogTable {
     */
   def addColumns(spark: SparkSession, tablePath: String,
       newCols: StructType): Long = {
-    val fs = fileSystem(spark, tablePath)
-    val commits = committedVersions(fs, tablePath)
-    require(commits.nonEmpty, s"not a TxLog table (no commits): $tablePath")
-    var result = -1L
-    var attempt = 0
-    while (result < 0) {
-      attempt += 1
-      if (attempt > MaxCommitRetries) throw new IllegalStateException(
-        s"gave up after $MaxCommitRetries add-column attempts on $tablePath")
-      val latest = committedVersions(fs, tablePath).max
-      val st = replayState(fs, tablePath, latest,
-        committedVersions(fs, tablePath))
-      checkWriteProtocol(st.props, tablePath)
-      val cur = StructType.fromDDL(st.ddl.get)
+    val log = openLog(spark, tablePath)
+    commitLoop(log.fs, tablePath, log.state) { st =>
+      val cur = st.schema
       // collision is judged against the LOGICAL view — the only one a
       // user can see
-      val logicalNow = logicalSchema(cur, st.renames).fieldNames.toSet
+      val logicalNow = st.logicalSchema.fieldNames.toSet
       val clash = newCols.fieldNames.filter(logicalNow.contains)
       require(clash.isEmpty,
         s"column(s) already exist: ${clash.mkString(", ")}")
@@ -555,22 +526,16 @@ object TxLogTable {
       val physCols = newCols.fields.map { f =>
         if (!taken.contains(f.name)) f.copy(nullable = true)
         else {
-          val fresh = Iterator.from(latest.toInt + 1)
+          val fresh = Iterator.from(st.version.toInt + 1)
             .map(v => s"${f.name}__r$v").filterNot(taken).next()
           mapping = mapping + (fresh -> f.name)
           f.copy(name = fresh, nullable = true)
         }
       }
-      val evolved = StructType(cur.fields ++ physCols)
-      try {
-        claimCommit(fs, tablePath, latest + 1L,
-          Commit("evolve", evolved.toDDL, Nil,
-            op = Some(s"ADD COLUMNS (${newCols.toDDL})"),
-            renames = if (mapping == st.renames) Map.empty else mapping))
-        result = latest + 1L
-      } catch { case _: CommitConflict => () }
+      Some(Commit("evolve", StructType(cur.fields ++ physCols).toDDL, Nil,
+        op = Some(s"ADD COLUMNS (${newCols.toDDL})"),
+        renames = if (mapping == st.renames) Map.empty else mapping))
     }
-    result
   }
 
   final class ConstraintViolation(msg: String) extends RuntimeException(msg)
@@ -590,7 +555,7 @@ object TxLogTable {
     * via add/drop commits (`action=setconstraint`, metadata-only).
     *
     * Concurrency note: a write validates against the constraint set
-    * visible when its staging completes — a constraint added
+    * of the snapshot it resolved before staging — a constraint added
     * CONCURRENTLY with an in-flight write may miss that one batch
     * (optimistic model, no global write lock). Run a post-add
     * validation pass if the table may have racing writers.
@@ -598,18 +563,14 @@ object TxLogTable {
   def addConstraint(spark: SparkSession, tablePath: String,
       name: String, expression: String): Long = {
     import org.apache.spark.sql.functions.{coalesce, expr, lit}
-    val fs = fileSystem(spark, tablePath)
-    val commits = committedVersions(fs, tablePath)
-    require(commits.nonEmpty, s"not a TxLog table (no commits): $tablePath")
-    val st = replayState(fs, tablePath, commits.max, commits)
-    require(!st.constraints.contains(name),
+    val log = openLog(spark, tablePath)
+    val snap = log.snapshot()
+    require(!snap.constraints.contains(name),
       s"constraint '$name' already exists (drop it first to replace)")
-    val snap = snapshot(fs, tablePath, Some(commits.max))
     // constraints are authored and validated in LOGICAL terms, against
     // the LIVE rows — snapFrame applies deletion vectors, so a value
     // that only survives in DV-masked rows cannot veto the constraint
-    val df = toLogicalDf(
-      snapFrame(spark, tablePath, snap, snap.files), snap.renames)
+    val df = frame(spark, tablePath, snap)
     val bad =
       try df.filter(coalesce(expr(expression), lit(true)) === false)
         .limit(1).collect()
@@ -621,12 +582,10 @@ object TxLogTable {
     if (bad.nonEmpty) throw new ConstraintViolation(
       s"cannot add constraint '$name' CHECK ($expression): existing data " +
         s"violates it, e.g. ${bad.head}")
-    checkWriteProtocol(st.props, tablePath)
-    metadataCommit(fs, tablePath, snap.schema.toDDL,
-      adds = Map(name -> expression), drops = Nil,
+    metadataCommit(log, snap, adds = Map(name -> expression), drops = Nil,
       // a declared protocol picks up checkConstraints on first use
       // (declared by name: the commit loop derives the property delta
-      // from per-attempt replayed props, so a retry after a racing
+      // from each attempt's snapshot, so a retry after a racing
       // feature declaration unions instead of overwriting)
       declFeature = Some("checkConstraints"))
   }
@@ -634,24 +593,17 @@ object TxLogTable {
   /** Drop a named constraint (metadata-only commit). */
   def dropConstraint(spark: SparkSession, tablePath: String,
       name: String): Long = {
-    val fs = fileSystem(spark, tablePath)
-    val commits = committedVersions(fs, tablePath)
-    require(commits.nonEmpty, s"not a TxLog table (no commits): $tablePath")
-    val st = replayState(fs, tablePath, commits.max, commits)
+    val log = openLog(spark, tablePath)
+    val st = log.state
     checkWriteProtocol(st.props, tablePath)
     require(st.constraints.contains(name),
       s"no such constraint '$name'; have: ${st.constraints.keys.toSeq.sorted.mkString(", ")}")
-    metadataCommit(fs, tablePath, st.ddl.get, adds = Map.empty,
-      drops = Seq(name))
+    metadataCommit(log, st, adds = Map.empty, drops = Seq(name))
   }
 
   /** The table's active CHECK constraints, name → expression. */
-  def constraints(spark: SparkSession, tablePath: String): Map[String, String] = {
-    val fs = fileSystem(spark, tablePath)
-    val commits = committedVersions(fs, tablePath)
-    require(commits.nonEmpty, s"not a TxLog table (no commits): $tablePath")
-    replayState(fs, tablePath, commits.max, commits).constraints
-  }
+  def constraints(spark: SparkSession, tablePath: String): Map[String, String] =
+    openLog(spark, tablePath).state.constraints
 
   /** SET TBLPROPERTIES: upsert key → value pairs as one metadata-only
     * commit. Properties are table-level metadata like constraints —
@@ -676,12 +628,8 @@ object TxLogTable {
 
   /** The table's current properties (empty if none set). */
   def properties(spark: SparkSession,
-      tablePath: String): Map[String, String] = {
-    val fs = fileSystem(spark, tablePath)
-    val commits = committedVersions(fs, tablePath)
-    require(commits.nonEmpty, s"not a TxLog table (no commits): $tablePath")
-    replayState(fs, tablePath, commits.max, commits).props
-  }
+      tablePath: String): Map[String, String] =
+    openLog(spark, tablePath).state.props
 
   // ---- protocol / table features ----------------------------------
 
@@ -739,36 +687,8 @@ object TxLogTable {
         "implement — upgrade the engine before writing")
   }
 
-  /** Streaming-read protocol gate, shared by the v1 format source and
-    * the V2 catalog micro-batch stream: re-checked on EVERY planned
-    * batch, not only at source creation, because a long-lived stream
-    * outlives `upgradeProtocol` — a reader feature declared mid-stream
-    * must stop the query, never be replayed with legacy semantics
-    * (the silent failure mode: a stream serving DV-unmasked rows of a
-    * feature it cannot parse).
-    */
-  private[graft] def checkStreamReadProtocol(spark: SparkSession,
-      tablePath: String, commits: Seq[Long]): Unit = {
-    val fs = fileSystem(spark, tablePath)
-    if (commits.nonEmpty) checkReadProtocol(
-      replayState(fs, tablePath, commits.max, commits).props, tablePath)
-  }
-
-  /** Versions in `(fromExclusive, toInclusive]` absent from the
-    * caller-listed `present` commits — [[expireLog]] reclaimed them.
-    * A streaming read whose checkpointed offset fell below the
-    * retention horizon must fail loudly on these, not skip them
-    * (versions are dense, so any hole is retention, and the skipped
-    * commits' rows would silently never reach downstream state).
-    */
-  private[graft] def missingVersions(present: Seq[Long],
-      fromExclusive: Long, toInclusive: Long): Seq[Long] = {
-    val have = present.toSet
-    ((fromExclusive + 1L) to toInclusive).filterNot(have.contains)
-  }
-
-  /** The features a state's metadata shows to be IN USE. */
-  private def inferredFeatures(st: State): Set[String] = {
+  /** The features a snapshot's metadata shows to be IN USE. */
+  private def inferredFeatures(st: Snapshot): Set[String] = {
     val b = Set.newBuilder[String]
     if (st.dvs.nonEmpty) b += "deletionVectors"
     if (st.renames.nonEmpty || st.dropped.nonEmpty) b += "columnMapping"
@@ -816,10 +736,7 @@ object TxLogTable {
     require(unknown.isEmpty,
       s"cannot declare feature(s) ${unknown.toSeq.sorted.mkString(", ")} — " +
         s"this build implements: ${SupportedFeatures.toSeq.sorted.mkString(", ")}")
-    val fs = fileSystem(spark, tablePath)
-    val commits = committedVersions(fs, tablePath)
-    require(commits.nonEmpty, s"not a TxLog table (no commits): $tablePath")
-    // the feature union is recomputed from the CURRENT replayed state
+    // the feature union is recomputed from the CURRENT snapshot
     // on every claim attempt: a concurrently-winning commit that
     // declared a feature must fold into our lists, never be
     // overwritten with ones read before the race (the invariant: a
@@ -838,77 +755,36 @@ object TxLogTable {
       sets: Map[String, String], drops: Seq[String]): Long =
     propertiesCommitWith(spark, tablePath, _ => sets, drops)
 
-  /** `computeSets` re-evaluates against the state replayed inside each
-    * claim attempt, so retries never commit property values derived
-    * from a pre-conflict read (upgradeProtocol's feature union is the
-    * load-bearing case). The per-attempt replay also keeps the write
-    * protocol gate current. */
+  /** `computeSets` re-evaluates against each claim attempt's snapshot,
+    * so retries never commit property values derived from a
+    * pre-conflict read (upgradeProtocol's feature union is the
+    * load-bearing case). */
   private def propertiesCommitWith(spark: SparkSession, tablePath: String,
-      computeSets: State => Map[String, String], drops: Seq[String]): Long = {
-    val fs = fileSystem(spark, tablePath)
-    var attempt = 0
-    var result = -1L
-    while (result < 0) {
-      attempt += 1
-      if (attempt > MaxCommitRetries) throw new IllegalStateException(
-        s"gave up after $MaxCommitRetries property-commit attempts on $tablePath")
-      val commits = committedVersions(fs, tablePath)
-      require(commits.nonEmpty, s"not a TxLog table (no commits): $tablePath")
-      val st = replayState(fs, tablePath, commits.max, commits)
-      checkWriteProtocol(st.props, tablePath)
+      computeSets: Snapshot => Map[String, String], drops: Seq[String]): Long = {
+    val log = openLog(spark, tablePath)
+    commitLoop(log.fs, tablePath, log.state) { st =>
       val sets = computeSets(st)
-      val version = commits.max + 1L
-      val ddl = parseCommit(fs, tablePath, commits.max).schemaDdl
-      try {
-        claimCommit(fs, tablePath, version,
-          Commit("setprops", ddl, Nil,
-            op = Some(if (sets.nonEmpty)
-              s"SET TBLPROPERTIES (${sets.keys.toSeq.sorted.mkString(", ")})"
-            else s"UNSET TBLPROPERTIES (${drops.sorted.mkString(", ")})"),
-            propSets = sets, propDrops = drops))
-        result = version
-      } catch { case _: CommitConflict => () }
+      Some(Commit("setprops", st.ddl.get, Nil,
+        op = Some(if (sets.nonEmpty)
+          s"SET TBLPROPERTIES (${sets.keys.toSeq.sorted.mkString(", ")})"
+        else s"UNSET TBLPROPERTIES (${drops.sorted.mkString(", ")})"),
+        propSets = sets, propDrops = drops))
     }
-    result
   }
 
-  private def metadataCommit(fs: FileSystem, tablePath: String, ddl: String,
+  /** A constraint add/drop. The DDL and the feature declaration come
+    * from each attempt's snapshot: a racing schema-evolution commit
+    * keeps its schema, and a racing feature declaration is unioned,
+    * never overwritten with pre-race lists. */
+  private def metadataCommit(log: TxLog, base: Snapshot,
       adds: Map[String, String], drops: Seq[String],
-      declFeature: Option[String] = None): Long = {
-    var attempt = 0
-    var result = -1L
-    while (result < 0) {
-      attempt += 1
-      if (attempt > MaxCommitRetries) throw new IllegalStateException(
-        s"gave up after $MaxCommitRetries metadata-commit attempts on $tablePath")
-      val commits = committedVersions(fs, tablePath)
-      val version = commits.max + 1L
-      // state replayed THIS attempt serves both the feature
-      // declaration (see propertiesCommitWith for the under-statement
-      // race it prevents) and the schema DDL: the caller's ddl came
-      // from a snapshot taken before this retry loop, so a racing
-      // schema-evolution commit landing in the retry window would get
-      // its schema silently overwritten by the stale DDL — the same
-      // pre-conflict-read race class, on the schema axis
-      val cur = replayState(fs, tablePath, commits.max, commits)
-      // the write-protocol gate must also run per attempt: the
-      // caller's pre-loop gate read a snapshot from before the retry
-      // window, so a racing upgradeProtocol declaring a writer
-      // feature this build lacks would otherwise be committed over
-      // (the same race propertiesCommitWith closes for properties)
-      checkWriteProtocol(cur.props, tablePath)
-      val propSets = declFeature.map(f => featureDecl(cur.props, f))
-        .getOrElse(Map.empty)
-      try {
-        claimCommit(fs, tablePath, version,
-          Commit("setconstraint", cur.ddl.getOrElse(ddl), Nil,
-            constraintAdds = adds, constraintDrops = drops,
-            propSets = propSets))
-        result = version
-      } catch { case _: CommitConflict => () }
+      declFeature: Option[String] = None): Long =
+    commitLoop(log.fs, log.tablePath, base) { cur =>
+      Some(Commit("setconstraint", cur.ddl.get, Nil,
+        constraintAdds = adds, constraintDrops = drops,
+        propSets = declFeature.map(featureDecl(cur.props, _))
+          .getOrElse(Map.empty)))
     }
-    result
-  }
 
   /** Bin-pack the current snapshot's small data files into fewer
     * large ones as ONE new version — contents identical, every prior
@@ -958,11 +834,7 @@ object TxLogTable {
         .count(_.isDefined) <= 1,
       "clusterBy, zOrderBy, zOrderCols and hilbertBy are mutually exclusive")
     val fs = fileSystem(spark, tablePath)
-    val commits = committedVersions(fs, tablePath)
-    require(commits.nonEmpty, s"not a TxLog table (no commits): $tablePath")
-    val base = commits.max
-    val snap = snapshot(fs, tablePath, Some(base))
-    val dataPath = new Path(tablePath, DataDir)
+    val snap = openLog(spark, tablePath).snapshot()
     // `onlyWhere` scopes maintenance to the files whose committed
     // stats may intersect [lower, upper] on a column — the
     // OPTIMIZE-WHERE shape: on a date-clustered 100 TB table, daily
@@ -971,8 +843,7 @@ object TxLogTable {
     // which only ever widens the rewrite, never corrupts it.
     val inScope: Seq[String] = onlyWhere match {
       case None => snap.files
-      case Some((column, lower, upper)) =>
-        pruneFiles(snap, physicalNameOf(snap.renames, column), lower, upper)
+      case Some((column, lower, upper)) => snap.prune(column, lower, upper)
     }
     // rewrite candidates: small files, plus ANY file carrying
     // outstanding deletion vectors — compaction is where merge-on-read
@@ -982,7 +853,7 @@ object TxLogTable {
       .map(f => f -> fs.getFileStatus(new Path(dataFilePath(tablePath, f))).getLen)
       .filter { case (f, len) => len < smallFileBytes || snap.dvs.contains(f) }
     if (small.size < 2 && !small.exists(f => snap.dvs.contains(f._1)))
-      return base
+      return snap.version
     val nOut = math.max(1L,
       (small.map(_._2).sum + targetFileBytes - 1) / targetFileBytes).toInt
     val df = snapFrame(spark, tablePath, snap, small.map(_._1))
@@ -1016,7 +887,7 @@ object TxLogTable {
       case _ => df.coalesce(nOut)
     }
     write(arranged, tablePath, overwrite = false, txn = None,
-      removes = small.map(_._1), expectDvs = snap.dvs)
+      removes = small.map(_._1), expectDvs = snap.dvs, base = Some(snap))
   }
 
   /** Snapshot read at `asOfVersion` (default: latest). Serves the
@@ -1024,10 +895,13 @@ object TxLogTable {
     * the version read), via one aliasing Project over the scan.
     */
   def read(spark: SparkSession, tablePath: String,
-      asOfVersion: Option[Long] = None): DataFrame = {
-    val snap = snapshot(fileSystem(spark, tablePath), tablePath, asOfVersion)
+      asOfVersion: Option[Long] = None): DataFrame =
+    frame(spark, tablePath, openLog(spark, tablePath).snapshot(asOfVersion))
+
+  /** `snap`'s rows under their LOGICAL names (deletion vectors applied). */
+  private[graft] def frame(spark: SparkSession, tablePath: String,
+      snap: Snapshot): DataFrame =
     toLogicalDf(snapFrame(spark, tablePath, snap, snap.files), snap.renames)
-  }
 
   /** Snapshot read that SKIPS data files whose committed min/max
     * statistics prove no row can satisfy
@@ -1043,11 +917,10 @@ object TxLogTable {
   def prunedRead(spark: SparkSession, tablePath: String, column: String,
       lower: Option[Any] = None, upper: Option[Any] = None,
       asOfVersion: Option[Long] = None): DataFrame = {
-    val snap = snapshot(fileSystem(spark, tablePath), tablePath, asOfVersion)
-    // `column` is the LOGICAL name; stats are keyed physical
-    val keep = pruneFiles(snap, physicalNameOf(snap.renames, column),
-      lower, upper)
-    val df = toLogicalDf(snapFrame(spark, tablePath, snap, keep), snap.renames)
+    val snap = openLog(spark, tablePath).snapshot(asOfVersion)
+    val df = toLogicalDf(
+      snapFrame(spark, tablePath, snap, snap.prune(column, lower, upper)),
+      snap.renames)
     val c = org.apache.spark.sql.functions.col(column)
     val bounded = lower.map(v => c >= org.apache.spark.sql.functions.lit(v)) ++
       upper.map(v => c <= org.apache.spark.sql.functions.lit(v))
@@ -1059,97 +932,31 @@ object TxLogTable {
     */
   def candidateFiles(spark: SparkSession, tablePath: String, column: String,
       lower: Option[Any] = None, upper: Option[Any] = None,
-      asOfVersion: Option[Long] = None): Seq[String] = {
-    val snap = snapshot(fileSystem(spark, tablePath), tablePath, asOfVersion)
-    pruneFiles(snap, physicalNameOf(snap.renames, column), lower, upper)
-  }
+      asOfVersion: Option[Long] = None): Seq[String] =
+    openLog(spark, tablePath).snapshot(asOfVersion)
+      .prune(column, lower, upper)
 
   /** Committed versions, ascending. */
   def versions(spark: SparkSession, tablePath: String): Seq[Long] =
-    committedVersions(fileSystem(spark, tablePath), tablePath).sorted
+    openLog(spark, tablePath).commits
 
-  /** External-reader view of a resolved snapshot (the
-    * `graft-txlog` DataSource's contract): live data-file NAMES, the
-    * committed schema, and a per-file conservative intersection test
-    * over the committed column stats.
-    */
-  private[graft] final case class ScanSnapshot(
-      files: Seq[String], schema: StructType,
-      mayRangeIntersect: (String, String, Option[Any], Option[Any]) => Boolean,
-      hasDeletionVectors: Boolean = false,
-      renames: Map[String, String] = Map.empty,
-      // logical names retired by DROP COLUMN (grows monotonically —
-      // a dropped name can never be re-added); the V2 stream's
-      // first-batch race guard compares this against its
-      // scan-build-time value
-      dropped: Set[String] = Set.empty,
-      // (file, LOGICAL column) → (exact null count, exact row count)
-      // when both were recorded at write time; None → no null pruning
-      nullCounts: (String, String) => Option[(Long, Long)] =
-        (_, _) => None,
-      // (file, LOGICAL column, candidate value) → false ⇒ the value
-      // is certainly absent (per-file bloom); conservative true when
-      // no bloom was recorded
-      mayContainEq: (String, String, Any) => Boolean =
-        (_, _, _) => true) {
-    /** The user-facing schema (physical fields re-labelled). */
-    def logicalSchema: StructType = TxLogTable.logicalSchema(schema, renames)
-  }
-
+  /** The resolved snapshot the `graft-txlog` DataSource and the
+    * catalog scan read from (gated like [[read]]). */
   private[graft] def scanSnapshot(spark: SparkSession, tablePath: String,
-      asOfVersion: Option[Long]): ScanSnapshot = {
-    val snap = snapshot(fileSystem(spark, tablePath), tablePath, asOfVersion)
-    ScanSnapshot(snap.files, snap.schema,
-      // callers pass the LOGICAL column name (the only name a query
-      // can mention); stats are keyed by physical name
-      (file, column, lower, upper) =>
-        snap.stats.get(file)
-            .flatMap(_.get(physicalNameOf(snap.renames, column))) match {
-          case None     => true
-          case Some(cs) => mayIntersect(cs, lower, upper)
-        },
-      hasDeletionVectors = snap.dvs.nonEmpty,
-      renames = snap.renames,
-      dropped = snap.dropped,
-      nullCounts = (file, column) => {
-        def statLong(key: String, kind: String): Option[Long] =
-          snap.stats.get(file).flatMap(_.get(key))
-            .filter(_.kind == kind)
-            .flatMap(cs => scala.util.Try(new String(
-              Base64.getDecoder.decode(cs.min),
-              StandardCharsets.UTF_8).toLong).toOption)
-        for {
-          n <- statLong(
-            NullCountPrefix + physicalNameOf(snap.renames, column), "nulls")
-          rows <- statLong(RowCountStat, "rows")
-        } yield (n, rows)
-      },
-      mayContainEq = (file, column, value) =>
-        snap.stats.get(file)
-          .flatMap(_.get(BloomStatPrefix + physicalNameOf(snap.renames, column)))
-          .filter(_.kind == "bloom") match {
-          case None     => true
-          case Some(cs) =>
-            scala.util.Try(bloomMayContain(cs.min, value)).getOrElse(true)
-        })
-  }
+      asOfVersion: Option[Long]): Snapshot =
+    openLog(spark, tablePath).snapshot(asOfVersion)
 
   /** Table history — the DESCRIBE HISTORY analog: one row per
-    * committed version with action, commit timestamp (file mtime),
-    * file/remove counts, txn identity, and schema DDL, newest first.
+    * committed version with action, commit timestamp, file/remove
+    * counts, txn identity, and schema DDL, newest first. The timestamp
+    * is the commit's in-commit `ts`; commits written before that
+    * feature fall back to the commit file's modification time.
     */
   def history(spark: SparkSession, tablePath: String): DataFrame = {
-    val fs = fileSystem(spark, tablePath)
-    val commits = committedVersions(fs, tablePath)
-    require(commits.nonEmpty, s"not a TxLog table (no commits): $tablePath")
-    val rows = commits.sorted(Ordering[Long].reverse).map { v =>
-      val c = parseCommit(fs, tablePath, v)
-      // in-commit timestamp when recorded (monotonic, survives file
-      // copies); commit-file mtime for pre-feature history
-      val millis = c.ts.getOrElse(fs.getFileStatus(
-        new Path(new Path(tablePath, LogDir), commitName(v)))
-        .getModificationTime)
-      (v, c.action, c.op.getOrElse(c.action), new java.sql.Timestamp(millis),
+    val log = openLog(spark, tablePath)
+    val rows = log.range(0L, log.latest).reverse.map { case (v, c) =>
+      (v, c.action, c.op.getOrElse(c.action),
+        new java.sql.Timestamp(log.timestamp(v)),
         c.files.size, c.removes.size, c.txn.map(_._1), c.txn.map(_._2),
         c.schemaDdl)
     }
@@ -1182,28 +989,20 @@ object TxLogTable {
   def changes(spark: SparkSession, tablePath: String,
       fromExclusive: Long, toInclusive: Long): DataFrame = {
     import org.apache.spark.sql.functions.lit
-    val fs = fileSystem(spark, tablePath)
-    val commits = committedVersions(fs, tablePath)
-    require(commits.nonEmpty, s"not a TxLog table (no commits): $tablePath")
-    require(commits.contains(toInclusive),
-      s"version $toInclusive does not exist; have ${commits.sorted.mkString(", ")}")
-    // the change feed is a read: gate it on reader features like any
+    val log = openLog(spark, tablePath)
+    // the change feed is a read: gated on reader features like any
     // snapshot read
-    checkReadProtocol(
-      replayState(fs, tablePath, toInclusive, commits).props, tablePath)
+    val atTo = log.snapshot(Some(toInclusive))
     // versions are dense (1..n): any hole in the requested range means
     // expireLog reclaimed it — serving the survivors would hand the
     // caller a silently INCOMPLETE feed it would apply as complete
-    val missing = ((fromExclusive + 1L) to toInclusive)
-      .filterNot(commits.contains)
+    val missing = log.missingVersions(fromExclusive, toInclusive)
     require(missing.isEmpty,
       s"change feed range ($fromExclusive, $toInclusive] spans expired " +
         s"version(s) ${missing.head}..${missing.last} of $tablePath — " +
         "the log was expired past the requested start; resync from a " +
         "full snapshot instead")
-    val inRange = commits.filter(v => v > fromExclusive && v <= toInclusive).sorted
-    val deltas = inRange.flatMap { v =>
-      val c = parseCommit(fs, tablePath, v)
+    val deltas = log.range(fromExclusive, toInclusive).flatMap { case (v, c) =>
       if (c.action == "compact" || c.action == "setconstraint" ||
           c.action == "create" || c.action == "evolve" ||
           c.action == "rename" || c.action == "dropcolumn" ||
@@ -1229,16 +1028,10 @@ object TxLogTable {
       } else {
         // generic two-snapshot diff — DV-aware on both sides, so a
         // torn dv-commit cache falls back to the identical answer
-        val cur = {
-          val s = snapshot(fs, tablePath, Some(v))
-          snapFrame(spark, tablePath, s, s.files)
-        }
-        val prev = commits.filter(_ < v).sorted.lastOption match {
-          case None => cur.limit(0)
-          case Some(pv) =>
-            val s = snapshot(fs, tablePath, Some(pv))
-            snapFrame(spark, tablePath, s, s.files)
-        }
+        def rows(s: Snapshot) = snapFrame(spark, tablePath, s, s.files)
+        val cur = rows(log.snapshot(Some(v)))
+        val prev = log.commits.filter(_ < v).lastOption
+          .fold(cur.limit(0))(pv => rows(log.snapshot(Some(pv))))
         // align by name for the diff (schema may have evolved)
         val ins = cur.exceptAll(
             prev.unionByName(cur.limit(0), allowMissingColumns = true)
@@ -1257,94 +1050,34 @@ object TxLogTable {
     // PHYSICAL-named; serve the LOGICAL names as of `toInclusive` —
     // one alias layer over the whole feed, the same retroactive-rename
     // semantics a snapshot read has
-    val renAtTo = snapshot(fs, tablePath, Some(toInclusive)).renames
     toLogicalDf(
       deltas.reduceOption(_.unionByName(_, allowMissingColumns = true))
         .getOrElse {
-          val s = snapshot(fs, tablePath, Some(toInclusive))
-          buildFrame(spark, tablePath, Nil, s.schema)
+          buildFrame(spark, tablePath, Nil, atTo.schema)
             .withColumn("_change_type", lit(""))
             .withColumn("_commit_version", lit(0L))
             .limit(0)
-        }, renAtTo)
-  }
-
-  /** Data files ADDED by append/overwrite commits in
-    * `(fromExclusive, toInclusive]` — the incremental-read contract of
-    * the streaming source: each commit's files appear in exactly one
-    * version range, and commits carrying removes (compaction AND
-    * row-level rewrite) are SKIPPED because their added files hold
-    * already-streamed rows. An append-only stream cannot express a
-    * row-level delete — consumers that must see deletes read the
-    * [[changes]] feed instead (same contract as the public lake-table
-    * streaming source's delete handling).
-    */
-  private[graft] def addedFiles(spark: SparkSession, tablePath: String,
-      fromExclusive: Long, toInclusive: Long): Seq[String] = {
-    val fs = fileSystem(spark, tablePath)
-    committedVersions(fs, tablePath)
-      .filter(v => v > fromExclusive && v <= toInclusive).sorted
-      .flatMap { v =>
-        val c = parseCommit(fs, tablePath, v)
-        if (c.removes.nonEmpty) Nil else c.files
-      }
-  }
-
-  /** Versions in `(fromExclusive, toInclusive]` that are row-level
-    * rewrites ([[delete]]/[[update]]) — the commits an append-only
-    * streaming read cannot represent.
-    */
-  private[graft] def rewriteVersions(spark: SparkSession, tablePath: String,
-      fromExclusive: Long, toInclusive: Long): Seq[Long] = {
-    val fs = fileSystem(spark, tablePath)
-    committedVersions(fs, tablePath)
-      .filter(v => v > fromExclusive && v <= toInclusive).sorted
-      .filter { v =>
-        val a = parseCommit(fs, tablePath, v).action
-        a == "rewrite" || a == "dv" // both are row-level deletes
-      }
-  }
-
-  /** Versions in `(fromExclusive, toInclusive]` whose commits change
-    * the column mapping — rename / dropcolumn, or an evolve commit
-    * carrying a refreshed map (a re-added logical name bound to a
-    * fresh physical slot). The vectorized stream path reads physical
-    * parquet column names against the stream's logical start-schema,
-    * so any of these landing mid-stream would silently null-fill the
-    * remapped column instead of failing.
-    */
-  private[graft] def mappingChangeVersions(spark: SparkSession, tablePath: String,
-      fromExclusive: Long, toInclusive: Long): Seq[Long] = {
-    val fs = fileSystem(spark, tablePath)
-    committedVersions(fs, tablePath)
-      .filter(v => v > fromExclusive && v <= toInclusive).sorted
-      .filter { v =>
-        val c = parseCommit(fs, tablePath, v)
-        c.action == "rename" || c.action == "dropcolumn" || c.renames.nonEmpty
-      }
+        }, atTo.renames)
   }
 
   /** The newest version whose commit landed at or before `epochMillis`
-    * (commit-file modification time — the public protocol's timestamp
-    * resolution rule). Errors if the table's first commit is younger.
+    * — by in-commit timestamp, or by commit-file modification time for
+    * commits written before that feature (the public protocol's
+    * timestamp resolution rule). Errors if the table's first commit is
+    * younger.
     */
   private[graft] def versionAtTimestamp(spark: SparkSession, tablePath: String,
       epochMillis: Long): Long = {
-    val fs = fileSystem(spark, tablePath)
-    val raw = committedVersions(fs, tablePath).sorted.map { v =>
-      v -> parseCommit(fs, tablePath, v).ts.getOrElse(fs.getFileStatus(
-        new Path(new Path(tablePath, LogDir), commitName(v)))
-        .getModificationTime)
-    }
-    require(raw.nonEmpty, s"not a TxLog table (no commits): $tablePath")
+    val log = openLog(spark, tablePath)
     // mixing in-commit timestamps (new commits) with commit-file
     // mtimes (pre-feature commits) can be non-monotonic — a file copy
     // rewrites mtimes. Normalize to a running maximum, mirroring the
     // monotonicity claimCommit enforces on the write side, so the
     // <=epoch scan can never resolve past an out-of-order stamp.
-    val stamped = raw.scanLeft((0L, Long.MinValue)) { case ((_, m), (v, t)) =>
-      (v, math.max(m, t))
-    }.tail
+    val stamped = log.range(0L, log.latest)
+      .scanLeft((0L, Long.MinValue)) { case ((_, m), (v, _)) =>
+        (v, math.max(m, log.timestamp(v)))
+      }.tail
     stamped.filter(_._2 <= epochMillis).map(_._1).lastOption.getOrElse(
       throw new IllegalArgumentException(
         s"timestampAsOf $epochMillis predates the first commit " +
@@ -1365,42 +1098,38 @@ object TxLogTable {
     */
   def expireLog(spark: SparkSession, tablePath: String,
       olderThanMillis: Long = 10L * 60 * 1000): Int = {
-    val fs = fileSystem(spark, tablePath)
+    val log = openLog(spark, tablePath)
+    val fs = log.fs
     // protocol gate: expiry decides which log files are load-bearing
     // from a legacy-semantics replay — on a table requiring features
     // this build lacks, that replay may mis-read what is referenced,
     // and the deletions are permanent. Refuse, like snapshot/changes.
-    locally {
-      val commits0 = committedVersions(fs, tablePath)
-      if (commits0.nonEmpty) checkWriteProtocol(
-        replayState(fs, tablePath, commits0.max, commits0).props, tablePath)
-    }
+    if (log.commits.nonEmpty) checkWriteProtocol(log.state.props, tablePath)
     val logPath = new Path(tablePath, LogDir)
     val cutoff = System.currentTimeMillis() - olderThanMillis
     def expired(p: Path): Boolean =
       scala.util.Try(fs.getFileStatus(p).getModificationTime <= cutoff)
         .getOrElse(false)
-    val manifests = checkpointVersions(fs, tablePath).toSet
+    val manifests = log.checkpoints.toSet
     // orphan parts: a torn multi-part write whose manifest never
     // landed — reclaimable like any aborted cache write
     var n = 0
-    for (st <- fs.listStatus(logPath)) {
+    for (st <- log.listing) {
       val name = st.getPath.getName
       if (name.contains(".checkpoint.part-") &&
           name.split('.').headOption.flatMap(_.toLongOption)
             .exists(!manifests.contains(_)) &&
           expired(st.getPath) && fs.delete(st.getPath, false)) n += 1
     }
-    manifests.toSeq.sorted(Ordering[Long].reverse)
-      .find(v => loadCheckpoint(fs, tablePath, v).isDefined) match {
+    log.checkpoints.reverse.find(log.checkpoint(_).isDefined) match {
       case None => n // no loadable checkpoint: every commit is load-bearing
       case Some(horizon) =>
-        for (v <- committedVersions(fs, tablePath).filter(_ < horizon)) {
+        for (v <- log.commits.filter(_ < horizon)) {
           val p = new Path(logPath, commitName(v))
           if (expired(p) && fs.delete(p, false)) n += 1
         }
         for (v <- manifests.filter(_ < horizon);
-             st <- fs.listStatus(logPath)
+             st <- log.listing
                if st.getPath.getName.startsWith(f"$v%020d.checkpoint.")) {
           if (expired(st.getPath) && fs.delete(st.getPath, false)) n += 1
         }
@@ -1418,21 +1147,19 @@ object TxLogTable {
   /** Test seam: force the multi-part split at a tiny line count. */
   private[graft] def checkpoint(spark: SparkSession, tablePath: String,
       maxPartLines: Int): Long = {
-    val fs = fileSystem(spark, tablePath)
-    val commits = committedVersions(fs, tablePath)
-    require(commits.nonEmpty, s"not a TxLog table (no commits): $tablePath")
+    val log = openLog(spark, tablePath)
+    val st = log.state
     // protocol gate: a checkpoint rewrites replayed state as the new
     // source of truth — a legacy-semantics replay of a table requiring
     // unknown features would bake the mis-read in permanently
-    checkWriteProtocol(
-      replayState(fs, tablePath, commits.max, commits).props, tablePath)
-    writeCheckpoint(fs, tablePath, commits.max, maxPartLines)
-    commits.max
+    checkWriteProtocol(st.props, tablePath)
+    writeCheckpoint(log.fs, tablePath, st, maxPartLines)
+    st.version
   }
 
   /** Versions carrying a checkpoint file, ascending (specs/ops). */
   def checkpoints(spark: SparkSession, tablePath: String): Seq[Long] =
-    checkpointVersions(fileSystem(spark, tablePath), tablePath).sorted
+    openLog(spark, tablePath).checkpoints
 
   /** Delete data files referenced by NO commit (crashed writers,
     * lost races). Every committed version stays readable — this never
@@ -1453,35 +1180,29 @@ object TxLogTable {
     */
   def vacuum(spark: SparkSession, tablePath: String,
       olderThanMillis: Long = 10L * 60 * 1000): Int = {
-    val fs = fileSystem(spark, tablePath)
+    val log = openLog(spark, tablePath)
+    val fs = log.fs
     // protocol gate: the referenced-file set below comes from a
     // legacy-semantics parse of commits/checkpoints — a feature this
     // build lacks (e.g. one recording file references in a new commit
     // field) would get its live files deleted as "orphans". Refuse.
-    locally {
-      val commits0 = committedVersions(fs, tablePath)
-      if (commits0.nonEmpty) checkWriteProtocol(
-        replayState(fs, tablePath, commits0.max, commits0).props, tablePath)
-    }
+    if (log.commits.nonEmpty) checkWriteProtocol(log.state.props, tablePath)
     // checkpoints count as references too: once old commits are
     // expired (log retention), the checkpoint is the only witness
     // that a still-live file is not an orphan
-    val referenced = (committedVersions(fs, tablePath)
-      .flatMap(v => parseCommit(fs, tablePath, v).files) ++
-      checkpointVersions(fs, tablePath)
-        .flatMap(v => loadCheckpoint(fs, tablePath, v).toSeq.flatMap(_.files))
-      ).toSet
+    val commits = log.range(0L, Long.MaxValue).map(_._2)
+    val ckpts = log.checkpoints.flatMap(log.checkpoint)
+    val referenced = (commits.flatMap(_.files) ++ ckpts.flatMap(_.files)).toSet
     val cutoff = System.currentTimeMillis() - olderThanMillis
     // CDF caches of versions whose commit has expired (log retention)
     // serve no reader — changes() requires the commit to exist — so
     // they are reclaimable metadata, under the same safety window
-    val commits = committedVersions(fs, tablePath).toSet
     val cdfRoot = new Path(tablePath, CdfDir)
     val cdfGone =
       if (!fs.exists(cdfRoot)) 0
       else {
         val dead = fs.listStatus(cdfRoot).filter { st =>
-          st.getPath.getName.toLongOption.exists(!commits.contains(_)) &&
+          st.getPath.getName.toLongOption.exists(!log.has(_)) &&
             st.getModificationTime <= cutoff
         }.map(_.getPath)
         dead.foreach(fs.delete(_, true))
@@ -1491,12 +1212,8 @@ object TxLogTable {
     // commit or checkpoint referencing one keeps it (history stays
     // time-travelable); unreferenced dirs (a dv write that lost its
     // commit race or aborted) reclaim after the safety window
-    val dvReferenced = (committedVersions(fs, tablePath)
-      .flatMap(v => parseCommit(fs, tablePath, v).dvAdds.values.flatten) ++
-      checkpointVersions(fs, tablePath)
-        .flatMap(v => loadCheckpoint(fs, tablePath, v).toSeq
-          .flatMap(_.dvs.values.flatten))
-      ).filterNot(isAbsoluteEntry).toSet
+    val dvReferenced = (commits.flatMap(_.dvAdds.values.flatten) ++
+      ckpts.flatMap(_.dvs.values.flatten)).filterNot(isAbsoluteEntry).toSet
     val dvRoot = new Path(tablePath, DvDir)
     val dvGone =
       if (!fs.exists(dvRoot)) 0
@@ -1529,7 +1246,7 @@ object TxLogTable {
     * micros for ts (NTZ micros stored as-is), plain BigDecimal string
     * for dec.
     */
-  private final case class ColStats(kind: String, min: String, max: String)
+  private[graft] final case class ColStats(kind: String, min: String, max: String)
 
   /** `action` is one of append | overwrite | compact | rewrite.
     * compact and rewrite both carry removes + adds and replay
@@ -1555,116 +1272,280 @@ object TxLogTable {
     def isOverwrite: Boolean = action == "overwrite"
   }
 
-  /** The live file set at a version, with schema, per-file stats,
-    * per-file deletion-vector directories (merge-on-read deletes), and
-    * the column-mapping renames (PHYSICAL file column → LOGICAL
-    * user-facing name; only differing entries present).
+  /** The table at one version, resolved once: the live files with
+    * their per-file stats and deletion-vector directories, the schema
+    * DDL, the column mapping (PHYSICAL file column → LOGICAL name; only
+    * differing entries) and drop tombstones, properties, CHECK
+    * constraints, the per-app max txn epoch (txn identities survive
+    * overwrites, so idempotent replays stay deduplicated across a
+    * table rewrite) and the in-commit timestamp of the commit that
+    * made it. Exactly what a checkpoint persists. Version 0 is the
+    * state before the first commit.
     */
-  private final case class Snapshot(files: Seq[String], schema: StructType,
-      stats: Map[String, Map[String, ColStats]],
-      dvs: Map[String, Seq[String]] = Map.empty,
-      renames: Map[String, String] = Map.empty,
-      dropped: Set[String] = Set.empty,
-      props: Map[String, String] = Map.empty,
-      constraints: Map[String, String] = Map.empty) {
-    /** The user-facing schema: physical fields re-labelled. */
-    def logicalSchema: StructType = TxLogTable.logicalSchema(schema, renames)
-  }
-
-  /** Full materialized log state at a version — what a checkpoint
-    * persists: the snapshot fields plus the per-app max txn epoch
-    * (txn identities survive overwrites, so idempotent replays stay
-    * deduplicated across a table rewrite).
-    */
-  private final case class State(files: Vector[String], ddl: Option[String],
-      stats: Map[String, Map[String, ColStats]], txns: Map[String, Long],
+  private[graft] final case class Snapshot(version: Long,
+      ddl: Option[String] = None,
+      files: Vector[String] = Vector.empty,
+      stats: Map[String, Map[String, ColStats]] = Map.empty,
+      txns: Map[String, Long] = Map.empty,
       constraints: Map[String, String] = Map.empty,
       dvs: Map[String, Seq[String]] = Map.empty,
       renames: Map[String, String] = Map.empty,
       dropped: Set[String] = Set.empty,
-      props: Map[String, String] = Map.empty)
+      props: Map[String, String] = Map.empty,
+      ts: Option[Long] = None) {
 
-  private val EmptyState =
-    State(Vector.empty, None, Map.empty, Map.empty, Map.empty, Map.empty,
-      Map.empty, Set.empty, Map.empty)
+    lazy val schema: StructType = StructType.fromDDL(ddl.getOrElse(
+      throw new IllegalStateException(s"no schema resolvable at version $version")))
 
-  /** State at `upTo`: newest readable checkpoint ≤ `upTo`, then
-    * replay of the tail commits. Checkpoints are caches — any that
-    * fail to parse are skipped (next older, then full replay).
+    /** The user-facing schema: physical fields re-labelled. */
+    def logicalSchema: StructType = TxLogTable.logicalSchema(schema, renames)
+
+    def hasDeletionVectors: Boolean = dvs.nonEmpty
+
+    /** `file`'s recorded stat for the LOGICAL `column` under `prefix`. */
+    private def stat(file: String, prefix: String, column: String): Option[ColStats] =
+      stats.get(file).flatMap(_.get(prefix + physicalNameOf(renames, column)))
+
+    /** Conservative: false only when `file`'s recorded min/max for the
+      * LOGICAL `column` proves no value lies in `[lower, upper]`. */
+    def mayRangeIntersect(file: String, column: String,
+        lower: Option[Any], upper: Option[Any]): Boolean =
+      stat(file, "", column).forall(mayIntersect(_, lower, upper))
+
+    /** The live files [[mayRangeIntersect]] keeps. */
+    def prune(column: String, lower: Option[Any], upper: Option[Any]): Vector[String] =
+      files.filter(mayRangeIntersect(_, column, lower, upper))
+
+    /** (exact null count, exact row count) of the LOGICAL `column` in
+      * `file`, when both were recorded at write time. */
+    def nullCounts(file: String, column: String): Option[(Long, Long)] = {
+      def count(cs: Option[ColStats], kind: String): Option[Long] =
+        cs.filter(_.kind == kind)
+          .flatMap(c => scala.util.Try(unb64(c.min).toLong).toOption)
+      for {
+        n <- count(stat(file, NullCountPrefix, column), "nulls")
+        rows <- count(stats.get(file).flatMap(_.get(RowCountStat)), "rows")
+      } yield (n, rows)
+    }
+
+    /** false ⇒ `value` is certainly absent from the LOGICAL `column` of
+      * `file` (per-file bloom); true when no bloom was recorded. */
+    def mayContainEq(file: String, column: String, value: Any): Boolean =
+      stat(file, BloomStatPrefix, column).filter(_.kind == "bloom")
+        .forall(cs => scala.util.Try(bloomMayContain(cs.min, value)).getOrElse(true))
+
+    /** This snapshot advanced by commit `c` at version `v`. */
+    private[TxLogTable] def next(v: Long, c: Commit): Snapshot = {
+      val (base, baseStats, baseDvs) =
+        if (c.isOverwrite)
+          (Vector.empty[String], Map.empty[String, Map[String, ColStats]],
+            Map.empty[String, Seq[String]])
+        else if (c.removes.isEmpty) (files, stats, dvs)
+        else {
+          val gone = c.removes.toSet
+          // a rewritten/compacted file took its deletion vectors'
+          // effect into the rewrite — the DVs die with the file
+          (files.filterNot(gone), stats -- gone, dvs -- gone)
+        }
+      val liveFiles = (base ++ c.files).toSet
+      Snapshot(v, Some(c.schemaDdl), base ++ c.files, baseStats ++ c.stats,
+        c.txn.foldLeft(txns) { case (m, (a, e)) =>
+          m.updated(a, math.max(e, m.getOrElse(a, Long.MinValue)))
+        },
+        // constraints are table properties: they survive overwrite
+        // (like txn identities) and change only by add/drop commits
+        constraints ++ c.constraintAdds -- c.constraintDrops,
+        // new deletion vectors stack onto a file's existing ones;
+        // entries for files no longer live are dropped (hygiene —
+        // readers scope DVs by live file anyway)
+        c.dvAdds.foldLeft(baseDvs) { case (m, (f, dirs)) =>
+          if (!liveFiles.contains(f)) m
+          else m.updated(f, m.getOrElse(f, Seq.empty) ++ dirs)
+        },
+        // column mapping: a rename/dropcolumn commit REPLACES the
+        // map; an overwrite resets it to whatever the commit carries
+        // (empty for a plain overwrite — the new schema is its own
+        // physical truth; restore/clone carry their source's map)
+        if (c.isOverwrite || c.action == "rename" ||
+          c.action == "dropcolumn") c.renames
+        // an evolve commit re-adding a dropped logical name carries
+        // the FULL updated map (fresh physical slot); plain commits
+        // carry none and keep the current map
+        else if (c.renames.nonEmpty) c.renames
+        else renames,
+        // dropped-column tombstones (retired PHYSICAL names): same
+        // replacement rule — live files may still carry the bytes,
+        // so a re-added logical name must get a FRESH physical slot
+        if (c.isOverwrite || c.action == "dropcolumn") c.dropped
+        else dropped,
+        // table properties: survive overwrite (table-level metadata,
+        // like constraints and txn identities), change only by
+        // set/unset commits
+        props ++ c.propSets -- c.propDrops,
+        c.ts)
+    }
+  }
+
+  /** The commit log as ONE listing of `_txlog` shows it — the handle an
+    * operation resolves its snapshots and version ranges from. Each
+    * commit file is parsed, and each checkpoint and snapshot loaded,
+    * at most once per handle.
     */
-  private def replayState(fs: FileSystem, tablePath: String, upTo: Long,
-      commits: Seq[Long]): State = {
-    val (start, from) = checkpointVersions(fs, tablePath)
-      .filter(_ <= upTo).sorted(Ordering[Long].reverse).iterator
-      .flatMap(v => loadCheckpoint(fs, tablePath, v).map(_ -> v))
-      .nextOption().getOrElse((EmptyState, 0L))
-    commits.filter(v => v > from && v <= upTo).sorted
-      .foldLeft(start) { (st, v) =>
-        val c = parseCommit(fs, tablePath, v)
-        val (base, baseStats, baseDvs) =
-          if (c.isOverwrite)
-            (Vector.empty[String], Map.empty[String, Map[String, ColStats]],
-              Map.empty[String, Seq[String]])
-          else if (c.removes.isEmpty) (st.files, st.stats, st.dvs)
-          else {
-            val gone = c.removes.toSet
-            // a rewritten/compacted file took its deletion vectors'
-            // effect into the rewrite — the DVs die with the file
-            (st.files.filterNot(gone), st.stats -- gone, st.dvs -- gone)
-          }
-        val liveFiles = (base ++ c.files).toSet
-        State(base ++ c.files, Some(c.schemaDdl), baseStats ++ c.stats,
-          c.txn.foldLeft(st.txns) { case (m, (a, e)) =>
-            m.updated(a, math.max(e, m.getOrElse(a, Long.MinValue)))
-          },
-          // constraints are table properties: they survive overwrite
-          // (like txn identities) and change only by add/drop commits
-          st.constraints ++ c.constraintAdds -- c.constraintDrops,
-          // new deletion vectors stack onto a file's existing ones;
-          // entries for files no longer live are dropped (hygiene —
-          // readers scope DVs by live file anyway)
-          c.dvAdds.foldLeft(baseDvs) { case (m, (f, dirs)) =>
-            if (!liveFiles.contains(f)) m
-            else m.updated(f, m.getOrElse(f, Seq.empty) ++ dirs)
-          },
-          // column mapping: a rename/dropcolumn commit REPLACES the
-          // map; an overwrite resets it to whatever the commit carries
-          // (empty for a plain overwrite — the new schema is its own
-          // physical truth; restore/clone carry their source's map)
-          if (c.isOverwrite || c.action == "rename" ||
-            c.action == "dropcolumn") c.renames
-          // an evolve commit re-adding a dropped logical name carries
-          // the FULL updated map (fresh physical slot); plain commits
-          // carry none and keep the current map
-          else if (c.renames.nonEmpty) c.renames
-          else st.renames,
-          // dropped-column tombstones (retired PHYSICAL names): same
-          // replacement rule — live files may still carry the bytes,
-          // so a re-added logical name must get a FRESH physical slot
-          if (c.isOverwrite || c.action == "dropcolumn") c.dropped
-          else st.dropped,
-          // table properties: survive overwrite (table-level metadata,
-          // like constraints and txn identities), change only by
-          // set/unset commits
-          st.props ++ c.propSets -- c.propDrops)
+  private[graft] final class TxLog private[TxLogTable] (
+      val fs: FileSystem, val tablePath: String) {
+
+    /** Every file in `_txlog` (empty when the directory is missing). */
+    val listing: Seq[org.apache.hadoop.fs.FileStatus] =
+      try fs.listStatus(new Path(tablePath, LogDir)).toSeq
+      catch { case _: java.io.FileNotFoundException => Seq.empty }
+
+    private def versionsOf(suffix: String): Vector[Long] =
+      listing.map(_.getPath.getName).filter(_.endsWith(suffix))
+        .flatMap(_.stripSuffix(suffix).toLongOption).sorted.toVector
+
+    /** Committed versions, ascending. */
+    val commits: Vector[Long] = versionsOf(".txt")
+
+    /** Versions carrying a checkpoint, ascending. */
+    val checkpoints: Vector[Long] = versionsOf(".checkpoint.txt")
+
+    def has(v: Long): Boolean =
+      commits.search(v).isInstanceOf[scala.collection.Searching.Found]
+
+    private def requireTable(): Unit =
+      require(commits.nonEmpty, s"not a TxLog table (no commits): $tablePath")
+
+    def latest: Long = { requireTable(); commits.last }
+
+    private val parsed = scala.collection.mutable.Map.empty[Long, Commit]
+    private[TxLogTable] def commit(v: Long): Commit =
+      parsed.getOrElseUpdate(v, parseCommit(fs, tablePath, v))
+
+    private val loaded = scala.collection.mutable.Map.empty[Long, Option[Snapshot]]
+    /** The checkpoint at `v`; None when it is torn or corrupt. */
+    def checkpoint(v: Long): Option[Snapshot] =
+      loaded.getOrElseUpdate(v, loadCheckpoint(fs, tablePath, v))
+
+    private val resolved = scala.collection.mutable.Map.empty[Long, Snapshot]
+    private def resolve(v: Long): Snapshot = {
+      requireTable()
+      require(has(v), s"version $v does not exist; have ${commits.mkString(", ")}")
+      resolved.getOrElseUpdate(v, advance(
+        checkpoints.reverseIterator.filter(_ <= v).flatMap(checkpoint)
+          .nextOption().getOrElse(Snapshot(0L)), v))
+    }
+
+    /** The snapshot at `asOf` (default latest) from the newest readable
+      * checkpoint at or below it plus the tail commits, gated on the
+      * reader features: a table declaring one this build does not
+      * implement fails loudly, never a silent mis-read. */
+    def snapshot(asOf: Option[Long] = None): Snapshot = {
+      val s = resolve(asOf.getOrElse(latest))
+      checkReadProtocol(s.props, tablePath)
+      s
+    }
+
+    /** The latest snapshot without the reader gate — for the metadata
+      * getters and for commits, whose write gate includes it. */
+    def state: Snapshot = resolve(latest)
+
+    /** [[state]], or version 0 when nothing is committed yet. */
+    def current: Snapshot = if (commits.isEmpty) Snapshot(0L) else state
+
+    /** `s` advanced by the listed commits in `(s.version, upTo]`. */
+    def advance(s: Snapshot, upTo: Long): Snapshot =
+      range(s.version, upTo).foldLeft(s) { case (st, (v, c)) => st.next(v, c) }
+
+    /** The listed commits in `(lo, hi]`, ascending. */
+    private[TxLogTable] def range(lo: Long, hi: Long): Vector[(Long, Commit)] =
+      commits.filter(v => v > lo && v <= hi).map(v => v -> commit(v))
+
+    /** Commit `v`'s in-commit timestamp, or its file's modification
+      * time for commits written before that feature. */
+    def timestamp(v: Long): Long = commit(v).ts.getOrElse(mtimes(commitName(v)))
+
+    private lazy val mtimes =
+      listing.map(s => s.getPath.getName -> s.getModificationTime).toMap
+
+    /** Versions in `(lo, hi]` absent from the listing — [[expireLog]]
+      * reclaimed them. Versions are dense, so a reader owed these must
+      * fail loudly, never skip them. */
+    def missingVersions(lo: Long, hi: Long): Seq[Long] =
+      ((lo + 1L) to hi).filterNot(has)
+
+    /** Data files ADDED by the commits in `(lo, hi]` — the incremental
+      * read of the streaming sources: commits carrying removes
+      * (compaction and row-level rewrites) add already-streamed rows,
+      * so they contribute nothing. An append-only stream cannot
+      * express a row-level delete; consumers that must see deletes
+      * read the [[changes]] feed. */
+    def addedFiles(lo: Long, hi: Long): Seq[String] =
+      range(lo, hi).flatMap { case (_, c) => if (c.removes.nonEmpty) Nil else c.files }
+
+    /** Versions in `(lo, hi]` that are row-level deletes ([[delete]],
+      * [[update]], deletion vectors) — what an append-only stream
+      * cannot represent. */
+    def rewriteVersions(lo: Long, hi: Long): Seq[Long] =
+      range(lo, hi).collect { case (v, c) if c.action == "rewrite" || c.action == "dv" => v }
+
+    /** Versions in `(lo, hi]` that change the column mapping — rename,
+      * dropcolumn, or an evolve carrying a refreshed map. The
+      * vectorized stream reads physical names against its logical
+      * start schema, so these must fail it, not null-fill. */
+    def mappingChangeVersions(lo: Long, hi: Long): Seq[Long] =
+      range(lo, hi).collect {
+        case (v, c) if c.action == "rename" || c.action == "dropcolumn" ||
+          c.renames.nonEmpty => v
       }
   }
 
-  private def snapshot(fs: FileSystem, tablePath: String,
-      asOfVersion: Option[Long]): Snapshot = {
-    val commits = committedVersions(fs, tablePath)
-    require(commits.nonEmpty, s"not a TxLog table (no commits): $tablePath")
-    val upTo = asOfVersion.getOrElse(commits.max)
-    require(commits.contains(upTo),
-      s"version $upTo does not exist; have ${commits.mkString(", ")}")
-    val st = replayState(fs, tablePath, upTo, commits)
-    // protocol gate: a table declaring reader features this build
-    // does not implement must fail loudly, never be silently mis-read
-    checkReadProtocol(st.props, tablePath)
-    Snapshot(st.files, StructType.fromDDL(st.ddl.getOrElse(
-      throw new IllegalStateException(
-        s"no schema resolvable at version $upTo of $tablePath"))), st.stats,
-      st.dvs, st.renames, st.dropped, st.props, st.constraints)
+  /** The log of `tablePath`, listed once. */
+  private[graft] def openLog(spark: SparkSession, tablePath: String): TxLog =
+    new TxLog(fileSystem(spark, tablePath), tablePath)
+
+  /** The one optimistic commit loop. Each attempt runs the write
+    * protocol gate on its snapshot, then `build` turns that snapshot
+    * into the commit for the next version (None: nothing to commit —
+    * the snapshot's version is returned). A claim lost to a concurrent
+    * writer advances the snapshot by the commits past its version —
+    * one listing, only those commits parsed — and `build` runs again,
+    * so every check it makes sees the state its commit lands on. The
+    * winner folds a checkpoint every [[CheckpointInterval]] versions
+    * and after any commit that removes files; best-effort, since a
+    * checkpoint is a cache and a failed one only costs the next reader
+    * a longer replay.
+    */
+  private def commitLoop(fs: FileSystem, tablePath: String, start: Snapshot)(
+      build: Snapshot => Option[Commit]): Long = {
+    @scala.annotation.tailrec
+    def attempt(snap: Snapshot, n: Int): Long = {
+      if (n > MaxCommitRetries) throw new IllegalStateException(
+        s"gave up after $MaxCommitRetries commit attempts on $tablePath")
+      checkWriteProtocol(snap.props, tablePath)
+      build(snap) match {
+        case None => snap.version
+        case Some(c) =>
+          val v = snap.version + 1L
+          val won =
+            try Some(claimCommit(fs, tablePath, v, c, snap.ts))
+            catch { case _: CommitConflict => None }
+          won match {
+            case Some(ts) =>
+              if (v % CheckpointInterval == 0 || c.removes.nonEmpty)
+                try writeCheckpoint(fs, tablePath, snap.next(v, c.copy(ts = Some(ts))))
+                catch { case scala.util.control.NonFatal(_) => () }
+              v
+            case None =>
+              // advance by the commits we missed; if log retention
+              // reclaimed some of them meanwhile, resolve afresh from
+              // the checkpoint that replaced them
+              val log = new TxLog(fs, tablePath)
+              val expired = log.missingVersions(snap.version, log.latest).nonEmpty
+              attempt(if (expired) log.state else log.advance(snap, log.latest), n + 1)
+          }
+      }
+    }
+    attempt(start, 1)
   }
 
   /** Resolve a committed file entry to its physical location: plain
@@ -1743,47 +1624,35 @@ object TxLogTable {
     */
   def renameColumn(spark: SparkSession, tablePath: String,
       from: String, to: String): Long = {
-    val fs = fileSystem(spark, tablePath)
     require(from != to, s"rename to the same name is a no-op: $from")
-    var result = -1L
-    var attempt = 0
-    while (result < 0) {
-      attempt += 1
-      if (attempt > MaxCommitRetries) throw new IllegalStateException(
-        s"gave up after $MaxCommitRetries rename attempts on $tablePath")
-      val commits = committedVersions(fs, tablePath)
-      require(commits.nonEmpty, s"not a TxLog table (no commits): $tablePath")
-      val st = replayState(fs, tablePath, commits.max, commits)
-      checkWriteProtocol(st.props, tablePath)
-      val phys = StructType.fromDDL(st.ddl.get)
-      val logical = logicalSchema(phys, st.renames).fieldNames.toSeq
+    val log = openLog(spark, tablePath)
+    commitLoop(log.fs, tablePath, log.state) { st =>
+      val logical = st.logicalSchema.fieldNames.toSeq
       require(logical.contains(from),
         s"no such column '$from'; table has: ${logical.mkString(", ")}")
       require(!logical.contains(to),
         s"column '$to' already exists; rename it away first")
-      val word = ("\\b" + java.util.regex.Pattern.quote(from) + "\\b").r
-      val inConstraint = st.constraints.collect {
-        case (n, e) if word.findFirstIn(e).isDefined => n
-      }
+      val inConstraint = constraintsNaming(st, from)
       require(inConstraint.isEmpty,
         s"column '$from' is referenced by CHECK constraint(s) " +
           s"${inConstraint.mkString(", ")} — drop them before renaming")
       val p = physicalNameOf(st.renames, from)
       val updated = (st.renames - p) ++
         (if (p == to) Map.empty[String, String] else Map(p -> to))
-      try {
-        claimCommit(fs, tablePath, commits.max + 1L,
-          Commit("rename", st.ddl.get, Nil,
-            op = Some(s"RENAME COLUMN $from TO $to"), renames = updated,
-            // properties that NAME columns follow the rename in the
-            // same commit (the bloom-index column list); a declared
-            // protocol picks up columnMapping the moment it's used
-            propSets = renamedBloomProp(st.props, from, Some(to)) ++
-              featureDecl(st.props, "columnMapping")))
-        result = commits.max + 1L
-      } catch { case _: CommitConflict => () }
+      Some(Commit("rename", st.ddl.get, Nil,
+        op = Some(s"RENAME COLUMN $from TO $to"), renames = updated,
+        // properties that NAME columns follow the rename in the
+        // same commit (the bloom-index column list); a declared
+        // protocol picks up columnMapping the moment it's used
+        propSets = renamedBloomProp(st.props, from, Some(to)) ++
+          featureDecl(st.props, "columnMapping")))
     }
-    result
+  }
+
+  /** The CHECK constraints whose expression mentions `column` as a word. */
+  private def constraintsNaming(st: Snapshot, column: String): Iterable[String] = {
+    val word = ("\\b" + java.util.regex.Pattern.quote(column) + "\\b").r
+    st.constraints.collect { case (n, e) if word.findFirstIn(e).isDefined => n }
   }
 
   /** ALTER TABLE ... DROP COLUMN as a METADATA-ONLY commit: the new
@@ -1801,45 +1670,27 @@ object TxLogTable {
     */
   def dropColumn(spark: SparkSession, tablePath: String,
       name: String): Long = {
-    val fs = fileSystem(spark, tablePath)
-    var result = -1L
-    var attempt = 0
-    while (result < 0) {
-      attempt += 1
-      if (attempt > MaxCommitRetries) throw new IllegalStateException(
-        s"gave up after $MaxCommitRetries drop-column attempts on $tablePath")
-      val commits = committedVersions(fs, tablePath)
-      require(commits.nonEmpty, s"not a TxLog table (no commits): $tablePath")
-      val st = replayState(fs, tablePath, commits.max, commits)
-      checkWriteProtocol(st.props, tablePath)
-      val phys = StructType.fromDDL(st.ddl.get)
-      val logical = logicalSchema(phys, st.renames).fieldNames.toSeq
+    val log = openLog(spark, tablePath)
+    commitLoop(log.fs, tablePath, log.state) { st =>
+      val phys = st.schema
+      val logical = st.logicalSchema.fieldNames.toSeq
       require(logical.contains(name),
         s"no such column '$name'; table has: ${logical.mkString(", ")}")
       require(phys.fields.length > 1,
         s"cannot drop the only column of $tablePath")
-      val word = ("\\b" + java.util.regex.Pattern.quote(name) + "\\b").r
-      val inConstraint = st.constraints.collect {
-        case (n, e) if word.findFirstIn(e).isDefined => n
-      }
+      val inConstraint = constraintsNaming(st, name)
       require(inConstraint.isEmpty,
         s"column '$name' is referenced by CHECK constraint(s) " +
           s"${inConstraint.mkString(", ")} — drop them before the column")
       val p = physicalNameOf(st.renames, name)
-      val newDdl = StructType(phys.fields.filterNot(_.name == p)).toDDL
-      try {
-        claimCommit(fs, tablePath, commits.max + 1L,
-          Commit("dropcolumn", newDdl, Nil,
-            op = Some(s"DROP COLUMN $name"),
-            renames = st.renames - p, dropped = st.dropped + p,
-            // column-naming properties shed the dropped column; a
-            // declared protocol picks up columnMapping on first use
-            propSets = renamedBloomProp(st.props, name, None) ++
-              featureDecl(st.props, "columnMapping")))
-        result = commits.max + 1L
-      } catch { case _: CommitConflict => () }
+      Some(Commit("dropcolumn", StructType(phys.fields.filterNot(_.name == p)).toDDL,
+        Nil, op = Some(s"DROP COLUMN $name"),
+        renames = st.renames - p, dropped = st.dropped + p,
+        // column-naming properties shed the dropped column; a
+        // declared protocol picks up columnMapping on first use
+        propSets = renamedBloomProp(st.props, name, None) ++
+          featureDecl(st.props, "columnMapping")))
     }
-    result
   }
 
   /** MATERIALIZE the column mapping: one overwrite commit that
@@ -1855,26 +1706,18 @@ object TxLogTable {
     * No-op (returns the current version) when no mapping is active.
     */
   def materializeColumns(spark: SparkSession, tablePath: String): Long = {
-    val fs = fileSystem(spark, tablePath)
-    val commits = committedVersions(fs, tablePath)
-    require(commits.nonEmpty, s"not a TxLog table (no commits): $tablePath")
-    val snap = snapshot(fs, tablePath, Some(commits.max))
-    if (snap.renames.isEmpty && snap.dropped.isEmpty) return commits.max
-    overwrite(
-      toLogicalDf(snapFrame(spark, tablePath, snap, snap.files), snap.renames),
-      tablePath)
+    val snap = openLog(spark, tablePath).snapshot()
+    if (snap.renames.isEmpty && snap.dropped.isEmpty) snap.version
+    else write(frame(spark, tablePath, snap), tablePath, overwrite = true,
+      txn = None, base = Some(snap))
   }
 
   /** The table's active column mapping, physical → logical (empty when
     * no column has been renamed).
     */
   def columnMapping(spark: SparkSession,
-      tablePath: String): Map[String, String] = {
-    val fs = fileSystem(spark, tablePath)
-    val commits = committedVersions(fs, tablePath)
-    require(commits.nonEmpty, s"not a TxLog table (no commits): $tablePath")
-    replayState(fs, tablePath, commits.max, commits).renames
-  }
+      tablePath: String): Map[String, String] =
+    openLog(spark, tablePath).state.renames
 
   private def buildFrame(spark: SparkSession, tablePath: String,
       files: Seq[String], schema: StructType): DataFrame =
@@ -1986,13 +1829,11 @@ object TxLogTable {
   def deleteVectors(spark: SparkSession, tablePath: String,
       predicate: String): Long = {
     import org.apache.spark.sql.functions.{col, expr, lit}
-    val fs = fileSystem(spark, tablePath)
-    val commits = committedVersions(fs, tablePath)
-    require(commits.nonEmpty, s"not a TxLog table (no commits): $tablePath")
-    val base = commits.max
-    val snap = snapshot(fs, tablePath, Some(base))
+    val log = openLog(spark, tablePath)
+    val fs = log.fs
+    val snap = log.snapshot()
     checkWriteProtocol(snap.props, tablePath) // a dv delete is a write
-    if (snap.files.isEmpty) return base
+    if (snap.files.isEmpty) return snap.version
     // candidate files by committed stats would also work; the matched
     // scan below already pushes the predicate into parquet row groups.
     // Predicates are user-authored → filter under logical names.
@@ -2013,23 +1854,16 @@ object TxLogTable {
       .write.parquet(dvPath.toString)
     val touchedNames = obs.get("files")
       .asInstanceOf[scala.collection.Seq[Any]].map(_.toString).toSet
-    if (touchedNames.isEmpty) { fs.delete(dvPath, true); return base }
+    if (touchedNames.isEmpty) { fs.delete(dvPath, true); return snap.version }
     val byName = snap.files.map(e =>
       new Path(dataFilePath(tablePath, e)).getName -> e).toMap
     val touched = touchedNames.toSeq.sorted.map(n => byName.getOrElse(n,
       throw new IllegalStateException(
         s"matched file $n is not a committed entry of $tablePath")))
-    var attempt = 0
-    var result = -1L
-    while (result < 0) {
-      attempt += 1
-      if (attempt > MaxCommitRetries) throw new IllegalStateException(
-        s"gave up after $MaxCommitRetries dv-commit attempts on $tablePath")
-      val latest = committedVersions(fs, tablePath).max
-      // the vectors were computed against `base`'s rows: if a
+    val result = commitLoop(fs, tablePath, snap) { now =>
+      // the vectors were computed against `snap`'s rows: if a
       // concurrent rewrite/overwrite replaced a touched file, those
       // row indexes no longer mean anything — abort, never corrupt
-      val now = snapshot(fs, tablePath, Some(latest))
       val liveNow = now.files.toSet
       val gone = touched.filterNot(liveNow)
       if (gone.nonEmpty) {
@@ -2051,19 +1885,15 @@ object TxLogTable {
             s"on ${drift.size} matched file(s) (e.g. ${drift.head}); " +
             "rerun the delete")
       }
-      try {
-        claimCommit(fs, tablePath, latest + 1L,
-          Commit("dv", snap.schema.toDDL, Nil,
-            op = Some("delete (vectors)"),
-            dvAdds = touched.map(f => f -> Seq(dvName)).toMap,
-            // a declared protocol picks up deletionVectors on first
-            // use — from the CURRENT props (`now`, re-read every
-            // attempt), so a retry after a conflicting commit that
-            // declared another feature unions with it instead of
-            // overwriting the lists with pre-race state
-            propSets = featureDecl(now.props, "deletionVectors")))
-        result = latest + 1L
-      } catch { case _: CommitConflict => () }
+      Some(Commit("dv", snap.schema.toDDL, Nil,
+        op = Some("delete (vectors)"),
+        dvAdds = touched.map(f => f -> Seq(dvName)).toMap,
+        // a declared protocol picks up deletionVectors on first
+        // use — from the CURRENT props (`now`, advanced on every
+        // retry), so a retry after a conflicting commit that
+        // declared another feature unions with it instead of
+        // overwriting the lists with pre-race state
+        propSets = featureDecl(now.props, "deletionVectors")))
     }
     // exact O(diff) change feed: the newly-masked rows are the delete
     // rows of this version, already computed (cached physical)
@@ -2088,16 +1918,14 @@ object TxLogTable {
       set: Map[String, String]): Long = {
     import org.apache.spark.sql.functions.{col, expr, lit}
     require(set.nonEmpty, "update needs at least one SET assignment")
-    val fs = fileSystem(spark, tablePath)
-    val commits = committedVersions(fs, tablePath)
-    require(commits.nonEmpty, s"not a TxLog table (no commits): $tablePath")
-    val base = commits.max
-    val snap = snapshot(fs, tablePath, Some(base))
+    val log = openLog(spark, tablePath)
+    val fs = log.fs
+    val snap = log.snapshot()
     val lsch = snap.logicalSchema // SET/WHERE are user-authored → logical
     val unknown = set.keySet -- lsch.fieldNames.toSet
     require(unknown.isEmpty,
       s"update assigns to column(s) not in the table: ${unknown.mkString(", ")}")
-    if (snap.files.isEmpty) return base
+    if (snap.files.isEmpty) return snap.version
     val matched = toLogicalDf(liveMetaFrame(spark, tablePath, snap),
       snap.renames).filter(expr(where))
     val dvName = java.util.UUID.randomUUID().toString
@@ -2110,7 +1938,7 @@ object TxLogTable {
       .write.parquet(dvPath.toString)
     val touchedNames = obs.get("files")
       .asInstanceOf[scala.collection.Seq[Any]].map(_.toString).toSet
-    if (touchedNames.isEmpty) { fs.delete(dvPath, true); return base }
+    if (touchedNames.isEmpty) { fs.delete(dvPath, true); return snap.version }
     val byName = snap.files.map(e =>
       new Path(dataFilePath(tablePath, e)).getName -> e).toMap
     val touched = touchedNames.toSeq.sorted.map(n => byName.getOrElse(n,
@@ -2128,7 +1956,7 @@ object TxLogTable {
         overwrite = false, txn = None,
         actionOverride = Some("dv"), op = Some("update (vectors)"),
         dvAdds = touched.map(f => f -> Seq(dvName)).toMap,
-        expectDvs = snap.dvs)
+        expectDvs = snap.dvs, base = Some(snap))
       catch { case e: Throwable => fs.delete(dvPath, true); throw e }
     writeCdfCache(spark, tablePath, v, toPhysicalDf(
       oldImages.exceptAll(newImages).withColumn("_change_type", lit("delete"))
@@ -2137,20 +1965,9 @@ object TxLogTable {
     v
   }
 
-  /** Files whose recorded range can intersect `[lower, upper]`; files
-    * with no usable stats for `column` (or a bound whose type does not
-    * match the recorded kind) are kept unconditionally.
+  /** Whether `cs`'s recorded range can intersect `[lower, upper]`; a
+    * bound whose type does not match the recorded kind keeps the file.
     */
-  private def pruneFiles(snap: Snapshot, column: String,
-      lower: Option[Any], upper: Option[Any]): Seq[String] =
-    if (lower.isEmpty && upper.isEmpty) snap.files
-    else snap.files.filter { f =>
-      snap.stats.get(f).flatMap(_.get(column)) match {
-        case None     => true
-        case Some(cs) => mayIntersect(cs, lower, upper)
-      }
-    }
-
   private def mayIntersect(cs: ColStats, lower: Option[Any],
       upper: Option[Any]): Boolean = {
     def dec(s: String): String =
@@ -2511,7 +2328,7 @@ object TxLogTable {
     */
   def fastCount(spark: SparkSession, tablePath: String,
       asOfVersion: Option[Long] = None): Long = {
-    val snap = snapshot(fileSystem(spark, tablePath), tablePath, asOfVersion)
+    val snap = openLog(spark, tablePath).snapshot(asOfVersion)
     // files with outstanding deletion vectors count exactly (masked
     // scan); clean files keep the metadata-only path
     val (dvFiles, clean) = snap.files.partition(snap.dvs.contains)
@@ -2527,45 +2344,33 @@ object TxLogTable {
     fromStats + fromData
   }
 
-  /** Highest committed epoch for `appId`, if any commit carries it
-    * (checkpoint-accelerated like any other state read).
-    */
-  private def lastEpoch(fs: FileSystem, tablePath: String,
-      versions: Seq[Long], appId: String): Option[Long] =
-    if (versions.isEmpty) None
-    else replayState(fs, tablePath, versions.max, versions).txns.get(appId)
-
   private def write(df0: DataFrame, tablePath: String, overwrite: Boolean,
       txn: Option[(String, Long)], removes: Seq[String] = Seq.empty,
       actionOverride: Option[String] = None,
       mergeSchema: Boolean = false,
       op: Option[String] = None,
       dvAdds: Map[String, Seq[String]] = Map.empty,
-      expectDvs: Map[String, Seq[String]] = Map.empty): Long = {
+      expectDvs: Map[String, Seq[String]] = Map.empty,
+      base: Option[Snapshot] = None): Long = {
     val commitAction = actionOverride.getOrElse(
       if (overwrite) "overwrite"
       else if (removes.nonEmpty) "compact"
       else "append")
     val spark = df0.sparkSession
     val fs = fileSystem(spark, tablePath)
+    // the operation's one snapshot: the checks before staging and the
+    // commit loop's first attempt both read it
+    val snap = base.getOrElse(new TxLog(fs, tablePath).current)
     // column mapping: batches arrive under LOGICAL names; files and
     // the committed DDL stay physical, so map before staging. An
     // overwrite replaces the schema (and resets the mapping), so its
     // batch IS the new physical truth — no translation. Internal
     // rewrites pass physical-named frames, for which this is a no-op.
-    val (curRenames, curDropped, curProps) = {
-      val commits0 = committedVersions(fs, tablePath)
-      if (commits0.isEmpty)
-        (Map.empty[String, String], Set.empty[String],
-          Map.empty[String, String])
-      else {
-        val st0 = replayState(fs, tablePath, commits0.max, commits0)
-        // an overwrite resets the mapping/tombstones but properties
-        // survive it (bloom columns keep applying to the new data)
-        if (overwrite) (Map.empty[String, String], Set.empty[String], st0.props)
-        else (st0.renames, st0.dropped, st0.props)
-      }
-    }
+    // Properties survive an overwrite (bloom columns keep applying).
+    val (curRenames, curDropped) =
+      if (overwrite) (Map.empty[String, String], Set.empty[String])
+      else (snap.renames, snap.dropped)
+    val curProps = snap.props
     // protocol gate: unknown required features block the write BEFORE
     // any staging cost
     checkWriteProtocol(curProps, tablePath)
@@ -2615,11 +2420,9 @@ object TxLogTable {
 
     // replayed transaction: the epoch is already in the log — skip
     // before paying for the staging write
-    txn.foreach { case (appId, epoch) =>
-      val commits0 = committedVersions(fs, tablePath)
-      if (lastEpoch(fs, tablePath, commits0, appId).exists(_ >= epoch))
-        return commits0.max
-    }
+    def replayed(s: Snapshot): Boolean =
+      txn.exists { case (appId, epoch) => s.txns.get(appId).exists(_ >= epoch) }
+    if (replayed(snap)) return snap.version
 
     // 1. stage with full parallelism, invisible to readers
     val stagingId = java.util.UUID.randomUUID().toString
@@ -2632,76 +2435,52 @@ object TxLogTable {
     // rewrites rows that already passed). Validated against the
     // STAGED parquet — one pruned re-read of the batch, no upstream
     // recompute, and exactly the bytes that would land.
-    if (commitAction != "compact" && staged.nonEmpty) {
-      val cons = {
-        val commits0 = committedVersions(fs, tablePath)
-        if (commits0.isEmpty) Map.empty[String, String]
-        else replayState(fs, tablePath, commits0.max, commits0).constraints
-      }
-      if (cons.nonEmpty) {
-        import org.apache.spark.sql.functions.{coalesce, expr, lit}
-        // validate against the staged bytes, with table columns the
-        // batch omits (mergeSchema appends) null-filled — a CHECK on
-        // an omitted column sees NULL and passes, matching what the
-        // committed read will serve
-        val raw = spark.read.schema(df.schema)
-          .parquet(staged.map(_.toString).toSeq: _*)
-        val stagedDf = toLogicalDf({
-          val commits0 = committedVersions(fs, tablePath)
-          if (commits0.isEmpty) raw
-          else {
-            val have = df.schema.fieldNames.toSet
-            StructType.fromDDL(parseCommit(fs, tablePath, commits0.max).schemaDdl)
-              .fields.filterNot(f => have.contains(f.name))
-              .foldLeft(raw)((d, f) =>
-                d.withColumn(f.name, lit(null).cast(f.dataType)))
+    if (commitAction != "compact" && staged.nonEmpty && snap.constraints.nonEmpty) {
+      import org.apache.spark.sql.functions.{coalesce, expr, lit}
+      // validate against the staged bytes, with table columns the
+      // batch omits (mergeSchema appends) null-filled — a CHECK on
+      // an omitted column sees NULL and passes, matching what the
+      // committed read will serve
+      val raw = spark.read.schema(df.schema)
+        .parquet(staged.map(_.toString).toSeq: _*)
+      val have = df.schema.fieldNames.toSet
+      val stagedDf = toLogicalDf(
+        snap.schema.fields.filterNot(f => have.contains(f.name))
+          .foldLeft(raw)((d, f) => d.withColumn(f.name, lit(null).cast(f.dataType))),
+        curRenames) // constraints are written in LOGICAL terms
+      val broken = snap.constraints.toSeq.sortBy(_._1).iterator.flatMap { case (n, e) =>
+        val bad =
+          try stagedDf.filter(coalesce(expr(e), lit(true)) === false)
+            .limit(1).collect()
+          catch { case ex: org.apache.spark.sql.AnalysisException =>
+            fs.delete(staging, true)
+            throw new IllegalArgumentException(
+              s"batch schema [${df.schema.toDDL}] breaks constraint '$n' " +
+                s"CHECK ($e): ${ex.getMessage} — drop the constraint or fix " +
+                "the schema", ex)
           }
-        }, curRenames) // constraints are written in LOGICAL terms
-        val broken = cons.toSeq.sortBy(_._1).iterator.flatMap { case (n, e) =>
-          val bad =
-            try stagedDf.filter(coalesce(expr(e), lit(true)) === false)
-              .limit(1).collect()
-            catch { case ex: org.apache.spark.sql.AnalysisException =>
-              fs.delete(staging, true)
-              throw new IllegalArgumentException(
-                s"batch schema [${df.schema.toDDL}] breaks constraint '$n' " +
-                  s"CHECK ($e): ${ex.getMessage} — drop the constraint or fix " +
-                  "the schema", ex)
-            }
-          bad.headOption.map(r => (n, e, r))
-        }.take(1).toSeq
-        broken.headOption.foreach { case (n, e, r) =>
-          fs.delete(staging, true)
-          throw new ConstraintViolation(
-            s"write to $tablePath rejected: row $r violates constraint " +
-              s"'$n' CHECK ($e)")
-        }
+        bad.headOption.map(r => (n, e, r))
+      }.take(1).toSeq
+      broken.headOption.foreach { case (n, e, r) =>
+        fs.delete(staging, true)
+        throw new ConstraintViolation(
+          s"write to $tablePath rejected: row $r violates constraint " +
+            s"'$n' CHECK ($e)")
       }
     }
 
-    // 2..3. move into data/ under a version-stamped name, then race
-    // for the commit file; on a lost race re-claim under the next
-    // version (our files are unreferenced until a commit names them,
-    // so the retry republishes the same data, never duplicates it)
-    var attempt = 0
-    var published: Option[(Long, Seq[String])] = None
+    // 2..3. move into data/ under a uuid-stamped name, then race for
+    // the commit file; on a lost race re-claim under the next version
+    // (our files are unreferenced until a commit names them, so the
+    // retry republishes the same data, never duplicates it)
+    var published: Option[Seq[String]] = None
     var fileStats = Map.empty[String, Map[String, ColStats]]
-    var result = -1L
-    try {
-      while (result < 0) {
-        attempt += 1
-        if (attempt > MaxCommitRetries)
-          throw new IllegalStateException(
-            s"gave up after $MaxCommitRetries commit attempts on $tablePath")
-        val commits = committedVersions(fs, tablePath)
-        // a concurrent writer may have landed our epoch while we
-        // raced — re-check under every retry so a replayed batch can
-        // never double-commit (our moved files become vacuumable)
-        txn.foreach { case (appId, epoch) =>
-          if (lastEpoch(fs, tablePath, commits, appId).exists(_ >= epoch))
-            return commits.max
-        }
-        val version = if (commits.isEmpty) 1L else commits.max + 1L
+    try commitLoop(fs, tablePath, snap) { cur =>
+      // a concurrent writer may have landed our epoch while we raced
+      // — re-checked on every attempt so a replayed batch can never
+      // double-commit (our moved files become vacuumable)
+      if (replayed(cur)) None
+      else {
         // compaction rewrites the table's own rows, so it keeps the
         // committed DDL verbatim (reading parquet back relaxes
         // nullability, which must not masquerade as schema evolution).
@@ -2710,25 +2489,22 @@ object TxLogTable {
         // through parquet relaxes nullability, so merge → append would
         // otherwise spuriously fail) — and keep the TABLE's DDL so
         // the committed schema never flip-flops.
-        var commitDdl = ddl
-        if (!overwrite && commits.nonEmpty) {
-          val current = parseCommit(fs, tablePath, commits.max).schemaDdl
-          if (removes.nonEmpty) commitDdl = current
-          else if (mergeSchema) {
+        val commitDdl = cur.ddl.filter(_ => !overwrite) match {
+          case None => ddl
+          case Some(current) if removes.nonEmpty => current
+          case Some(_) if mergeSchema =>
             // evolution: table columns keep their order and exact
             // type; batch-only columns append (nullable — old files
             // null-fill them on read). Type drift on a common column
             // is rejected, never coerced.
-            val cur = StructType.fromDDL(current)
-            val curNames = cur.fieldNames.toSet
-            val batch = df.schema
-            val batchByName = batch.fields.map(f => f.name -> f).toMap
-            for (f <- cur.fields; b <- batchByName.get(f.name))
+            val curNames = cur.schema.fieldNames.toSet
+            val batchByName = df.schema.fields.map(f => f.name -> f).toMap
+            for (f <- cur.schema.fields; b <- batchByName.get(f.name))
               require(b.dataType == f.dataType,
                 s"appendEvolve cannot change column '${f.name}' from " +
                   s"${f.dataType.sql} to ${b.dataType.sql} — type changes " +
                   "go through overwrite")
-            val added = batch.fields.filterNot(f => curNames.contains(f.name))
+            val added = df.schema.fields.filterNot(f => curNames.contains(f.name))
               .map(_.copy(nullable = true))
             // under column mapping, a new column must not shadow a
             // LOGICAL name either (its physical slot is taken)
@@ -2744,27 +2520,20 @@ object TxLogTable {
               s"appendEvolve cannot re-add dropped column(s) " +
                 s"${tombstoned.mkString(", ")} — use addColumns (it " +
                 "allocates a fresh physical slot), then append")
-            commitDdl = StructType(
-              cur.fields.map(_.copy(nullable = true)) ++ added).toDDL
-          } else {
+            StructType(cur.schema.fields.map(_.copy(nullable = true)) ++ added).toDDL
+          case Some(current) =>
             def relaxed(s: String): String = StructType(
               StructType.fromDDL(s).fields.map(_.copy(nullable = true))).toDDL
             require(relaxed(current) == relaxed(ddl),
               s"append schema mismatch: table has [$current], batch has [$ddl] " +
                 "— schema changes go through overwrite (or appendEvolve)")
-            commitDdl = current
-          }
+            current
         }
         // compaction must not resurrect files a concurrent overwrite/
         // compaction already removed — re-validate liveness on every
         // attempt; on violation the staged rewrite is abandoned as a
         // vacuumable orphan rather than committing stale data
-        val curState: Option[Snapshot] =
-          if ((removes.nonEmpty || dvAdds.nonEmpty) && commits.nonEmpty)
-            Some(snapshot(fs, tablePath, Some(commits.max)))
-          else None
         if (removes.nonEmpty || dvAdds.nonEmpty) {
-          val cur = curState.get
           val live = cur.files.toSet
           val dead = removes.filterNot(live) ++
             dvAdds.keys.filterNot(live) // vector row indexes are per-file
@@ -2783,61 +2552,42 @@ object TxLogTable {
               s"${drift.size} rewritten file(s) (e.g. ${drift.head}) since " +
               "this rewrite was computed; rerun the operation")
         }
-        val names = published match {
-          case Some((_, ns)) => ns // files already in data/ from a lost race
-          case None =>
-            val dataPath = new Path(tablePath, DataDir)
-            fs.mkdirs(dataPath)
-            // names are uuid-based and version-free: only the commit
-            // log binds a file to a version (a lost race re-publishes
-            // the same names under the next version)
-            val ns = staged.zipWithIndex.map { case (src, i) =>
-              val name = s"$stagingId-$i.parquet"
-              require(fs.rename(src, new Path(dataPath, name)),
-                s"failed to move staged file $src")
-              name
-            }.toSeq
-            val conf = spark.sparkContext.hadoopConfiguration
-            fileStats = ns.map { n =>
-              n -> footerStats(conf, new Path(dataPath, n))
-            }.filter(_._2.nonEmpty).toMap
-            // per-file BLOOM filters for the opted-in point-lookup
-            // columns (property graft.bloom.columns) — one extra
-            // column-pruned pass over the batch just written
-            fileStats = addBloomStats(spark, tablePath, ns, df.schema,
-              curProps, curRenames, fileStats)
-            published = Some((version, ns))
-            ns
+        val names = published.getOrElse {
+          val dataPath = new Path(tablePath, DataDir)
+          fs.mkdirs(dataPath)
+          // names are uuid-based and version-free: only the commit
+          // log binds a file to a version (a lost race re-publishes
+          // the same names under the next version)
+          val ns = staged.zipWithIndex.map { case (src, i) =>
+            val name = s"$stagingId-$i.parquet"
+            require(fs.rename(src, new Path(dataPath, name)),
+              s"failed to move staged file $src")
+            name
+          }.toSeq
+          val conf = spark.sparkContext.hadoopConfiguration
+          fileStats = ns.map { n =>
+            n -> footerStats(conf, new Path(dataPath, n))
+          }.filter(_._2.nonEmpty).toMap
+          // per-file BLOOM filters for the opted-in point-lookup
+          // columns (property graft.bloom.columns) — one extra
+          // column-pruned pass over the batch just written
+          fileStats = addBloomStats(spark, tablePath, ns, df.schema,
+            curProps, curRenames, fileStats)
+          published = Some(ns)
+          ns
         }
         // a declared protocol must list every feature in use: the
-        // first DV commit rides its own declaration, derived from the
-        // PER-ATTEMPT snapshot (curState) — never from curProps read
-        // before staging. A commit landing during the seconds-long
-        // staging window (no CommitConflict fires for it) could have
-        // extended the feature lists; pre-race props would overwrite
-        // its additions and under-state the protocol
+        // first DV commit rides its own declaration, derived from this
+        // attempt's snapshot — a commit that landed while we staged
+        // may have extended the feature lists, and pre-race props
+        // would overwrite its additions and under-state the protocol
         val dvDecl =
           if (dvAdds.isEmpty) Map.empty[String, String]
-          else featureDecl(
-            curState.map(_.props).getOrElse(curProps), "deletionVectors")
-        try {
-          claimCommit(fs, tablePath, version,
-            Commit(commitAction, commitDdl, names, txn, fileStats, removes,
-              op = op, dvAdds = dvAdds,
-              propSets = dvDecl))
-          result = version
-        } catch {
-          case _: CommitConflict => () // loop: re-read log, next version
-        }
+          else featureDecl(cur.props, "deletionVectors")
+        Some(Commit(commitAction, commitDdl, names, txn, fileStats, removes,
+          op = op, dvAdds = dvAdds, propSets = dvDecl))
       }
     } finally fs.delete(staging, true)
-    // fold a checkpoint on the interval (and after every compaction);
-    // best-effort — a checkpoint is a cache, a failed one only costs
-    // the next reader a longer replay
-    if (result % CheckpointInterval == 0 || removes.nonEmpty)
-      try writeCheckpoint(fs, tablePath, result)
-      catch { case scala.util.control.NonFatal(_) => () }
-    result
   }
 
   /** Serializes same-JVM commit claims: the filesystem's no-replace
@@ -2857,18 +2607,16 @@ object TxLogTable {
     * version.
     */
   private def claimCommit(fs: FileSystem, tablePath: String, version: Long,
-      c: Commit): Unit = {
+      c: Commit, prevTs: Option[Long]): Long = {
     val logPath = new Path(tablePath, LogDir)
     fs.mkdirs(logPath)
     val commitPath = new Path(logPath, commitName(version))
     if (fs.exists(commitPath)) throw new CommitConflict(version)
     // IN-COMMIT timestamp (the public protocol's inCommitTimestamp):
     // recorded in the commit body, monotonic past the previous
-    // version, so time travel by timestamp survives file copies,
-    // clock skew between writers, and mtime-rewriting storage.
-    val prevTs = if (version <= 1L) None
-      else scala.util.Try(
-        parseCommit(fs, tablePath, version - 1).ts).toOption.flatten
+    // version's (`prevTs`, from the snapshot the commit was built
+    // on), so time travel by timestamp survives file copies, clock
+    // skew between writers, and mtime-rewriting storage.
     val commitTs = math.max(System.currentTimeMillis(),
       prevTs.map(_ + 1L).getOrElse(Long.MinValue))
     val body = new StringBuilder()
@@ -2920,12 +2668,19 @@ object TxLogTable {
     try out.write(body.toString.getBytes(StandardCharsets.UTF_8))
     finally out.close()
     val claimed = claimLock.synchronized {
-      !fs.exists(commitPath) && fs.rename(tmp, commitPath)
+      // versions are dense and retention deletes only commits below a
+      // checkpoint, so a missing predecessor means `version` itself was
+      // committed and expired: claiming it again would bury this commit
+      // under that checkpoint, unseen by every reader
+      !fs.exists(commitPath) &&
+        (version == 1L || fs.exists(new Path(logPath, commitName(version - 1)))) &&
+        fs.rename(tmp, commitPath)
     }
     if (!claimed) {
       fs.delete(tmp, false)
       throw new CommitConflict(version)
     }
+    commitTs
   }
 
   private def parseCommit(fs: FileSystem, tablePath: String, version: Long): Commit = {
@@ -3013,7 +2768,7 @@ object TxLogTable {
     new String(Base64.getDecoder.decode(s), StandardCharsets.UTF_8)
 
   // --------------------------------------------------------------
-  // checkpoints — serialized State, same line format as commits plus
+  // checkpoints — serialized snapshots, same line format as commits plus
   // a trailing end marker so a torn file can never parse as complete
 
   private def checkpointName(version: Long): String =
@@ -3041,31 +2796,21 @@ object TxLogTable {
     if (!fs.rename(tmp, target)) fs.delete(tmp, false)
   }
 
-  private def checkpointVersions(fs: FileSystem, tablePath: String): Seq[Long] = {
-    val logPath = new Path(tablePath, LogDir)
-    if (!fs.exists(logPath)) Seq.empty
-    else fs.listStatus(logPath).map(_.getPath.getName)
-      .filter(_.endsWith(".checkpoint.txt"))
-      .flatMap(n => scala.util.Try(
-        n.stripSuffix(".checkpoint.txt").toLong).toOption)
-      .toSeq
-  }
-
-  /** Write the checkpoint for `version` atomically (temp + rename);
-    * a lost rename race means another writer checkpointed the same
-    * version — equivalent content, so the loser just cleans up.
+  /** Write `st` as the checkpoint of its version atomically (temp +
+    * rename); a lost rename race means another writer checkpointed the
+    * same version — equivalent content, so the loser just cleans up.
     */
   private def writeCheckpoint(fs: FileSystem, tablePath: String,
-      version: Long, maxPartLines: Int = CheckpointMaxPartLines): Unit = {
+      st: Snapshot, maxPartLines: Int = CheckpointMaxPartLines): Unit = {
+    val version = st.version
     val logPath = new Path(tablePath, LogDir)
     val target = new Path(logPath, checkpointName(version))
     if (fs.exists(target)) return
-    val st = replayState(fs, tablePath, version,
-      committedVersions(fs, tablePath))
     val body = new StringBuilder()
       .append("schema=").append(st.ddl.getOrElse(
         throw new IllegalStateException(
           s"cannot checkpoint $tablePath@$version: no schema"))).append('\n')
+    st.ts.foreach(t => body.append("ts=").append(t).append('\n'))
     for ((a, e) <- st.txns.toSeq.sortBy(_._1)) {
       val aB64 = Base64.getEncoder
         .encodeToString(a.getBytes(StandardCharsets.UTF_8))
@@ -3119,7 +2864,7 @@ object TxLogTable {
     * checkpoint or full replay.
     */
   private def loadCheckpoint(fs: FileSystem, tablePath: String,
-      version: Long): Option[State] = scala.util.Try {
+      version: Long): Option[Snapshot] = scala.util.Try {
     val logPath = new Path(tablePath, LogDir)
     def readLines(p: Path): Array[String] = {
       val in = fs.open(p)
@@ -3201,20 +2946,12 @@ object TxLogTable {
         case _ => throw new IllegalStateException("bad prop line")
       }
     }.toMap
-    State(files, ddl, stats, txns, constraints, dvs, renames, droppedCols,
-      props)
+    Snapshot(version, ddl, files, stats, txns, constraints, dvs, renames,
+      droppedCols, props,
+      lines.collectFirst { case l if l.startsWith("ts=") => l.substring(3).toLong })
   }.toOption
 
   private def commitName(version: Long): String = f"$version%020d.txt"
-
-  private def committedVersions(fs: FileSystem, tablePath: String): Seq[Long] = {
-    val logPath = new Path(tablePath, LogDir)
-    if (!fs.exists(logPath)) Seq.empty
-    else fs.listStatus(logPath).map(_.getPath.getName)
-      .filter(_.endsWith(".txt"))
-      .flatMap(n => scala.util.Try(n.stripSuffix(".txt").toLong).toOption)
-      .toSeq
-  }
 
   private def fileSystem(spark: SparkSession, tablePath: String): FileSystem =
     new Path(tablePath).getFileSystem(spark.sparkContext.hadoopConfiguration)

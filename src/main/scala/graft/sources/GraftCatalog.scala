@@ -342,7 +342,7 @@ final class GraftTable(tablePath: String, ident: Identifier,
           }
       }
     } else {
-      val index = new TxLogCatalogFileIndex(spark, tablePath, asOfVersion)
+      val index = new TxLogCatalogFileIndex(spark, tablePath, snap)
       new GraftScanBuilder(
         ParquetScanBuilder(spark, index, schema, index.dataSchema, options),
         spark, tablePath, schema,
@@ -501,12 +501,12 @@ final class GraftMicroBatchStream(sparkSession: SparkSession,
       end: Offset): Array[org.apache.spark.sql.connector.read.InputPartition] = {
     val lo = start.asInstanceOf[VersionOffset].v
     val hi = end.asInstanceOf[VersionOffset].v
-    // ONE log listing serves the gap checks; ONE replay serves the
-    // per-batch protocol gate (a reader feature declared mid-stream
-    // via upgradeProtocol must stop the query, not have its commits
-    // replayed with legacy semantics)
-    val committed = TxLogTable.versions(sparkSession, tablePath)
-    TxLogTable.checkStreamReadProtocol(sparkSession, tablePath, committed)
+    // ONE log listing serves the whole batch. The reader gate runs on
+    // the latest snapshot every batch: a reader feature declared
+    // mid-stream via upgradeProtocol must stop the query, not have its
+    // commits replayed with legacy semantics
+    val log = TxLogTable.openLog(sparkSession, tablePath)
+    log.snapshot()
     def partitionsFor(names: Seq[String]) = {
       val conf = sparkSession.sparkContext.hadoopConfiguration
       val files = names.map { f =>
@@ -529,11 +529,11 @@ final class GraftMicroBatchStream(sparkSession: SparkSession,
     // snapshot carries no deletion vectors (the DV case bridges
     // through the V1Scan fallback, which has no micro-batch form).
     if (lo == 0L) {
-      if (!committed.contains(hi)) throw new IllegalStateException(
+      if (!log.has(hi)) throw new IllegalStateException(
         s"stream checkpoint pins initial snapshot version $hi of " +
           s"$tablePath, which was expired by log retention — the batch " +
           "cannot be reproduced. Restart from a fresh checkpoint")
-      val snap = TxLogTable.scanSnapshot(sparkSession, tablePath, Some(hi))
+      val snap = log.snapshot(Some(hi))
       // race guards, mirroring BOTH of the scan builder's V1-fallback
       // conditions: a deleteVectors or a rename/dropcolumn landing
       // between scan build (which chose this vectorized path on a
@@ -565,7 +565,7 @@ final class GraftMicroBatchStream(sparkSession: SparkSession,
     // retention guard: versions this batch owes that expireLog
     // reclaimed would be SILENTLY skipped by the commit replay below
     // (versions are dense — any hole is retention, not absence)
-    val missing = TxLogTable.missingVersions(committed, lo, hi)
+    val missing = log.missingVersions(lo, hi)
     if (missing.nonEmpty) throw new IllegalStateException(
       s"stream over $tablePath owes version(s) " +
         s"${missing.head}..${missing.last} which were expired by log " +
@@ -576,14 +576,14 @@ final class GraftMicroBatchStream(sparkSession: SparkSession,
     // a table with no declared protocol, but this vectorized path
     // cannot serve it (physical parquet names vs the stream's logical
     // start-schema → silent null-fill) — refuse loudly instead
-    val remaps = TxLogTable.mappingChangeVersions(sparkSession, tablePath, lo, hi)
+    val remaps = log.mappingChangeVersions(lo, hi)
     if (remaps.nonEmpty) throw new IllegalStateException(
       s"table $tablePath has column-mapping commit(s) " +
         s"${remaps.mkString(", ")} in the streamed range ($lo, $hi] — " +
         "restart the query from a fresh checkpoint (the scan re-plans " +
         "through the mapping-aware path)")
     if (!ignoreDeletes) {
-      val rewrites = TxLogTable.rewriteVersions(sparkSession, tablePath, lo, hi)
+      val rewrites = log.rewriteVersions(lo, hi)
       if (rewrites.nonEmpty) throw new IllegalStateException(
         s"table $tablePath has row-level delete/update commit(s) " +
           s"${rewrites.mkString(", ")} in the streamed range ($lo, $hi] — " +
@@ -591,7 +591,7 @@ final class GraftMicroBatchStream(sparkSession: SparkSession,
           "a fresh checkpoint, read the change feed, or set option " +
           "'ignoreDeletes' = true to stream inserts only")
     }
-    partitionsFor(TxLogTable.addedFiles(sparkSession, tablePath, lo, hi))
+    partitionsFor(log.addedFiles(lo, hi))
   }
 
   override def createReaderFactory()
@@ -605,11 +605,11 @@ final class GraftMicroBatchStream(sparkSession: SparkSession,
   * implementation serves both the format-based and the catalog read
   * paths.
   */
-final class TxLogCatalogFileIndex(sparkSession: SparkSession,
-    tablePath: String, asOfVersion: Option[Long])
+final class TxLogCatalogFileIndex private[graft] (sparkSession: SparkSession,
+    tablePath: String, snap: TxLogTable.Snapshot)
   extends PartitioningAwareFileIndex(sparkSession, Map.empty, None) {
 
-  private val inner = new TxLogFileIndex(sparkSession, tablePath, asOfVersion)
+  private val inner = new TxLogFileIndex(sparkSession, tablePath, snap)
 
   private lazy val statuses: Seq[FileStatus] =
     inner.listFiles(Nil, Nil).flatMap(_.files).map(_.fileStatus)

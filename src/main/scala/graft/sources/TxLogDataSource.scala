@@ -157,7 +157,7 @@ final class TxLogDataSource extends RelationProvider
               df.rdd
           }
         } else {
-          val index = new TxLogFileIndex(spark, path, version)
+          val index = new TxLogFileIndex(spark, path, snap)
           HadoopFsRelation(
             location = index,
             partitionSchema = StructType(Nil),
@@ -259,12 +259,12 @@ final class TxLogStreamSource(spark: SparkSession, tablePath: String,
       return graftshim.ColumnShim.internalCreateDataFrame(
         spark, aligned.queryExecution.toRdd, schema, isStreaming = true)
     }
-    // ONE log listing serves the gap check; ONE replay serves the
-    // per-batch protocol gate (a reader feature declared AFTER this
-    // source resolved snap0 must stop the query, not be replayed with
-    // legacy semantics)
-    val committed = TxLogTable.versions(spark, tablePath)
-    TxLogTable.checkStreamReadProtocol(spark, tablePath, committed)
+    // ONE log listing serves the whole batch. The reader gate runs on
+    // the latest snapshot every batch: a reader feature declared AFTER
+    // this source resolved snap0 must stop the query, not be replayed
+    // with legacy semantics
+    val log = TxLogTable.openLog(spark, tablePath)
+    log.snapshot()
     // INITIAL batch of a fresh stream: serve the SNAPSHOT at `hi`
     // (the public lake sources' semantics), not the append-commit
     // replay — on a retention-managed table the early appends live
@@ -276,12 +276,12 @@ final class TxLogStreamSource(spark: SparkSession, tablePath: String,
       // snapshot version that log retention may have reclaimed — the
       // exact batch is unrecoverable, so fail with the retention
       // story, not a bare version-missing error
-      if (!committed.contains(hi))
+      if (!log.has(hi))
         throw new IllegalStateException(
           s"stream checkpoint pins initial snapshot version $hi of " +
             s"$tablePath, which was expired by log retention — the " +
             "batch cannot be reproduced. Restart from a fresh checkpoint")
-      val snapDf = TxLogTable.read(spark, tablePath, Some(hi))
+      val snapDf = TxLogTable.frame(spark, tablePath, log.snapshot(Some(hi)))
       val aligned = snapDf.select(schema.fieldNames.toSeq.map { n =>
         if (snapDf.columns.contains(n)) org.apache.spark.sql.functions.col(n)
         else org.apache.spark.sql.functions.lit(null)
@@ -298,7 +298,7 @@ final class TxLogStreamSource(spark: SparkSession, tablePath: String,
     // RESTART below the retention horizon: versions the checkpointed
     // offset still owes were expired — the survivors would stream as
     // if complete, silently dropping the expired commits' rows
-    val missing = TxLogTable.missingVersions(committed, lo, hi)
+    val missing = log.missingVersions(lo, hi)
     if (missing.nonEmpty) throw new IllegalStateException(
       s"stream checkpoint resumes at version $lo of $tablePath but " +
         s"version(s) ${missing.head}..${missing.last} were expired by " +
@@ -310,7 +310,7 @@ final class TxLogStreamSource(spark: SparkSession, tablePath: String,
     // wrong, so fail loudly unless the user opted in — the public
     // lake-table streaming source's ignoreDeletes contract
     if (!ignoreDeletes) {
-      val rewrites = TxLogTable.rewriteVersions(spark, tablePath, lo, hi)
+      val rewrites = log.rewriteVersions(lo, hi)
       if (rewrites.nonEmpty) throw new IllegalStateException(
         s"table $tablePath has row-level delete/update commit(s) " +
           s"${rewrites.mkString(", ")} in the streamed range ($lo, $hi] — " +
@@ -318,7 +318,7 @@ final class TxLogStreamSource(spark: SparkSession, tablePath: String,
           "a fresh checkpoint, read the change feed (changesFrom), or set " +
           "option 'ignoreDeletes' = true to stream inserts only")
     }
-    val files = TxLogTable.addedFiles(spark, tablePath, lo, hi)
+    val files = log.addedFiles(lo, hi)
     // the engine requires isStreaming=true on the returned plan; a
     // plain parquet read is batch-tagged, so retag its LogicalRelation
     // (empty ranges return a streaming-tagged empty LocalRelation)
@@ -357,10 +357,12 @@ final class TxLogStreamSource(spark: SparkSession, tablePath: String,
   * (unknown shapes, wrong types, stats-less files all pass through);
   * the filters still run post-scan, so results are exact regardless.
   */
-final class TxLogFileIndex(spark: SparkSession, tablePath: String,
-    asOfVersion: Option[Long]) extends FileIndex {
+final class TxLogFileIndex private[graft] (spark: SparkSession,
+    tablePath: String, snap: TxLogTable.Snapshot) extends FileIndex {
 
-  private val snap = TxLogTable.scanSnapshot(spark, tablePath, asOfVersion)
+  def this(spark: SparkSession, tablePath: String, asOfVersion: Option[Long]) =
+    this(spark, tablePath, TxLogTable.scanSnapshot(spark, tablePath, asOfVersion))
+
   private val dataDir = new Path(tablePath, "data")
   private val fs =
     dataDir.getFileSystem(spark.sparkContext.hadoopConfiguration)

@@ -933,4 +933,21 @@ class TxLogTableSpec extends SparkSpec {
     assert(rows(TxLogTable.read(spark, t, Some(v2 - 1))) ===
       Set((1L, "a"), (2L, "b")))
   }
+
+  test("a metadata commit at v10 writes checkpoint 10; a read at v19 opens at most 10 log files") {
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.countlog.impl", classOf[CountingLogFs].getName)
+    val t = s"countlog://${Files.createTempDirectory("txlog-ckpt")}/t"
+    def add(i: Int): Long =
+      TxLogTable.append(Seq((i.toLong, s"r$i")).toDF("id", "v").coalesce(1), t)
+    for (i <- 1 to 9) add(i)
+    assert(TxLogTable.setProperties(spark, t, Map("tier" -> "bronze")) === 10L)
+    assert(TxLogTable.checkpoints(spark, t) === Seq(10L))
+    for (i <- 11 to 19) add(i)
+    CountingLogFs.reset()
+    assert(rows(TxLogTable.read(spark, t)).size === 18)
+    val opened = CountingLogFs.opens.values.sum
+    assert(opened <= TxLogTable.CheckpointInterval,
+      s"a read at v19 opened $opened log files: ${CountingLogFs.opens}")
+  }
 }
