@@ -2360,7 +2360,7 @@ object TxLogTable {
     val fs = fileSystem(spark, tablePath)
     // the operation's one snapshot: the checks before staging and the
     // commit loop's first attempt both read it
-    val snap = base.getOrElse(new TxLog(fs, tablePath).current)
+    val snap = base.getOrElse(openLog(spark, tablePath).current)
     // column mapping: batches arrive under LOGICAL names; files and
     // the committed DDL stay physical, so map before staging. An
     // overwrite replaces the schema (and resets the mapping), so its
