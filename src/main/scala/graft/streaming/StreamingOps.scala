@@ -2,9 +2,10 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 import org.apache.spark.sql.types._
-import graft.ops.Merge
+import graft.ops.{Dedup, Merge, Pinned}
+import graft.sink.TxLogTable
 
 /** Structured Streaming variants of the batch event analytics: the
   * same logical computations as q25 (tumbling window) and q27
@@ -558,39 +559,94 @@ object StreamingOps {
       }
       .start()
 
+  /** What one member of the streaming dedup family computes from a
+    * micro-batch collapsed to one row per id: its co-arrival pairs
+    * (`self`), its pairs against the stored state (`stored`), and,
+    * from the pinned drops, its state appends as (table, txn suffix,
+    * frame) in append order.
+    */
+  private final case class DedupStep(self: DataFrame, stored: DataFrame,
+      state: DataFrame => Seq[(String, String, DataFrame)])
+
+  /** The micro-batch loop of the five streaming dedup ingests below:
+    * the incremental probe-against-state shape (PAPERS.md, EDBT 2020)
+    * run as a stream. Per micro-batch (`foreachBatch`):
+    *  1. collapse the batch to one row per id, order-free, by `min`
+    *     over `payloadCol`. At-least-once sources can deliver one row
+    *     twice in a batch, and each copy would otherwise keep the
+    *     other alive through the self-probe's `new_id > seen_id` and
+    *     the left-anti, duplicating state rows;
+    *  2. the member probes the batch against ITSELF, UNCAPPED, and the
+    *     stored state, capped. A micro-batch is bounded by
+    *     construction; a capped self-index would silently admit more
+    *     than the cap of co-arriving copies that any sequential
+    *     one-at-a-time ingest collapses (the hot bucket would drop
+    *     from the self-index, and every copy would enter the state);
+    *  3. the union of both pair sets is pinned and appended to
+    *     `outTable`, THEN the member's state appends follow in its
+    *     order. A doc dropped in batch N never enters the state, so
+    *     batch N+1 cannot match it;
+    *  4. every frame the loop or the member pinned is released, also
+    *     when an append throws.
+    * Every append is txn-tagged (`s"$appId-<suffix>"`, batchId), so a
+    * replayed micro-batch no-ops on each table it already committed
+    * to and the state stays exactly-once over at-least-once delivery:
+    * a batch killed between its appends replays on restart, and only
+    * the appends it missed land. The suffixes (`-out`, `-sig`,
+    * `-hash`, `-idx`, `-reps`) are the epoch identities committed in
+    * existing tables; renaming one makes a restarted query append its
+    * last batch again.
+    *
+    * Co-arrival contract: the HIGHER id of every verified same-batch
+    * pair drops, even if its lower partner also drops against the
+    * stored state. That is the batch-parallel clique collapse,
+    * deliberately order-free so the verdict is independent of
+    * intra-batch arrival order (a strictly sequential one-doc-at-a-
+    * time replay could keep such a doc; a deterministic stream cannot
+    * depend on intra-batch order).
+    *
+    * Not oracle-suite queries, except once: a few drained micro-
+    * batches cost ~8 s of stream/commit machinery regardless of data
+    * size (measured — 1/7th of sf0.1 still 8.4 s vs 12.8 s full),
+    * which says nothing about the plans. Each member's sequential
+    * semantics are oracle-gated by its batch query and its
+    * stream == sequential composition by its spec; q320 runs this loop
+    * under the oracle through the cheapest member, [[exactDedupIngest]].
+    */
+  private def dedupIngest(stream: DataFrame, outTable: String,
+      appId: String, checkpoint: String, idCol: String, payloadCol: String)(
+      member: (DataFrame, DataFrame => DataFrame) => DedupStep): StreamingQuery =
+    stream.writeStream
+      .option("checkpointLocation", checkpoint)
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        val pins = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+        def pin(df: DataFrame): DataFrame = { val p = Pinned.pin(df); pins += p; p }
+        def append(df: DataFrame, table: String, suffix: String): Unit =
+          TxLogTable.append(df, table, Some((s"$appId-$suffix", batchId)))
+        try {
+          val step = member(
+            batch.groupBy(idCol).agg(min(col(payloadCol)).as(payloadCol)), pin)
+          val drops = pin(step.stored.unionAll(step.self))
+          append(drops, outTable, "out")
+          for ((table, suffix, df) <- step.state(drops)) append(df, table, suffix)
+        } finally pins.foreach(Pinned.release(_))
+      }
+      .start()
+
+  /** `df` without the rows whose id is some drop's `new_id`. */
+  private def survivors(df: DataFrame, drops: DataFrame, idCol: String): DataFrame =
+    df.join(drops.select(col("new_id").as(idCol)), Seq(idCol), "left_anti")
+
   /** STREAMING LSH-dedup ingest — the continuous form of the
     * incremental MinHash-LSH dedup (`graft.ops.Dedup.lshDupIncremental`,
-    * q316's loop run as a stream). Per micro-batch (foreachBatch):
-    * (1) signature + band the arriving docs ONCE; (2) resolve
-    * CO-ARRIVING near-dups inside the batch itself — the higher id of
-    * every verified same-batch pair drops (self-probe of the batch's
-    * own bands; without this, two near-identical docs landing in one
-    * micro-batch would both enter the state forever, diverging from
-    * any one-at-a-time ingest); (3) probe the stored ACID state — the
-    * per-doc signature table plus the APPEND-ONLY SHARDED (band, sig)
-    * index, merged + hot-capped over ONLY the buckets this batch
-    * touches (`Dedup.lshIndexMergeProbe`) — for near-dups of anything
-    * kept so far; (4) append the verdict pairs; (5) append the kept
-    * arrivals' signatures and ONE pre-aggregated index shard
-    * (`Dedup.lshIndexShard`: over-cap buckets truncated to cap+1, not
-    * filtered, so within-commit-hot signatures drop at probe time
-    * exactly as a single write-time-capped index drops them), growing
-    * the state for the next batch. The self-probe in (2) is UNCAPPED
-    * — the batch is bounded by construction, and a capped self-index
-    * would silently admit > maxIdsPerSig co-arriving copies the
-    * sequential composition collapses. All three appends are txn-tagged
-    * (appId, batchId), so a replayed micro-batch no-ops on every
-    * table and the state stays exactly-once over at-least-once
-    * delivery — a doc dropped in batch N never enters the state, so
-    * batch N+1 cannot match it.
-    *
-    * Batch-internal contract (pinned by StreamingDedupIngestSpec):
-    * the HIGHER id of every verified co-arrival pair drops, even if
-    * its lower partner also drops against the stored state — the
-    * batch-parallel clique collapse, deliberately order-free so the
-    * verdict is independent of intra-batch arrival order (a strictly
-    * sequential one-doc-at-a-time replay could keep such a doc; a
-    * deterministic stream cannot depend on intra-batch order).
+    * q316's loop run as a stream) on the `dedupIngest` loop. The batch
+    * is signed and banded ONCE; the self-probe is a state-shaped index
+    * over its own bands. The stored state is the per-doc signature
+    * table plus the APPEND-ONLY SHARDED (band, sig) index, merged +
+    * hot-capped over ONLY the buckets this batch touches
+    * (`Dedup.lshIndexMergeProbe`), verified against STORED signatures.
+    * State appends: the kept arrivals' signatures (`-sig`), then ONE
+    * pre-aggregated index shard (`-idx`).
     *
     * Cost per batch: O(|batch|) signature/banding work, O(|batch| x
     * bands) broadcast-probe keys, the index-shard scan (narrow rows,
@@ -603,12 +659,8 @@ object StreamingOps {
     * each micro-batch); at lakehouse scale, partition the shard
     * table by `band` so even the scan prunes.
     * StreamingDedupIngestSpec pins stream-equals-sequential-batch
-    * semantics, IncrementalLshSpec the plan-shape independence.
-    * NOT an oracle-suite query: three drained micro-batches cost
-    * ~8 s of stream/commit machinery regardless of data size
-    * (measured — 1/7th of sf0.1 still 8.4 s vs 12.8 s full), which
-    * says nothing about the plans; the sequential SEMANTICS are
-    * oracle-gated by q316 and spec-gated here.
+    * semantics, IncrementalLshSpec the plan-shape independence; the
+    * sequential semantics are oracle-gated by q316.
     */
   def lshDedupIngest(
       stream: DataFrame,
@@ -616,93 +668,53 @@ object StreamingOps {
       appId: String, checkpoint: String,
       idCol: String = "doc_id", textCol: String = "text",
       numHashes: Int = 8, rowsPerBand: Int = 2, minMatches: Int = 2,
-      maxIdsPerSig: Int = 64): org.apache.spark.sql.streaming.StreamingQuery = {
-    import graft.ops.{Dedup, Pinned}
-    import graft.sink.TxLogTable
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val s = batch.sparkSession
-        val bs = Dedup.minhashSignatures(batch, idCol,
-            Dedup.shingles(col(textCol), 3), numHashes)
-          .transform(Pinned.pin)
-        val newBands = Dedup
-          .lshBandsFromSignatures(bs, idCol, numHashes, rowsPerBand)
-          .transform(Pinned.pin)
-        // co-arrival pass: the batch probes ITSELF (state-shaped
-        // index over its own bands), higher id of each pair drops.
-        // The self-probe index is UNCAPPED: a micro-batch is bounded
-        // by construction, and capping here would silently admit
-        // > maxIdsPerSig co-arriving near-dups that any sequential
-        // one-at-a-time ingest collapses (the hot bucket would drop
-        // from the self-index, no intra-batch pairs would be found,
-        // and every copy would enter the state)
-        val innerPairs = Dedup.lshDupIncrementalFromBands(newBands, bs, bs,
-          Dedup.lshIndex(newBands, idCol, maxIdsPerSig = 0),
-          idCol, numHashes, minMatches)
-          .filter(col("new_id") > col("seen_id"))
-        // cross-batch pass: merged + capped view of ONLY the stored
-        // buckets this batch's bands touch
-        val probeIdx = Dedup.lshIndexMergeProbe(
-          TxLogTable.read(s, idxTable), newBands, maxIdsPerSig)
-        val crossPairs = Dedup.lshDupIncrementalFromBands(newBands, bs,
-          TxLogTable.read(s, sigTable), probeIdx,
-          idCol, numHashes, minMatches)
-        val drops = crossPairs.unionAll(innerPairs).transform(Pinned.pin)
-        TxLogTable.append(drops, outTable, Some((s"$appId-out", batchId)))
-        val kept = bs.join(drops.select(col("new_id").as(idCol)),
-            Seq(idCol), "left_anti")
-          .transform(Pinned.pin)
-        TxLogTable.append(kept, sigTable, Some((s"$appId-sig", batchId)))
-        // shard write: lshIndexShard, NOT lshIndex — over-cap buckets
-        // are truncated to cap+1 (a tombstone the merge-probe's size
-        // filter still sees) instead of filtered, so a bucket that
-        // goes hot within ONE commit drops at probe time exactly as a
-        // single write-time-capped index would drop it
-        TxLogTable.append(
-          Dedup.lshIndexShard(
-            Dedup.lshBandsFromSignatures(kept, idCol, numHashes, rowsPerBand),
-            idCol, maxIdsPerSig),
-          idxTable, Some((s"$appId-idx", batchId)))
-        Pinned.release(bs); Pinned.release(newBands)
-        Pinned.release(drops); Pinned.release(kept)
-        ()
-      }
-      .start()
-  }
+      maxIdsPerSig: Int = 64): StreamingQuery =
+    dedupIngest(stream, outTable, appId, checkpoint, idCol, textCol) { (b, pin) =>
+      val s = b.sparkSession
+      val bs = pin(Dedup.minhashSignatures(b, idCol,
+        Dedup.shingles(col(textCol), 3), numHashes))
+      val newBands = pin(Dedup.lshBandsFromSignatures(bs, idCol, numHashes, rowsPerBand))
+      DedupStep(
+        self = Dedup.lshDupIncrementalFromBands(newBands, bs, bs,
+            Dedup.lshIndex(newBands, idCol, maxIdsPerSig = 0),
+            idCol, numHashes, minMatches)
+          .filter(col("new_id") > col("seen_id")),
+        stored = Dedup.lshDupIncrementalFromBands(newBands, bs,
+          TxLogTable.read(s, sigTable),
+          Dedup.lshIndexMergeProbe(TxLogTable.read(s, idxTable), newBands, maxIdsPerSig),
+          idCol, numHashes, minMatches),
+        state = drops => {
+          val kept = pin(survivors(bs, drops, idCol))
+          // shard write: lshIndexShard, NOT lshIndex — over-cap buckets
+          // are truncated to cap+1 (a tombstone the merge-probe's size
+          // filter still sees) instead of filtered, so a bucket that
+          // goes hot within ONE commit drops at probe time exactly as a
+          // single write-time-capped index would drop it
+          Seq((sigTable, "sig", kept),
+            (idxTable, "idx", Dedup.lshIndexShard(
+              Dedup.lshBandsFromSignatures(kept, idCol, numHashes, rowsPerBand),
+              idCol, maxIdsPerSig)))
+        })
+    }
 
   /** STREAMING perceptual-hash dedup ingest — the MULTIMODAL member
-    * of the streaming family, composing `Dedup.hammingDupIncremental`
-    * the way [[lshDedupIngest]] composes `lshDupIncremental` (q317's
-    * loop run as a stream). The stream carries (idCol, hashCol) rows
-    * — the per-media 60-bit perceptual hash, computed upstream in
-    * the decode/feature map stage (`ahash60` here; a real image
-    * pipeline swaps the hash function, not this state machinery).
-    * Per micro-batch: (1) band the arriving hashes ONCE; (2) resolve
-    * CO-ARRIVING near-dups inside the batch (UNCAPPED self-probe —
-    * same contract as the text form: the batch is bounded by
-    * construction, and a capped self-index would silently admit
-    * > maxIdsPerSig co-arriving copies any sequential ingest
-    * collapses); (3) probe the stored ACID state — the hash table
-    * plus the APPEND-ONLY SHARDED (band, sig) index, merged +
-    * hot-capped over only the touched buckets
-    * (`Dedup.lshIndexMergeProbe`) — verifying
+    * of the streaming family (q317's loop run as a stream), composing
+    * `Dedup.hammingDupIncremental` the way [[lshDedupIngest]] composes
+    * `lshDupIncremental`. The stream carries (idCol, hashCol) rows —
+    * the per-media 60-bit perceptual hash, computed upstream in the
+    * decode/feature map stage (`ahash60` here; a real image pipeline
+    * swaps the hash function, not this state machinery). The batch is
+    * banded ONCE. The stored state is the hash table plus the
+    * APPEND-ONLY SHARDED (band, sig) index, merged + hot-capped over
+    * only the touched buckets (`Dedup.lshIndexMergeProbe`), verifying
     * `bit_count(xor) <= maxHamming` against STORED hashes, payloads
-    * never re-read; (4) append the verdict pairs; (5) append the
-    * kept arrivals' hashes and ONE pre-aggregated index shard
-    * (`Dedup.lshIndexShard`: over-cap buckets truncated to cap+1,
-    * not filtered — the within-commit-hot tombstone contract). All
-    * three appends are txn-tagged, so a replayed micro-batch no-ops
-    * everywhere and the state stays exactly-once over at-least-once
-    * delivery. Pigeonhole recall is exact per batch (maxHamming <
-    * bands enforced by the op); the index cap is the only recall
-    * exception, identical to a single write-time-capped index by
-    * the shard tombstone argument. Batch-internal contract as the
-    * text form: the HIGHER id of every verified co-arrival pair
-    * drops, order-free. NOT an oracle-suite query for the same
-    * documented reason as [[lshDedupIngest]] (fixed multi-batch
-    * stream machinery measures commits, not plans); the sequential
-    * semantics are oracle-gated by q317 and spec-gated by
+    * never re-read. State appends: the kept arrivals' hashes
+    * (`-hash`), then ONE index shard (`-idx`, `Dedup.lshIndexShard`'s
+    * cap+1 tombstone). Pigeonhole recall is exact per batch
+    * (maxHamming < bands enforced by the op); the index cap is the
+    * only recall exception, identical to a single write-time-capped
+    * index by the shard tombstone argument. The sequential semantics
+    * are oracle-gated by q317 and spec-gated by
     * StreamingPhashIngestSpec (stream == sequential batch
     * composition, dropped ids in no shard, over-cap co-arrival
     * collapse).
@@ -713,93 +725,50 @@ object StreamingOps {
       appId: String, checkpoint: String,
       idCol: String = "doc_id", hashCol: String = "ah",
       bits: Int = 15, bands: Int = 4, maxHamming: Int = 3,
-      maxIdsPerSig: Int = 64): org.apache.spark.sql.streaming.StreamingQuery = {
-    import graft.ops.{Dedup, Pinned}
-    import graft.sink.TxLogTable
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val s = batch.sparkSession
-        // collapse a duplicated id within the batch (at-least-once
-        // sources can deliver one row twice in one micro-batch) to a
-        // single row, order-free — each copy would otherwise keep the
-        // other alive through the self-probe's new_id > seen_id
-        // filter and the left_anti, duplicating state and index rows
-        val bh = batch.select(col(idCol), col(hashCol))
-          .groupBy(idCol).agg(min(col(hashCol)).as(hashCol))
-          .transform(Pinned.pin)
-        val newBands = Dedup.hammingBands(bh, idCol, hashCol, bits, bands)
-          .transform(Pinned.pin)
-        // co-arrival pass: the batch probes ITSELF, uncapped. Both
-        // passes consume the PINNED banded frame (the FromBands
-        // variants) — the batch is banded exactly once per
-        // micro-batch, like the text ingest's lshDupIncrementalFromBands
-        val innerPairs = Dedup.hammingDupIncrementalFromBands(newBands, bh, bh,
+      maxIdsPerSig: Int = 64): StreamingQuery =
+    dedupIngest(stream, outTable, appId, checkpoint, idCol, hashCol) { (b, pin) =>
+      val bh = pin(b)
+      val newBands = pin(Dedup.hammingBands(bh, idCol, hashCol, bits, bands))
+      DedupStep(
+        self = Dedup.hammingDupIncrementalFromBands(newBands, bh, bh,
             Dedup.lshIndex(newBands, idCol, maxIdsPerSig = 0),
             idCol, hashCol, bands, maxHamming)
-          .filter(col("new_id") > col("seen_id"))
-        // cross-batch pass: merged + capped view of ONLY the stored
-        // buckets this batch's bands touch
-        val probeIdx = Dedup.lshIndexMergeProbe(
-          TxLogTable.read(s, idxTable), newBands, maxIdsPerSig)
-        val crossPairs = Dedup.hammingDupIncrementalFromBands(newBands, bh,
-          TxLogTable.read(s, hashTable), probeIdx,
-          idCol, hashCol, bands, maxHamming)
-        val drops = crossPairs.unionAll(innerPairs).transform(Pinned.pin)
-        TxLogTable.append(drops, outTable, Some((s"$appId-out", batchId)))
-        val kept = bh.join(drops.select(col("new_id").as(idCol)),
-            Seq(idCol), "left_anti")
-          .transform(Pinned.pin)
-        TxLogTable.append(kept, hashTable, Some((s"$appId-hash", batchId)))
-        TxLogTable.append(
-          Dedup.lshIndexShard(
-            Dedup.hammingBands(kept, idCol, hashCol, bits, bands),
-            idCol, maxIdsPerSig),
-          idxTable, Some((s"$appId-idx", batchId)))
-        Pinned.release(bh); Pinned.release(newBands)
-        Pinned.release(drops); Pinned.release(kept)
-        ()
-      }
-      .start()
-  }
+          .filter(col("new_id") > col("seen_id")),
+        stored = Dedup.hammingDupIncrementalFromBands(newBands, bh,
+          TxLogTable.read(b.sparkSession, hashTable),
+          Dedup.lshIndexMergeProbe(
+            TxLogTable.read(b.sparkSession, idxTable), newBands, maxIdsPerSig),
+          idCol, hashCol, bands, maxHamming),
+        state = drops => {
+          val kept = pin(survivors(bh, drops, idCol))
+          Seq((hashTable, "hash", kept),
+            (idxTable, "idx", Dedup.lshIndexShard(
+              Dedup.hammingBands(kept, idCol, hashCol, bits, bands),
+              idCol, maxIdsPerSig)))
+        })
+    }
 
   /** STREAMING winnowing-fingerprint dedup ingest — the MOSS member
-    * of the streaming family, completing the modality × mode matrix
-    * (text LSH: [[lshDedupIngest]]; perceptual hash:
-    * [[phashDedupIngest]]; this is the shared-gram-run member, q318's
-    * loop run as a stream). The stream carries (idCol, textCol) rows.
-    * Per micro-batch: (1) fingerprint the arriving docs ONCE
-    * (`Dedup.winnowFingerprints` — gram hash + the one-window-pass
-    * Schleimer-Wilkerson-Aiken selection, O(batch) work); (2) resolve
-    * CO-ARRIVING near-dups inside the batch (UNCAPPED self-probe —
-    * the batch is bounded by construction, and a capped self-index
-    * would silently admit > maxIdsPerSig co-arriving copies any
-    * sequential ingest collapses); (3) probe the stored ACID state
-    * with ONE hash join — the APPEND-ONLY SHARDED fingerprint → ids
-    * index, merged + hot-capped over only the touched buckets
-    * (`Dedup.lshIndexMergeProbe`). Fingerprint equality IS the
-    * verification (a shared fingerprint is a shared >= w-gram run by
-    * construction — `Dedup.fingerprintDupIncremental`), so unlike
-    * the other two ingests there is NO per-doc signature/hash state
-    * table and no verify join: the state is the index alone, and the
-    * seen TEXT is never re-read. (4) append the verdict pairs;
-    * (5) append ONE pre-aggregated index shard of the kept arrivals'
-    * fingerprints (`Dedup.lshIndexShard`: over-cap buckets truncated
-    * to cap+1 with the true size recorded — the within-commit-hot
-    * tombstone contract). Both appends are txn-tagged, so a replayed
-    * micro-batch no-ops everywhere and the state stays exactly-once
-    * over at-least-once delivery. Batch-internal contract as the
-    * other two: the HIGHER id of every verified co-arrival pair
-    * drops, order-free. A doc too short to fill one gram window
+    * of the streaming family (q318's loop run as a stream). The
+    * stream carries (idCol, textCol) rows. The batch is fingerprinted
+    * ONCE (`Dedup.winnowFingerprints` — gram hash + the one-window-
+    * pass Schleimer-Wilkerson-Aiken selection, O(batch) work), then
+    * probes the stored state with ONE hash join — the APPEND-ONLY
+    * SHARDED fingerprint → ids index, merged + hot-capped over only
+    * the touched buckets (`Dedup.lshIndexMergeProbe`). Fingerprint
+    * equality IS the verification (a shared fingerprint is a shared
+    * >= w-gram run by construction — `Dedup.fingerprintDupIncremental`),
+    * so unlike the other near-dup members there is NO per-doc
+    * signature/hash state table and no verify join: the state is the
+    * index alone (`-idx`, one `Dedup.lshIndexShard` of the kept
+    * arrivals' fingerprints per batch), and the seen TEXT is never
+    * re-read. A doc too short to fill one gram window
     * (< w + gramTokens - 1 tokens) emits no fingerprints: it is
     * always kept and never matched — the MOSS guarantee has no unit
-    * below one window. NOT an oracle-suite query for the same
-    * documented reason as the other ingests (fixed multi-batch
-    * stream machinery measures commits, not plans); the sequential
-    * semantics are oracle-gated by q318 and spec-gated by
-    * StreamingWinnowIngestSpec (stream == sequential batch
-    * composition, dropped ids in no shard, over-cap co-arrival
-    * collapse).
+    * below one window. The sequential semantics are oracle-gated by
+    * q318 and spec-gated by StreamingWinnowIngestSpec (stream ==
+    * sequential batch composition, dropped ids in no shard, over-cap
+    * co-arrival collapse).
     */
   def winnowDedupIngest(
       stream: DataFrame,
@@ -807,136 +776,84 @@ object StreamingOps {
       appId: String, checkpoint: String,
       idCol: String = "doc_id", textCol: String = "text",
       w: Int = 4, gramTokens: Int = 3, minShared: Int = 2,
-      maxIdsPerSig: Int = 64): org.apache.spark.sql.streaming.StreamingQuery = {
-    import graft.ops.{Dedup, Pinned}
-    import graft.sink.TxLogTable
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val s = batch.sparkSession
-        val newFps = Dedup
-          .winnowFingerprints(batch, idCol, textCol, w, gramTokens)
-          .transform(Pinned.pin)
-        // co-arrival pass: the batch probes ITSELF, uncapped
-        val innerPairs = Dedup.fingerprintDupIncremental(newFps,
-            Dedup.lshIndex(newFps, idCol, maxIdsPerSig = 0),
-            idCol, minShared)
-          .filter(col("new_id") > col("seen_id"))
-        // cross-batch pass: merged + capped view of ONLY the stored
-        // buckets this batch's fingerprints touch
-        val probeIdx = Dedup.lshIndexMergeProbe(
-          TxLogTable.read(s, idxTable), newFps, maxIdsPerSig)
-        val crossPairs = Dedup.fingerprintDupIncremental(newFps, probeIdx,
-          idCol, minShared)
-        val drops = crossPairs.unionAll(innerPairs).transform(Pinned.pin)
-        TxLogTable.append(drops, outTable, Some((s"$appId-out", batchId)))
-        val kept = newFps.join(drops.select(col("new_id").as(idCol)),
-          Seq(idCol), "left_anti")
-        TxLogTable.append(
-          Dedup.lshIndexShard(kept, idCol, maxIdsPerSig),
-          idxTable, Some((s"$appId-idx", batchId)))
-        Pinned.release(newFps); Pinned.release(drops)
-        ()
-      }
-      .start()
-  }
+      maxIdsPerSig: Int = 64): StreamingQuery =
+    dedupIngest(stream, outTable, appId, checkpoint, idCol, textCol) { (b, pin) =>
+      val newFps = pin(Dedup.winnowFingerprints(b, idCol, textCol, w, gramTokens))
+      DedupStep(
+        self = Dedup.fingerprintDupIncremental(newFps,
+            Dedup.lshIndex(newFps, idCol, maxIdsPerSig = 0), idCol, minShared)
+          .filter(col("new_id") > col("seen_id")),
+        stored = Dedup.fingerprintDupIncremental(newFps,
+          Dedup.lshIndexMergeProbe(
+            TxLogTable.read(b.sparkSession, idxTable), newFps, maxIdsPerSig),
+          idCol, minShared),
+        state = drops => Seq((idxTable, "idx",
+          Dedup.lshIndexShard(survivors(newFps, drops, idCol), idCol, maxIdsPerSig))))
+    }
 
   /** STREAMING exact-dedup ingest — the EXACT member of the
-    * streaming family, completing the modality × mode matrix's last
-    * cell (near-dup members above; this is content-hash equality,
-    * the first stage every production dedup cascade runs before any
-    * banding). The stream carries (idCol, textCol) rows. State is
-    * the seen (content md5 → canonical id) table — one row per
-    * distinct KEPT content, so replicas never accumulate in state.
-    * Per micro-batch: (1) hash the batch once; (2) CO-ARRIVING exact
-    * copies collapse to the smallest id per hash (order-free —
-    * min(id), not first-arrival); (3) the survivors probe the stored
-    * hash table with ONE broadcast-able equi-join on the 16-byte
-    * hash — seen text never re-read; (4) verdict pairs (new_id,
-    * seen_id — the stored canonical) and the kept arrivals' hash
-    * rows append txn-tagged, so a replayed micro-batch no-ops and
-    * the state stays exactly-once. Cost per batch: O(|batch|) hash +
-    * one hash-key join against state; at lakehouse scale partition
-    * the hash table by hash prefix so the probe prunes. Spec-gated
-    * by StreamingExactIngestSpec (stream == sequential batch
-    * composition, co-arrival min-id collapse, dropped ids never in
-    * state, replay idempotence); the batch-form semantics are
-    * oracle-gated by q33/q123's exact-dedup queries.
+    * streaming family: content-hash equality, the first stage every
+    * production dedup cascade runs before any banding. The stream
+    * carries (idCol, textCol) rows. State is the seen (content md5 →
+    * canonical id) table (`-hash`) — one row per distinct KEPT
+    * content, so replicas never accumulate in state. The batch is
+    * hashed once; CO-ARRIVING exact copies collapse to the smallest
+    * id per hash (min(id), not first-arrival), and the survivors probe
+    * the stored hash table with ONE broadcast-able equi-join on the
+    * 16-byte hash — seen text never re-read. Cost per batch:
+    * O(|batch|) hash + one hash-key join against state; at lakehouse
+    * scale partition the hash table by hash prefix so the probe
+    * prunes. Spec-gated by StreamingExactIngestSpec (stream ==
+    * sequential batch composition, co-arrival min-id collapse,
+    * dropped ids never in state, replay idempotence); the batch-form
+    * semantics are oracle-gated by q33/q123's exact-dedup queries, and
+    * q320 runs this ingest itself under the oracle.
     */
   def exactDedupIngest(
       stream: DataFrame,
       hashTable: String, outTable: String,
       appId: String, checkpoint: String,
-      idCol: String = "doc_id", textCol: String = "text")
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    import graft.ops.Pinned
-    import graft.sink.TxLogTable
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val s = batch.sparkSession
-        // a duplicated id within one batch would survive BOTH the
-        // id =!= __keep filter and the left_anti (each copy keeps the
-        // other alive), appending duplicate state rows for one
-        // content — collapse to one row per id first, order-free
-        // (min hash per id), before the co-arrival collapse
-        val bh = batch
-          .select(col(idCol), md5(col(textCol)).as("__h"))
-          .groupBy(idCol).agg(min(col("__h")).as("__h"))
-          .transform(Pinned.pin)
-        // co-arrival collapse: smallest id per hash survives the batch
-        val canon = bh.groupBy("__h").agg(min(col(idCol)).as("__keep"))
-        val innerPairs = bh.join(canon, "__h")
+      idCol: String = "doc_id", textCol: String = "text"): StreamingQuery =
+    dedupIngest(stream, outTable, appId, checkpoint, idCol, textCol) { (b, pin) =>
+      val bh = pin(b.select(col(idCol), md5(col(textCol)).as("__h")))
+      val canon = bh.groupBy("__h").agg(min(col(idCol)).as("__keep"))
+      val seen = TxLogTable.read(b.sparkSession, hashTable)
+        .select(col("__h"), col(idCol).as("__canon"))
+      DedupStep(
+        self = bh.join(canon, "__h")
           .filter(col(idCol) =!= col("__keep"))
-          .select(col(idCol).as("new_id"), col("__keep").as("seen_id"))
-        // cross-batch probe: one equi-join on the stored hash table
-        val seen = TxLogTable.read(s, hashTable)
-          .select(col("__h"), col(idCol).as("__canon"))
-        val crossPairs = canon.join(seen, "__h")
+          .select(col(idCol).as("new_id"), col("__keep").as("seen_id")),
+        stored = canon.join(seen, "__h")
           .filter(col("__keep") =!= col("__canon"))
-          .select(col("__keep").as("new_id"), col("__canon").as("seen_id"))
-        val drops = crossPairs.unionAll(innerPairs).transform(Pinned.pin)
-        TxLogTable.append(drops, outTable, Some((s"$appId-out", batchId)))
-        val kept = bh.join(drops.select(col("new_id").as(idCol)),
-          Seq(idCol), "left_anti")
-        TxLogTable.append(kept, hashTable, Some((s"$appId-hash", batchId)))
-        Pinned.release(bh); Pinned.release(drops)
-        ()
-      }
-      .start()
-  }
+          .select(col("__keep").as("new_id"), col("__canon").as("seen_id")),
+        state = drops => Seq((hashTable, "hash", survivors(bh, drops, idCol))))
+    }
 
   /** STREAMING SemDeDup ingest — the SEMANTIC (embedding-space)
-    * member of the streaming family, closing the modality × mode
-    * matrix on the vector side (text LSH / pHash / winnowing above;
-    * q315's incremental loop run as a stream). The stream carries
-    * (idCol, vecCol) rows; `centroids` is the FROZEN coarse
-    * quantizer — constant-size, retrained offline, never per batch
-    * (the same deployment contract as q319's frozen codebook). The
-    * ACID state is O(k) — ONE row per non-empty cell (the
-    * [[graft.ops.Dedup.cellRepresentatives]] shape) — and never
-    * grows with the corpus: per micro-batch, (1) assign the batch to
-    * cells ONCE (broadcast argmin, with distances — the election
-    * needs them); (2) drop arrivals within `tau` cosine of their
-    * cell's STORED representative
+    * member of the streaming family (q315's incremental loop run as a
+    * stream). The stream carries (idCol, vecCol) rows; `centroids` is
+    * the FROZEN coarse quantizer — constant-size, retrained offline,
+    * never per batch (the same deployment contract as q319's frozen
+    * codebook). The ACID state (`-reps`) is O(k) — ONE row per
+    * non-empty cell (the [[graft.ops.Dedup.cellRepresentatives]]
+    * shape) — and never grows with the corpus. The batch is assigned
+    * to cells ONCE (broadcast argmin, with distances — the election
+    * needs them). The stored probe drops arrivals within `tau` cosine
+    * of their cell's STORED representative
     * (`Dedup.semanticDupIncrementalFromAssignment` — O(batch)
-    * cosines, seen vectors never re-read); (3) cells with NO stored
-    * representative elect one from the batch's kept members —
-    * nearest the centroid, ties to the smallest id, the exact
-    * election `cellRepresentatives`/the pruned regime make, so the
-    * verdict is ORDER-FREE within the batch (a permuted batch elects
-    * the same rep — the family's batch-parallel co-arrival
-    * contract); remaining co-arrivals in such cells collapse against
-    * the fresh representative; (4) the verdict pairs and the
-    * newly-elected representatives append txn-tagged, so a replayed
-    * micro-batch no-ops everywhere. Recall matches the pruned
+    * cosines, seen vectors never re-read). The self-probe: cells with
+    * NO stored representative elect one from the batch's kept
+    * members — nearest the centroid, ties to the smallest id, the
+    * exact election `cellRepresentatives`/the pruned regime make, so
+    * a permuted batch elects the same rep — and the remaining
+    * co-arrivals in such cells collapse against it. The state append
+    * is the newly-elected representatives. Recall matches the pruned
     * regime's documented contract (a dup far from its cell's rep is
     * missed — tighten with more cells); batch members who survive
     * the rep check are admitted and NOT stored (the pruned state is
     * the rep alone — that is what makes the state O(k) and the probe
-    * O(batch) against a 10^11-row seen corpus). NOT an oracle-suite
-    * query for the family's documented fixed-stream-cost reason; the
-    * sequential semantics are oracle-gated by q315 and spec-gated by
+    * O(batch) against a 10^11-row seen corpus). The sequential
+    * semantics are oracle-gated by q315 and spec-gated by
     * StreamingSemanticIngestSpec (stream == sequential batch
     * composition, order-free election, replay idempotence).
     */
@@ -946,52 +863,27 @@ object StreamingOps {
       repsTable: String, outTable: String,
       appId: String, checkpoint: String,
       idCol: String = "vec_id", vecCol: String = "embedding",
-      tau: Double = 0.85): org.apache.spark.sql.streaming.StreamingQuery = {
-    import graft.ops.{Dedup, Pinned}
-    import graft.sink.TxLogTable
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val s = batch.sparkSession
-        // one row per id, order-free (min over the orderable array
-        // column): assignCellsWithDist already groups by id, but the
-        // raw frame feeds the drop verdicts and the rep_vec join —
-        // a duplicated id would duplicate verdict and REPRESENTATIVE
-        // state rows
-        val b = batch.select(col(idCol), col(vecCol))
-          .groupBy(idCol).agg(min(col(vecCol)).as(vecCol))
-          .transform(Pinned.pin)
-        // one |batch| x k assignment, with distances (the election key)
-        val asg = Dedup.assignCellsWithDist(b, centroids, idCol, vecCol)
-          .transform(Pinned.pin)
-        val reps = TxLogTable.read(s, repsTable)
-        // cross-state pass: within tau of the stored representative
-        val crossDrops = Dedup.semanticDupIncrementalFromAssignment(
-          b, asg.select(col(idCol), col("cell")), reps, idCol, vecCol, tau)
-        val keptAsg = asg.join(
-          crossDrops.select(col("drop_id").as(idCol)), Seq(idCol), "left_anti")
-        // cells with no stored rep: order-free election among the
-        // batch's kept members (nearest centroid, ties to smallest id)
-        val newCells = keptAsg.join(
-          broadcast(reps.select("cell")), Seq("cell"), "left_anti")
-        val newReps = newCells.groupBy("cell")
-          .agg(min(struct(col("d2"), col(idCol))).as("__r"))
-          .select(col("cell"), col(s"__r.$idCol").as("rep"))
-          .join(b.select(col(idCol).as("rep"), col(vecCol).as("rep_vec")), "rep")
-          .select("cell", "rep", "rep_vec")
-          .transform(Pinned.pin)
-        // co-arrival collapse against the fresh representative (the
-        // rep itself is excluded by the op's id =!= rep guard)
-        val innerDrops = Dedup.semanticDupIncrementalFromAssignment(
-          b, newCells.select(col(idCol), col("cell")), newReps,
-          idCol, vecCol, tau)
-        val drops = crossDrops.unionAll(innerDrops).transform(Pinned.pin)
-        TxLogTable.append(drops, outTable, Some((s"$appId-out", batchId)))
-        TxLogTable.append(newReps, repsTable, Some((s"$appId-reps", batchId)))
-        Pinned.release(b); Pinned.release(asg)
-        Pinned.release(newReps); Pinned.release(drops)
-        ()
-      }
-      .start()
-  }
+      tau: Double = 0.85): StreamingQuery =
+    dedupIngest(stream, outTable, appId, checkpoint, idCol, vecCol) { (collapsed, pin) =>
+      val b = pin(collapsed)
+      val asg = pin(Dedup.assignCellsWithDist(b, centroids, idCol, vecCol))
+      val reps = TxLogTable.read(b.sparkSession, repsTable)
+      val crossDrops = Dedup.semanticDupIncrementalFromAssignment(
+        b, asg.select(col(idCol), col("cell")), reps, idCol, vecCol, tau)
+      val keptAsg = asg.join(
+        crossDrops.select(col("drop_id").as(idCol)), Seq(idCol), "left_anti")
+      val newCells = keptAsg.join(
+        broadcast(reps.select("cell")), Seq("cell"), "left_anti")
+      val newReps = pin(newCells.groupBy("cell")
+        .agg(min(struct(col("d2"), col(idCol))).as("__r"))
+        .select(col("cell"), col(s"__r.$idCol").as("rep"))
+        .join(b.select(col(idCol).as("rep"), col(vecCol).as("rep_vec")), "rep")
+        .select("cell", "rep", "rep_vec"))
+      // the rep itself is excluded by the op's id =!= rep guard
+      DedupStep(
+        self = Dedup.semanticDupIncrementalFromAssignment(
+          b, newCells.select(col(idCol), col("cell")), newReps, idCol, vecCol, tau),
+        stored = crossDrops,
+        state = _ => Seq((repsTable, "reps", newReps)))
+    }
 }

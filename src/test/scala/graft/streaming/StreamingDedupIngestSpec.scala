@@ -2,7 +2,7 @@ package graft.streaming
 
 import graft.SparkSpec
 import graft.ops.Dedup
-import graft.sink.TxLogTable
+import graft.sink.{CountingLogFs, TxLogTable}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -148,6 +148,91 @@ class StreamingDedupIngestSpec extends SparkSpec {
     val idxIds = TxLogTable.read(spark, sIdx)
       .select(explode(col("ids")).as("id")).as[Long].collect().toSet
     assert(idxIds === Set(50L))
+  }
+
+  test("a duplicated id within one batch leaves one state row; conflicting copies keep the smaller text") {
+    val (sSig, sIdx, sOut) = freshTables()
+    val ckpt = java.nio.file.Files.createTempDirectory("sdi_ck3").toString
+    implicit val sql = spark.sqlContext
+    val ms = MemoryStream[(Long, String)]
+    val q = StreamingOps.lshDedupIngest(
+      ms.toDF.toDF("doc_id", "text"), sSig, sIdx, sOut, "sdi3", ckpt)
+    val (a, b) = ("alpha lines about columnar storage formats and their encodings",
+      "beta lines about shuffle service fetch retries under executor loss")
+    try {
+      // 5 twice with one text (the at-least-once case), 7 twice with
+      // two texts: 7 keeps the smaller text, a, never their union
+      ms.addData(Seq((5L, batches(0)(0)._2), (5L, batches(0)(0)._2),
+        (6L, batches(0)(1)._2), (7L, b), (7L, a)))
+      q.processAllAvailable()
+      ms.addData(Seq((8L, a), (9L, b)))
+      q.processAllAvailable()
+    } finally q.stop()
+    val state = TxLogTable.read(spark, sSig)
+      .select("doc_id").as[Long].collect().toList.sorted
+    assert(state === List(5L, 6L, 7L, 9L))
+    // no self-pair; the copy of the kept text drops, the other is new
+    assert(TxLogTable.read(spark, sOut).select("new_id", "seen_id")
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toList === List((8L, 7L)))
+    val perBucket = TxLogTable.read(spark, sIdx)
+      .select(size(col("ids")).as("n"), size(array_distinct(col("ids"))).as("d"))
+      .collect().map(r => (r.getInt(0), r.getInt(1)))
+    assert(perBucket.forall { case (n, dct) => n == dct })
+  }
+
+  test("a batch whose idx append fails releases its pins; the restart lands what a clean run does") {
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.countlog.impl", classOf[CountingLogFs].getName)
+    implicit val sql = spark.sqlContext
+    def rows(table: String): List[String] =
+      TxLogTable.read(spark, table).collect().map(_.toString).toList.sorted
+    def epochs(table: String): List[Long] = TxLogTable.history(spark, table)
+      .filter(col("txn_app").isNotNull).select("txn_epoch").as[Long].collect().toList.sorted
+
+    val (cSig, cIdx, cOut) = freshTables()
+    val cleanCk = java.nio.file.Files.createTempDirectory("sdi_clean").toString
+    val cms = MemoryStream[(Long, String)]
+    val cq = StreamingOps.lshDedupIngest(cms.toDF.toDF("doc_id", "text"),
+      cSig, cIdx, cOut, "sdik", cleanCk)
+    try batches.foreach { b => cms.addData(b); cq.processAllAvailable() }
+    finally cq.stop()
+
+    // the idx table is reached through the countlog scheme; batch 1
+    // dies after its out and sig appends, when the idx append creates
+    // its temp commit file
+    val (sig, idx0, out) = freshTables()
+    val idx = s"countlog://$idx0"
+    val injected = "injected failure creating a temp commit file"
+    val ckpt = java.nio.file.Files.createTempDirectory("sdi_kill").toString
+    val ms = MemoryStream[(Long, String)]
+    def start() = StreamingOps.lshDedupIngest(
+      ms.toDF.toDF("doc_id", "text"), sig, idx, out, "sdik", ckpt)
+    val q1 = start()
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    try {
+      ms.addData(batches(0)); q1.processAllAvailable()
+      CountingLogFs.onFirstCommitTemp = () => throw new java.io.IOException(injected)
+      ms.addData(batches(1))
+      val e = intercept[Exception](q1.processAllAvailable())
+      assert(causeMessages(e).exists(_.contains(injected)))
+    } finally { q1.stop(); CountingLogFs.onFirstCommitTemp = null }
+    val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(leaked.isEmpty, s"pins of the failed batch still persisted: $leaked")
+    assert(epochs(out) === List(0L, 1L) && epochs(sig) === List(0L, 1L))
+    assert(epochs(idx0) === List(0L), "batch 1 died between its sig and idx appends")
+
+    // restart on the same checkpoint: batch 1 replays, its out and
+    // sig appends no-op on their txn tags, and its idx append lands
+    val q2 = start()
+    try {
+      q2.processAllAvailable()
+      batches.drop(2).foreach { b => ms.addData(b); q2.processAllAvailable() }
+    } finally q2.stop()
+    for ((got, want) <- Seq(sig, idx0, out).zip(Seq(cSig, cIdx, cOut))) {
+      assert(rows(got) === rows(want), s"$got differs from a run that never failed")
+      assert(epochs(got) === epochs(want) && epochs(got).distinct === epochs(got),
+        s"$got: one commit per batch tag, got ${epochs(got)}")
+    }
   }
 
   // ADVICE r14: within-commit-hot buckets must stay visible to the

@@ -156,4 +156,24 @@ class StreamingWinnowIngestSpec extends SparkSpec {
     assert(TxLogTable.read(spark, sOut).count() === 0L)
     assert(TxLogTable.read(spark, sIdx).count() === 0L)
   }
+
+  test("a duplicated id within one batch enters each index bucket once") {
+    val (sIdx, sOut) = freshTables()
+    val ckpt = java.nio.file.Files.createTempDirectory("swi_ck4").toString
+    implicit val sql = spark.sqlContext
+    val ms = MemoryStream[(Long, String)]
+    val q = StreamingOps.winnowDedupIngest(
+      ms.toDF.toDF("doc_id", "text"), sIdx, sOut, "swi4", ckpt)
+    try {
+      ms.addData(Seq((5L, d1), (5L, d1), (6L, d2)))
+      q.processAllAvailable()
+    } finally q.stop()
+    assert(TxLogTable.read(spark, sOut).isEmpty) // no self-pair
+    val idx = TxLogTable.read(spark, sIdx)
+    assert(idx.select(explode(col("ids"))).as[Long].collect().toSet === Set(5L, 6L))
+    val perBucket = idx
+      .select(size(col("ids")).as("n"), size(array_distinct(col("ids"))).as("d"))
+      .collect().map(r => (r.getInt(0), r.getInt(1)))
+    assert(perBucket.forall { case (n, dct) => n == dct })
+  }
 }
