@@ -120,30 +120,24 @@ final class GraftCatalog extends TableCatalog with SupportsNamespaces {
   override def tableExists(ident: Identifier): Boolean =
     isTable(tableDir(ident))
 
-  override def loadTable(ident: Identifier): Table = {
-    val dir = tableDir(ident)
-    if (!isTable(dir)) throw new NoSuchTableException(ident)
-    new GraftTable(dir.toString, ident, None)
-  }
+  override def loadTable(ident: Identifier): Table =
+    new GraftTable(tablePathOf(ident), ident, None)
 
   /** `SELECT ... VERSION AS OF n` lands here. */
   override def loadTable(ident: Identifier, version: String): Table = {
-    val dir = tableDir(ident)
-    if (!isTable(dir)) throw new NoSuchTableException(ident)
+    val dir = tablePathOf(ident)
     val v = try version.trim.toLong catch {
       case _: NumberFormatException => throw new IllegalArgumentException(
         s"graft catalog versions are commit numbers, got '$version'")
     }
-    new GraftTable(dir.toString, ident, Some(v))
+    new GraftTable(dir, ident, Some(v))
   }
 
   /** `SELECT ... TIMESTAMP AS OF t` lands here (micros since epoch). */
   override def loadTable(ident: Identifier, timestampMicros: Long): Table = {
-    val dir = tableDir(ident)
-    if (!isTable(dir)) throw new NoSuchTableException(ident)
-    val v = TxLogTable.versionAtTimestamp(spark, dir.toString,
-      Math.floorDiv(timestampMicros, 1000L))
-    new GraftTable(dir.toString, ident, Some(v))
+    val dir = tablePathOf(ident)
+    new GraftTable(dir, ident, Some(TxLogTable.versionAtTimestamp(spark, dir,
+      Math.floorDiv(timestampMicros, 1000L))))
   }
 
   override def createTable(ident: Identifier, schema: StructType,
@@ -169,8 +163,7 @@ final class GraftCatalog extends TableCatalog with SupportsNamespaces {
 
   override def alterTable(ident: Identifier,
       changes: TableChange*): Table = {
-    val dir = tableDir(ident)
-    if (!isTable(dir)) throw new NoSuchTableException(ident)
+    val dir = tablePathOf(ident)
     val adds = changes.collect {
       case a: TableChange.AddColumn =>
         require(a.fieldNames().length == 1,
@@ -210,17 +203,17 @@ final class GraftCatalog extends TableCatalog with SupportsNamespaces {
         "(supported: ADD COLUMNS, RENAME COLUMN, DROP COLUMN, " +
         "SET/UNSET TBLPROPERTIES; constraints via TxLogTable.addConstraint)")
     if (adds.nonEmpty)
-      TxLogTable.addColumns(spark, dir.toString, StructType(adds))
+      TxLogTable.addColumns(spark, dir, StructType(adds))
     // metadata-only column mapping — see TxLogTable.renameColumn
     colRenames.foreach { case (from, to) =>
-      TxLogTable.renameColumn(spark, dir.toString, from, to)
+      TxLogTable.renameColumn(spark, dir, from, to)
     }
-    colDrops.foreach(TxLogTable.dropColumn(spark, dir.toString, _))
+    colDrops.foreach(TxLogTable.dropColumn(spark, dir, _))
     if (propSets.nonEmpty)
-      TxLogTable.setProperties(spark, dir.toString, propSets)
+      TxLogTable.setProperties(spark, dir, propSets)
     if (propDrops.nonEmpty)
-      TxLogTable.unsetProperties(spark, dir.toString, propDrops)
-    new GraftTable(dir.toString, ident, None)
+      TxLogTable.unsetProperties(spark, dir, propDrops)
+    new GraftTable(dir, ident, None)
   }
 
   override def dropTable(ident: Identifier): Boolean = {
@@ -298,47 +291,41 @@ final class GraftTable(tablePath: String, ident: Identifier,
 
   override def name(): String = ident.toString
 
-  override lazy val schema: StructType =
-    TxLogTable.scanSnapshot(spark, tablePath, asOfVersion).logicalSchema
+  // ONE listing of the log per table instance, and one snapshot:
+  // the schema, the properties and every scan built from this table
+  // serve the version it was loaded at — as a format relation does.
+  // Schema and scans run the reader gate; properties, like the other
+  // metadata getters, read the latest state ungated.
+  private lazy val log = TxLogTable.openLog(spark, tablePath)
+  private lazy val snap = log.snapshot(asOfVersion)
+
+  override lazy val schema: StructType = snap.logicalSchema
 
   override def capabilities(): util.Set[TableCapability] =
     util.EnumSet.of(TableCapability.BATCH_READ,
       TableCapability.MICRO_BATCH_READ,
       TableCapability.V1_BATCH_WRITE, TableCapability.TRUNCATE)
 
-  // resolved once per Table instance — Spark calls properties()
-  // several times during planning and the stored set replays the log
   private lazy val resolvedProperties: util.Map[String, String] =
-    (TxLogTable.properties(spark, tablePath) ++
+    (log.state.props ++
       Map("provider" -> "graft-txlog", "location" -> tablePath) ++
       asOfVersion.map(v => "versionAsOf" -> v.toString)).asJava
 
   override def properties(): util.Map[String, String] = resolvedProperties
 
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
-    val snap = TxLogTable.scanSnapshot(spark, tablePath, asOfVersion)
-    if (snap.hasDeletionVectors || snap.renames.nonEmpty) {
-      // outstanding merge-on-read deletion vectors (a file-level V2
-      // scan cannot express the row mask) or an active column mapping
-      // (the vectorized scan serves physical file names): bridge the
-      // library plan through the V1Scan fallback — correct always;
-      // the DV tax retires at the next compact()
-      val s = spark
-      val snapshotSchema = schema
+  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
+    if (TxLogRead.bridged(snap)) {
+      // the V1Scan fallback serves the format's bridged relation; it
+      // has no micro-batch form
+      val relation = TxLogRead.frameRelation(spark, tablePath, snap)
       new ScanBuilder {
         override def build(): org.apache.spark.sql.connector.read.Scan =
           new org.apache.spark.sql.connector.read.V1Scan {
-            override def readSchema(): StructType = snapshotSchema
+            override def readSchema(): StructType = relation.schema
             override def toV1TableScan[T <: org.apache.spark.sql.sources.BaseRelation
                 with org.apache.spark.sql.sources.TableScan](
                 context: org.apache.spark.sql.SQLContext): T =
-              (new org.apache.spark.sql.sources.BaseRelation
-                  with org.apache.spark.sql.sources.TableScan {
-                override def sqlContext: org.apache.spark.sql.SQLContext = context
-                override def schema: StructType = snapshotSchema
-                override def buildScan(): org.apache.spark.rdd.RDD[org.apache.spark.sql.Row] =
-                  TxLogTable.read(s, tablePath, asOfVersion).rdd
-              }).asInstanceOf[T]
+              relation.asInstanceOf[T]
           }
       }
     } else {
@@ -350,7 +337,6 @@ final class GraftTable(tablePath: String, ident: Identifier,
           .exists(_.trim.toBoolean),
         buildDropped = snap.dropped)
     }
-  }
 
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder = {
     require(asOfVersion.isEmpty,
@@ -465,13 +451,13 @@ final class GraftScan(inner: org.apache.spark.sql.connector.read.Scan,
 
 /** Micro-batch stream off the commit log through the V2 connector
   * API — `spark.readStream.table("graft.ns.t")`. Offsets ARE
-  * versions (same contract as the format-based [[TxLogStreamSource]]):
-  * each batch reads exactly the data files added by commits in
-  * `(start, end]`, compaction/replayed commits contribute nothing,
-  * and row-level delete commits fail the append-only stream loudly
-  * unless `ignoreDeletes`. The reader factory is Spark's own
-  * vectorized parquet one, so streaming batches decode with the same
-  * columnar path as batch scans.
+  * versions, and each batch passes the format stream's gate
+  * ([[TxLogRead.microBatch]], shared with [[TxLogStreamSource]]); on
+  * top of it this vectorized path refuses what it cannot serve:
+  * deletion vectors, a column mapping, or a dropped column it did not
+  * start with. The reader factory is Spark's own vectorized parquet
+  * one, so streaming batches decode with the same columnar path as
+  * batch scans.
   */
 final class GraftMicroBatchStream(sparkSession: SparkSession,
     tablePath: String,
@@ -501,97 +487,62 @@ final class GraftMicroBatchStream(sparkSession: SparkSession,
       end: Offset): Array[org.apache.spark.sql.connector.read.InputPartition] = {
     val lo = start.asInstanceOf[VersionOffset].v
     val hi = end.asInstanceOf[VersionOffset].v
-    // ONE log listing serves the whole batch. The reader gate runs on
-    // the latest snapshot every batch: a reader feature declared
-    // mid-stream via upgradeProtocol must stop the query, not have its
-    // commits replayed with legacy semantics
     val log = TxLogTable.openLog(sparkSession, tablePath)
-    log.snapshot()
-    def partitionsFor(names: Seq[String]) = {
-      val conf = sparkSession.sparkContext.hadoopConfiguration
-      val files = names.map { f =>
-        val p = new Path(TxLogTable.dataFilePath(tablePath, f))
-        val st = p.getFileSystem(conf).getFileStatus(p)
-        PartitionedFile(
-          org.apache.spark.sql.catalyst.InternalRow.empty,
-          org.apache.spark.paths.SparkPath.fromPath(st.getPath),
-          0L, st.getLen, Array.empty[String], st.getModificationTime, st.getLen)
-      }
-      FilePartition.getFilePartitions(sparkSession, files,
-        sparkSession.sessionState.conf.filesMaxPartitionBytes)
-        .toArray[org.apache.spark.sql.connector.read.InputPartition]
+    val names = TxLogRead.microBatch(log, lo, hi, first = lo == 0L,
+        ignoreDeletes) match {
+      case Left(snap) =>
+        // race guards, mirroring BOTH of the scan builder's V1-fallback
+        // conditions: deletion vectors or a rename/dropcolumn landing
+        // after the table's snapshot chose this vectorized path would
+        // respectively leave masked rows unmasked or silently null-fill
+        // the remapped column (this path reads physical parquet names
+        // against the logical schema)
+        if (snap.hasDeletionVectors) throw new IllegalStateException(
+          s"table $tablePath gained deletion vectors before the stream's " +
+            "first batch — restart the query (the scan re-plans through " +
+            "the DV-aware path)")
+        if (snap.renames.nonEmpty) throw new IllegalStateException(
+          s"table $tablePath gained a column mapping (rename/drop column) " +
+            "before the stream's first batch — restart the query (the " +
+            "scan re-plans through the mapping-aware path)")
+        // a DROP COLUMN leaves renames empty (only `dropped` grows), and
+        // once it lands below `lo` no later batch's mappingChangeVersions
+        // range ever sees it — so the ONLY place to catch a drop racing
+        // the first batch is here, against the dropped set of the
+        // snapshot the stream's schema came from (historical drops
+        // present there are vectorized-safe: old files carry the column
+        // as ignorable extra data)
+        if (snap.dropped != buildDropped) throw new IllegalStateException(
+          s"table $tablePath dropped column(s) " +
+            s"${(snap.dropped -- buildDropped).mkString(", ")} before the " +
+            "stream's first batch — restart the query (the stream's fixed " +
+            "start schema would silently null-fill them from post-drop files)")
+        snap.files
+      case Right(added) =>
+        // a mid-stream rename/dropcolumn passes the reader gate on a
+        // table with no declared protocol, but this vectorized path
+        // cannot serve it (physical parquet names vs the stream's
+        // logical start-schema → silent null-fill) — refuse loudly
+        val remaps = log.mappingChangeVersions(lo, hi)
+        if (remaps.nonEmpty) throw new IllegalStateException(
+          s"table $tablePath has column-mapping commit(s) " +
+            s"${remaps.mkString(", ")} in the streamed range ($lo, $hi] — " +
+            "restart the query from a fresh checkpoint (the scan re-plans " +
+            "through the mapping-aware path)")
+        added
     }
-    // INITIAL batch (lo == 0): the snapshot's live files at `hi` —
-    // same semantics as the v1 format source. On a retention-managed
-    // table the expired appends live only in the log checkpoint; the
-    // commit replay would silently miss them. No DV masking needed
-    // here: this vectorized stream path is only built when the scan
-    // snapshot carries no deletion vectors (the DV case bridges
-    // through the V1Scan fallback, which has no micro-batch form).
-    if (lo == 0L) {
-      if (!log.has(hi)) throw new IllegalStateException(
-        s"stream checkpoint pins initial snapshot version $hi of " +
-          s"$tablePath, which was expired by log retention — the batch " +
-          "cannot be reproduced. Restart from a fresh checkpoint")
-      val snap = log.snapshot(Some(hi))
-      // race guards, mirroring BOTH of the scan builder's V1-fallback
-      // conditions: a deleteVectors or a rename/dropcolumn landing
-      // between scan build (which chose this vectorized path on a
-      // DV-free, mapping-free snapshot) and the first batch would
-      // respectively leave masked rows unmasked or silently null-fill
-      // the remapped column (this path reads physical parquet names
-      // against the logical schema)
-      if (snap.hasDeletionVectors) throw new IllegalStateException(
-        s"table $tablePath gained deletion vectors before the stream's " +
-          "first batch — restart the query (the scan re-plans through " +
-          "the DV-aware path)")
-      if (snap.renames.nonEmpty) throw new IllegalStateException(
-        s"table $tablePath gained a column mapping (rename/drop column) " +
-          "before the stream's first batch — restart the query (the " +
-          "scan re-plans through the mapping-aware path)")
-      // a DROP COLUMN leaves renames empty (only `dropped` grows), and
-      // once it lands below `lo` no later batch's mappingChangeVersions
-      // range ever sees it — so the ONLY place to catch a drop racing
-      // the first batch is here, against the scan-build-time dropped
-      // set (historical drops present at build are vectorized-safe:
-      // old files carry the column as ignorable extra data)
-      if (snap.dropped != buildDropped) throw new IllegalStateException(
-        s"table $tablePath dropped column(s) " +
-          s"${(snap.dropped -- buildDropped).mkString(", ")} before the " +
-          "stream's first batch — restart the query (the stream's fixed " +
-          "start schema would silently null-fill them from post-drop files)")
-      return partitionsFor(snap.files)
+    val conf = sparkSession.sparkContext.hadoopConfiguration
+    val files = names.map { f =>
+      val p = new Path(TxLogTable.dataFilePath(tablePath, f))
+      val st = p.getFileSystem(conf).getFileStatus(p)
+      PartitionedFile(
+        org.apache.spark.sql.catalyst.InternalRow.empty,
+        org.apache.spark.paths.SparkPath.fromPath(st.getPath),
+        0L, st.getLen, Array.empty[String], st.getModificationTime, st.getLen)
     }
-    // retention guard: versions this batch owes that expireLog
-    // reclaimed would be SILENTLY skipped by the commit replay below
-    // (versions are dense — any hole is retention, not absence)
-    val missing = log.missingVersions(lo, hi)
-    if (missing.nonEmpty) throw new IllegalStateException(
-      s"stream over $tablePath owes version(s) " +
-        s"${missing.head}..${missing.last} which were expired by log " +
-        "retention — the incremental feed is gapped. Re-sync from a " +
-        "batch snapshot read and a fresh checkpoint instead of " +
-        "silently skipping the expired commits")
-    // a mid-stream rename/dropcolumn passes checkStreamReadProtocol on
-    // a table with no declared protocol, but this vectorized path
-    // cannot serve it (physical parquet names vs the stream's logical
-    // start-schema → silent null-fill) — refuse loudly instead
-    val remaps = log.mappingChangeVersions(lo, hi)
-    if (remaps.nonEmpty) throw new IllegalStateException(
-      s"table $tablePath has column-mapping commit(s) " +
-        s"${remaps.mkString(", ")} in the streamed range ($lo, $hi] — " +
-        "restart the query from a fresh checkpoint (the scan re-plans " +
-        "through the mapping-aware path)")
-    if (!ignoreDeletes) {
-      val rewrites = log.rewriteVersions(lo, hi)
-      if (rewrites.nonEmpty) throw new IllegalStateException(
-        s"table $tablePath has row-level delete/update commit(s) " +
-          s"${rewrites.mkString(", ")} in the streamed range ($lo, $hi] — " +
-          "an append-only stream cannot reflect them. Either restart from " +
-          "a fresh checkpoint, read the change feed, or set option " +
-          "'ignoreDeletes' = true to stream inserts only")
-    }
-    partitionsFor(log.addedFiles(lo, hi))
+    FilePartition.getFilePartitions(sparkSession, files,
+      sparkSession.sessionState.conf.filesMaxPartitionBytes)
+      .toArray[org.apache.spark.sql.connector.read.InputPartition]
   }
 
   override def createReaderFactory()

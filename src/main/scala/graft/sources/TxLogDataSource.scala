@@ -5,9 +5,8 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession, SQLContext}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
-import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, LogicalRelation, PartitionDirectory}
+import org.apache.spark.sql.execution.datasources.{FileIndex, LogicalRelation, PartitionDirectory}
 import org.apache.spark.sql.graftshim
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.execution.streaming.{Offset => OffsetV1, Sink, Source}
 import org.apache.spark.sql.execution.streaming.runtime.LongOffset
 import org.apache.spark.sql.sources.{BaseRelation, CreatableRelationProvider, DataSourceRegister, RelationProvider, StreamSinkProvider, StreamSourceProvider}
@@ -103,12 +102,8 @@ final class TxLogDataSource extends RelationProvider
     val base = schema.getOrElse(TxLogTable.scanSnapshot(
       sqlContext.sparkSession, TxLogDataSource.pathOf(parameters), None)
       .logicalSchema)
-    val withFeed =
-      if (!parameters.get("readChangeFeed").exists(_.trim.toBoolean)) base
-      else StructType(base.fields ++ Seq(
-        StructField("_change_type", StringType, nullable = true),
-        StructField("_commit_version", LongType, nullable = true)))
-    (shortName(), withFeed)
+    (shortName(), TxLogStreamSource.streamSchema(base,
+      parameters.get("readChangeFeed").exists(_.trim.toBoolean)))
   }
 
   override def createSource(sqlContext: SQLContext, metadataPath: String,
@@ -128,44 +123,13 @@ final class TxLogDataSource extends RelationProvider
     // instead of a snapshot
     parameters.get("changesFrom") match {
       case Some(fromRaw) =>
-        val from = fromRaw.trim.toLong
         val to = parameters.get("changesTo").map(_.trim.toLong)
           .getOrElse(TxLogTable.versions(spark, path).max)
-        val df = TxLogTable.changes(spark, path, from, to)
-        new BaseRelation with org.apache.spark.sql.sources.TableScan {
-          override def sqlContext: SQLContext = spark.sqlContext
-          override def schema: StructType = df.schema
-          override def buildScan(): org.apache.spark.rdd.RDD[org.apache.spark.sql.Row] =
-            df.rdd
-        }
+        TxLogRead.bridge(spark,
+          TxLogTable.changes(spark, path, fromRaw.trim.toLong, to))
       case None =>
-        val version = TxLogDataSource.resolveVersion(spark, path, parameters)
-        val snap = TxLogTable.scanSnapshot(spark, path, version)
-        if (snap.hasDeletionVectors || snap.renames.nonEmpty) {
-          // outstanding merge-on-read deletion vectors (the file-level
-          // scan cannot express the row mask) or an active column
-          // mapping (files carry physical names the relation cannot
-          // re-label): serve the library plan through a bridged
-          // relation — correctness first; the DV tax retires at the
-          // next compact(), the mapping tax when the table is
-          // overwritten under its logical names
-          val df = TxLogTable.read(spark, path, version)
-          new BaseRelation with org.apache.spark.sql.sources.TableScan {
-            override def sqlContext: SQLContext = spark.sqlContext
-            override def schema: StructType = df.schema
-            override def buildScan(): org.apache.spark.rdd.RDD[org.apache.spark.sql.Row] =
-              df.rdd
-          }
-        } else {
-          val index = new TxLogFileIndex(spark, path, snap)
-          HadoopFsRelation(
-            location = index,
-            partitionSchema = StructType(Nil),
-            dataSchema = index.dataSchema,
-            bucketSpec = None,
-            fileFormat = new ParquetFileFormat,
-            options = parameters)(spark)
-        }
+        TxLogRead.relation(spark, path, TxLogTable.scanSnapshot(spark, path,
+          TxLogDataSource.resolveVersion(spark, path, parameters)), parameters)
     }
   }
 
@@ -210,7 +174,9 @@ private object TxLogDataSource {
   * for time travel, so reading them remains correct), and a replayed
   * txn append commits nothing — so nothing is ever streamed twice.
   * Offsets live in the query checkpoint: a restarted query resumes
-  * from its last committed version with no reprocessing.
+  * from its last committed version with no reprocessing. Which batch
+  * reads what, and what it refuses, is [[TxLogRead.microBatch]],
+  * shared with the catalog's [[GraftMicroBatchStream]].
   */
 final class TxLogStreamSource(spark: SparkSession, tablePath: String,
     ignoreDeletes: Boolean = false,
@@ -226,13 +192,8 @@ final class TxLogStreamSource(spark: SparkSession, tablePath: String,
   // is what the stream serves
   private val snap0 = TxLogTable.scanSnapshot(spark, tablePath, None)
 
-  override val schema: StructType = {
-    val base = snap0.logicalSchema
-    if (!readChangeFeed) base
-    else StructType(base.fields ++ Seq(
-      StructField("_change_type", StringType, nullable = true),
-      StructField("_commit_version", LongType, nullable = true)))
-  }
+  override val schema: StructType =
+    TxLogStreamSource.streamSchema(snap0.logicalSchema, readChangeFeed)
 
   override def getOffset: Option[OffsetV1] =
     graft.sink.TxLogTable.versions(spark, tablePath)
@@ -245,100 +206,53 @@ final class TxLogStreamSource(spark: SparkSession, tablePath: String,
     // insert/delete feed for the version range — deletes are first-
     // class rows here, so DML commits stream instead of failing the
     // query (the streaming half of the CDC loop; the batch half is
-    // the changesFrom read). The feed plan is re-tagged through the
-    // executed-rows bridge (same pattern as the streaming sink).
-    // No separate protocol/gap check here: changes() runs the reader
-    // gate and the expired-range refusal itself.
-    if (readChangeFeed) {
-      val feed = TxLogTable.changes(spark, tablePath, lo, hi)
-      val aligned = feed.select(schema.fieldNames.toSeq.map { n =>
-        if (feed.columns.contains(n)) org.apache.spark.sql.functions.col(n)
-        else org.apache.spark.sql.functions.lit(null)
-          .cast(schema(n).dataType).as(n)
-      }: _*)
-      return graftshim.ColumnShim.internalCreateDataFrame(
-        spark, aligned.queryExecution.toRdd, schema, isStreaming = true)
+    // the changesFrom read). changes() runs the reader gate and the
+    // expired-range refusal itself.
+    if (readChangeFeed)
+      streamRows(TxLogTable.changes(spark, tablePath, lo, hi), schema)
+    else TxLogRead.microBatch(TxLogTable.openLog(spark, tablePath), lo, hi,
+        first = start.isEmpty, ignoreDeletes) match {
+      case scala.util.Left(snap) =>
+        // the snapshot is already DV-masked and rename-aware, so
+        // rewrites before `hi` need no special-casing. All-nullable:
+        // the incremental path reads parquet (nullable attributes) —
+        // the initial batch must agree or a downstream stateful
+        // operator pins the stricter key schema and the first RESTART
+        // fails the state-store schema check
+        streamRows(TxLogTable.frame(spark, tablePath, snap),
+          StructType(schema.fields.map(_.copy(nullable = true))))
+      case scala.util.Right(files) if files.isEmpty =>
+        // the engine requires isStreaming=true on the returned plan
+        graftshim.ColumnShim.ofRows(spark, LocalRelation(
+          schema.fields.toSeq.map(f =>
+            AttributeReference(f.name, f.dataType, f.nullable)()),
+          Nil, isStreaming = true))
+      case scala.util.Right(files) =>
+        // read the parquet bytes under their PHYSICAL names, serve the
+        // stream's logical schema via one aliasing projection; a plain
+        // parquet read is batch-tagged, so retag its LogicalRelation
+        val raw = spark.read.schema(snap0.schema)
+          .parquet(files.map(f => TxLogTable.dataFilePath(tablePath, f)): _*)
+        val df = raw.select(snap0.schema.fieldNames.toSeq.map { p =>
+          org.apache.spark.sql.functions.col(p)
+            .as(snap0.renames.getOrElse(p, p))
+        }: _*)
+        graftshim.ColumnShim.ofRows(spark, df.queryExecution.analyzed.transform {
+          case lr: LogicalRelation => lr.copy(isStreaming = true)
+        })
     }
-    // ONE log listing serves the whole batch. The reader gate runs on
-    // the latest snapshot every batch: a reader feature declared AFTER
-    // this source resolved snap0 must stop the query, not be replayed
-    // with legacy semantics
-    val log = TxLogTable.openLog(spark, tablePath)
-    log.snapshot()
-    // INITIAL batch of a fresh stream: serve the SNAPSHOT at `hi`
-    // (the public lake sources' semantics), not the append-commit
-    // replay — on a retention-managed table the early appends live
-    // only in the checkpoint, and the replay would silently miss
-    // them; the snapshot is also already DV-masked and rename-aware,
-    // so rewrites before `hi` need no special-casing
-    if (start.isEmpty) {
-      // a REPLAYED initial batch (offset logged, commit lost) pins a
-      // snapshot version that log retention may have reclaimed — the
-      // exact batch is unrecoverable, so fail with the retention
-      // story, not a bare version-missing error
-      if (!log.has(hi))
-        throw new IllegalStateException(
-          s"stream checkpoint pins initial snapshot version $hi of " +
-            s"$tablePath, which was expired by log retention — the " +
-            "batch cannot be reproduced. Restart from a fresh checkpoint")
-      val snapDf = TxLogTable.frame(spark, tablePath, log.snapshot(Some(hi)))
-      val aligned = snapDf.select(schema.fieldNames.toSeq.map { n =>
-        if (snapDf.columns.contains(n)) org.apache.spark.sql.functions.col(n)
-        else org.apache.spark.sql.functions.lit(null)
-          .cast(schema(n).dataType).as(n)
-      }: _*)
-      // all-nullable: the incremental path reads parquet (nullable
-      // attributes) — the initial batch must agree or a downstream
-      // stateful operator pins the stricter key schema and the first
-      // RESTART fails the state-store schema check
-      val nullable = StructType(schema.fields.map(_.copy(nullable = true)))
-      return graftshim.ColumnShim.internalCreateDataFrame(
-        spark, aligned.queryExecution.toRdd, nullable, isStreaming = true)
-    }
-    // RESTART below the retention horizon: versions the checkpointed
-    // offset still owes were expired — the survivors would stream as
-    // if complete, silently dropping the expired commits' rows
-    val missing = log.missingVersions(lo, hi)
-    if (missing.nonEmpty) throw new IllegalStateException(
-      s"stream checkpoint resumes at version $lo of $tablePath but " +
-        s"version(s) ${missing.head}..${missing.last} were expired by " +
-        "log retention — the incremental feed is gapped. Restart from " +
-        "a fresh checkpoint (the initial batch serves the current " +
-        "snapshot) instead of silently skipping the expired commits")
-    // a row-level DELETE/UPDATE cannot be expressed by an append-only
-    // stream: silently skipping it would leave downstream state
-    // wrong, so fail loudly unless the user opted in — the public
-    // lake-table streaming source's ignoreDeletes contract
-    if (!ignoreDeletes) {
-      val rewrites = log.rewriteVersions(lo, hi)
-      if (rewrites.nonEmpty) throw new IllegalStateException(
-        s"table $tablePath has row-level delete/update commit(s) " +
-          s"${rewrites.mkString(", ")} in the streamed range ($lo, $hi] — " +
-          "an append-only stream cannot reflect them. Either restart from " +
-          "a fresh checkpoint, read the change feed (changesFrom), or set " +
-          "option 'ignoreDeletes' = true to stream inserts only")
-    }
-    val files = log.addedFiles(lo, hi)
-    // the engine requires isStreaming=true on the returned plan; a
-    // plain parquet read is batch-tagged, so retag its LogicalRelation
-    // (empty ranges return a streaming-tagged empty LocalRelation)
-    val attrs = schema.fields.toSeq.map(f =>
-      AttributeReference(f.name, f.dataType, f.nullable)())
-    if (files.isEmpty)
-      graftshim.ColumnShim.ofRows(spark, LocalRelation(attrs, Nil, isStreaming = true))
-    else {
-      // read the parquet bytes under their PHYSICAL names, serve the
-      // stream's logical schema via one aliasing projection
-      val raw = spark.read.schema(snap0.schema)
-        .parquet(files.map(f => TxLogTable.dataFilePath(tablePath, f)): _*)
-      val df = raw.select(snap0.schema.fieldNames.toSeq.map { p =>
-        org.apache.spark.sql.functions.col(p)
-          .as(snap0.renames.getOrElse(p, p))
-      }: _*)
-      graftshim.ColumnShim.ofRows(spark, df.queryExecution.analyzed.transform {
-        case lr: LogicalRelation => lr.copy(isStreaming = true)
-      })
-    }
+  }
+
+  /** `df` projected by name onto `target` (columns it lacks null-fill)
+    * and re-tagged streaming through the executed-rows bridge (same
+    * pattern as the streaming sink). */
+  private def streamRows(df: DataFrame, target: StructType): DataFrame = {
+    val aligned = df.select(target.fields.toSeq.map { f =>
+      if (df.columns.contains(f.name)) org.apache.spark.sql.functions.col(f.name)
+      else org.apache.spark.sql.functions.lit(null).cast(f.dataType).as(f.name)
+    }: _*)
+    graftshim.ColumnShim.internalCreateDataFrame(
+      spark, aligned.queryExecution.toRdd, target, isStreaming = true)
   }
 
   /** Offsets come back as SerializedOffset after a restart. */
@@ -348,6 +262,17 @@ final class TxLogStreamSource(spark: SparkSession, tablePath: String,
   }
 
   override def stop(): Unit = ()
+}
+
+private[graft] object TxLogStreamSource {
+
+  /** `base` as a stream serves it: with `readChangeFeed`, plus the
+    * change-feed columns [[TxLogTable.changes]] tags each row with. */
+  def streamSchema(base: StructType, readChangeFeed: Boolean): StructType =
+    if (!readChangeFeed) base
+    else StructType(base.fields ++ Seq(
+      StructField("_change_type", StringType, nullable = true),
+      StructField("_commit_version", LongType, nullable = true)))
 }
 
 /** Commit-log-backed file listing with stats pruning: the moment

@@ -43,6 +43,23 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  /** A fresh table name in namespace `ns` of the `graft` catalog, and
+    * the table root it maps to (nothing is created there yet). The
+    * catalog is registered unless a suite already did: catalogs are
+    * cached per session, so the first registration's warehouse holds.
+    */
+  def graftCatalogTable(ns: String): (String, String) = {
+    if (spark.conf.getOption("spark.sql.catalog.graft").isEmpty) {
+      spark.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
+      spark.conf.set("spark.sql.catalog.graft.warehouse",
+        java.nio.file.Files.createTempDirectory("graft_cat_wh").toString)
+    }
+    spark.sql(s"CREATE NAMESPACE IF NOT EXISTS graft.$ns")
+    val name = "t_" + java.util.UUID.randomUUID().toString.replace("-", "")
+    (s"graft.$ns.$name",
+      s"${spark.conf.get("spark.sql.catalog.graft.warehouse")}/$ns/$name")
+  }
+
   /** A local file named by a Hadoop path string (`file:/...` or `/...`). */
   def localPath(file: String): java.nio.file.Path =
     java.nio.file.Paths.get(new org.apache.hadoop.fs.Path(file).toUri.getPath)

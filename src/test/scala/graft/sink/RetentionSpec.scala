@@ -113,15 +113,21 @@ class RetentionSpec extends SparkSpec {
     assert(rows(t, Some(1L)) === expected(1))
   }
 
-  test("a restarted stream whose checkpointed offset fell below the retention horizon fails loudly") {
-    val t = freshTable()
+  /** A stream restarted over an expired version it still owes must
+    * fail loudly — read by path through the format, or by name through
+    * the `graft` catalog; both surfaces run the same micro-batch gate. */
+  private def gappedResume(catalog: Boolean): Unit = {
+    val (name, t) =
+      if (catalog) graftCatalogTable("ret") else ("", freshTable())
     TxLogTable.append(Seq((1L, "r1")).toDF("id", "v").coalesce(1), t)
     val ckpt = java.nio.file.Files.createTempDirectory("ret_sckpt").toString
     val out = java.nio.file.Files.createTempDirectory("ret_sout")
       .resolve("o").toString
     def run(): Unit = {
-      val q = spark.readStream.format("graft-txlog").load(t)
-        .writeStream.format("parquet")
+      val in =
+        if (catalog) spark.readStream.table(name)
+        else spark.readStream.format("graft-txlog").load(t)
+      val q = in.writeStream.format("parquet")
         .option("checkpointLocation", ckpt).option("path", out).start()
       try q.processAllAvailable() finally q.stop()
     }
@@ -141,6 +147,14 @@ class RetentionSpec extends SparkSpec {
       s"gapped resume must fail loudly, got: ${causeMessages(err)}")
     assert(spark.read.parquet(out).count() === 1L,
       "no rows may be served past the gap")
+  }
+
+  test("a restarted stream whose checkpointed offset fell below the retention horizon fails loudly") {
+    gappedResume(catalog = false)
+  }
+
+  test("a restarted catalog stream (readStream.table) below the retention horizon fails loudly") {
+    gappedResume(catalog = true)
   }
 
   test("retention ABOVE the stream's offset leaves a live stream undisturbed") {

@@ -42,11 +42,12 @@ class TxLogAccessSpec extends SparkSpec {
   private def eachOnce(n: Int): Map[String, Int] =
     (1 to n).map(v => f"$v%020d.txt" -> 1).toMap
 
-  /** One listing, and each of the table's five commits opened once. */
+  /** One listing, and each of the table's commits (five by default)
+    * opened once. */
   private def assertOnePass(what: String, listings: Int,
-      opens: Map[String, Int]): Unit = {
+      opens: Map[String, Int], commits: Int = 5): Unit = {
     assert(listings === 1, s"$what: $listings listings, opens $opens")
-    assert(opens === eachOnce(5), s"$what: log files opened $opens")
+    assert(opens === eachOnce(commits), s"$what: log files opened $opens")
   }
 
   test("a plain append lists the log once and opens each commit once") {
@@ -101,6 +102,43 @@ class TxLogAccessSpec extends SparkSpec {
       st.deserializeOffset("2"), st.deserializeOffset("5")))
     assertOnePass("v2 planInputPartitions", l, o)
     assert(parts.nonEmpty)
+  }
+
+  /** The five-append table of [[table]] at `ns.t` of a `graft` catalog
+    * whose warehouse lives under the counting scheme, with v6 a
+    * deletion-vector delete when `dv`; its qualified name and root. */
+  private def catalogTable(dv: Boolean): (String, String) = {
+    val wh = s"countlog://${Files.createTempDirectory("txlog-access-wh")}"
+    val cat = "countcat" + java.util.UUID.randomUUID().toString.take(8)
+    spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
+    spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
+    val t = s"$wh/ns/t"
+    for (i <- 1 to 5)
+      TxLogTable.append(Seq((i.toLong, s"r$i")).toDF("id", "v").coalesce(1), t)
+    if (dv) TxLogTable.deleteVectors(spark, t, "id = 2")
+    (s"$cat.ns.t", t)
+  }
+
+  test("a catalog read lists the log once") {
+    val (name, _) = catalogTable(dv = false)
+    val (rows, l, o) = measure(spark.table(name).where("id > 1").collect())
+    assert(rows.length === 4)
+    assertOnePass("catalog read", l, o)
+  }
+
+  test("a format read of a table with deletion vectors lists the log once") {
+    val (_, t) = catalogTable(dv = true)
+    val (rows, l, o) = measure(
+      spark.read.format("graft-txlog").load(t).where("id > 0").collect())
+    assert(rows.map(_.getLong(0)).sorted.toSeq === Seq(1L, 3L, 4L, 5L))
+    assertOnePass("format read with DVs", l, o, commits = 6)
+  }
+
+  test("a catalog read of a table with deletion vectors lists the log once") {
+    val (name, _) = catalogTable(dv = true)
+    val (rows, l, o) = measure(spark.table(name).where("id > 0").collect())
+    assert(rows.map(_.getLong(0)).sorted.toSeq === Seq(1L, 3L, 4L, 5L))
+    assertOnePass("catalog read with DVs", l, o, commits = 6)
   }
 
   test("a writer that loses the race reads only the commit it missed") {

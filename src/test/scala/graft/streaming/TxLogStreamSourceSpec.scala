@@ -141,24 +141,29 @@ class TxLogStreamSourceSpec extends SparkSpec {
       "every committed version must be a distinct txn append")
   }
 
-  test("a row-level delete fails the append-only stream unless ignoreDeletes is set") {
+  /** The append-only stream's delete guard and its `ignoreDeletes`
+    * opt-out — read by path through the format, or by name through the
+    * `graft` catalog; both surfaces run the same micro-batch gate. */
+  private def deleteGuard(catalog: Boolean): Unit = {
     val tmp = Files.createTempDirectory("graft-txguard")
-    val table = tmp.resolve("t").toString
+    val (tableName, table) =
+      if (catalog) graftCatalogTable("guard") else ("", tmp.resolve("t").toString)
     val ckpt = tmp.resolve("ckpt").toString
+    val sink = if (catalog) "cguard" else "guard"
     def batch(ids: Range) = ids.map(i => (i.toLong, s"r$i")).toDF("id", "v")
 
     TxLogTable.append(batch(0 until 4).coalesce(1), table)
     def start(name: String, opts: Map[String, String]) = {
-      val r = spark.readStream.format("graft-txlog")
-      opts.foreach { case (k, v) => r.option(k, v) }
-      r.load(table)
-        .groupBy("id").agg(count(lit(1)).as("n"))
+      val in =
+        if (catalog) spark.readStream.options(opts).table(tableName)
+        else spark.readStream.options(opts).format("graft-txlog").load(table)
+      in.groupBy("id").agg(count(lit(1)).as("n"))
         .writeStream.format("memory").queryName(name)
         .outputMode(OutputMode.Complete())
         .option("checkpointLocation", ckpt)
         .start()
     }
-    val q1 = start("guard1", Map.empty)
+    val q1 = start(s"${sink}1", Map.empty)
     q1.processAllAvailable()
     q1.stop()
 
@@ -166,7 +171,7 @@ class TxLogStreamSourceSpec extends SparkSpec {
     TxLogTable.append(batch(10 until 12).coalesce(1), table)
 
     // default: the un-streamable rewrite must fail the query loudly
-    val q2 = start("guard2", Map.empty)
+    val q2 = start(s"${sink}2", Map.empty)
     val ex = intercept[Exception] { q2.processAllAvailable() }
     def messages(t: Throwable): Seq[String] =
       Option(t).toSeq.flatMap(e => Option(e.getMessage).toSeq ++ messages(e.getCause))
@@ -175,13 +180,21 @@ class TxLogStreamSourceSpec extends SparkSpec {
     q2.stop()
 
     // opt-in: inserts-only streaming proceeds past the rewrite
-    val q3 = start("guard3", Map("ignoreDeletes" -> "true"))
+    val q3 = start(s"${sink}3", Map("ignoreDeletes" -> "true"))
     q3.processAllAvailable()
-    val counts = spark.table("guard3").as[(Long, Long)].collect().toMap
+    val counts = spark.table(s"${sink}3").as[(Long, Long)].collect().toMap
     q3.stop()
     assert(counts.keySet === Set(0L, 1L, 2L, 3L, 10L, 11L),
       "appends after the rewrite must stream; the delete is skipped by contract")
     assert(counts.values.forall(_ === 1L))
+  }
+
+  test("a row-level delete fails the append-only stream unless ignoreDeletes is set") {
+    deleteGuard(catalog = false)
+  }
+
+  test("a row-level delete fails the catalog stream (readStream.table) unless ignoreDeletes is set") {
+    deleteGuard(catalog = true)
   }
 
   test("readChangeFeed streams the row-level CDC feed incl. deletes, resumes on restart") {
