@@ -142,6 +142,15 @@ object TxLogTable {
   def overwrite(df: DataFrame, tablePath: String): Long =
     write(df, tablePath, overwrite = true, None)
 
+  /** [[append]] (or, with `overwrite`, [[overwrite]]) from `base`, a
+    * snapshot the caller already resolved, instead of a fresh listing
+    * of the log: the catalog's table commits from the snapshot it was
+    * loaded at. A base that fell behind loses the commit race and
+    * advances by the commits it missed, as any writer does. */
+  private[graft] def writeFrom(df: DataFrame, tablePath: String,
+      overwrite: Boolean, base: Snapshot): Long =
+    write(df, tablePath, overwrite, None, base = Some(base))
+
   /** MERGE INTO the table ([[graft.ops.Merge.upsert]] semantics:
     * matched keys replaced wholesale, unmatched appended) as a KEYED
     * copy-on-write rewrite: one column-pruned semi-join scan finds

@@ -293,7 +293,8 @@ final class GraftTable(tablePath: String, ident: Identifier,
 
   // ONE listing of the log per table instance, and one snapshot:
   // the schema, the properties and every scan built from this table
-  // serve the version it was loaded at — as a format relation does.
+  // serve the version it was loaded at — as a format relation does —
+  // and an INSERT commits from it.
   // Schema and scans run the reader gate; properties, like the other
   // metadata getters, read the latest state ungated.
   private lazy val log = TxLogTable.openLog(spark, tablePath)
@@ -348,8 +349,7 @@ final class GraftTable(tablePath: String, ident: Identifier,
         override def toInsertableRelation: InsertableRelation =
           new InsertableRelation {
             override def insert(data: DataFrame, ignored: Boolean): Unit =
-              if (overwrite) TxLogTable.overwrite(data, tablePath)
-              else TxLogTable.append(data, tablePath)
+              TxLogTable.writeFrom(data, tablePath, overwrite, snap)
           }
       }
     }

@@ -126,6 +126,13 @@ class TxLogAccessSpec extends SparkSpec {
     assertOnePass("catalog read", l, o)
   }
 
+  test("a catalog INSERT INTO lists the log once") {
+    val (name, t) = catalogTable(dv = false)
+    val (_, l, o) = measure(spark.sql(s"INSERT INTO $name VALUES (6, 'r6')"))
+    assertOnePass("catalog insert", l, o)
+    assert(TxLogTable.read(spark, t).select("id").as[Long].collect().sorted.toSeq === (1L to 6L))
+  }
+
   test("a format read of a table with deletion vectors lists the log once") {
     val (_, t) = catalogTable(dv = true)
     val (rows, l, o) = measure(
