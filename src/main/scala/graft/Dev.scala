@@ -5,7 +5,7 @@ import java.nio.file.{Files, Paths}
 import scala.collection.mutable.ArrayBuffer
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.FormattedMode
 import org.apache.spark.sql.graftshim.ColumnShim
@@ -18,13 +18,16 @@ import graft.ops.Pinned
 object Dev {
 
   private val Usage =
-    """usage: graft.Dev <command> <sfDir> ...
+    """usage: graft.Dev <command> ...
       |  show  <sfDir> <name>                        first 20 rows of one query
       |  plan  <sfDir> <name,...> <outDir> <suffix>  explain(formatted) per query, pinned
       |                                              sub-plans included, to <outDir>/<name>_<suffix>.txt
       |  audit <sfDir> <out.md>                      plan-shape table of every query
       |  time  <sfDir> <split> [prefix,...]          cold and warm run time per query
       |  jobs  <sfDir> <split> [prefix,...]          warm-run job census with each job's call site
+      |  ingest <out.json> [rows,...]                CsvIngestion.run on generated CSVs of each size
+      |                                              (default 20000,200000,2000000): MB/s, jobs,
+      |                                              tasks, ranges and core use per size, as JSON
       |plan and audit inspect static plans (AQE off). time and jobs run each
       |query into the noop sink with <split> as the scan split size, over the
       |queries whose names start with a prefix (all queries without one).""".stripMargin
@@ -46,6 +49,9 @@ object Dev {
         session(profile(split))(time(_, sf, matching(prefixes)))
       case "jobs" :: sf :: split :: prefixes if prefixes.size <= 1 =>
         session(profile(split))(jobs(_, sf, matching(prefixes)))
+      case "ingest" :: out :: sizes if sizes.size <= 1 =>
+        val rows = sizes.flatMap(_.split(',')).map(_.toInt)
+        session(Map.empty)(ingest(_, out, if (rows.isEmpty) Seq(20000, 200000, 2000000) else rows))
       case _ => System.err.println(Usage); sys.exit(2)
     }
   }
@@ -181,5 +187,67 @@ object Dev {
         f"tasks=${js.map(_.tasks).sum}%6d warm=$sec%.2f s")
       js.foreach(j => println(j.line))
     }
+  }
+
+  /** Land a seeded CSV of each size (`MakeCsv`, the ingest bench's
+    * shape) with `CsvIngestion.run` under the config of
+    * `configs/indicadores_municipios.json`: for 10 s (at least once)
+    * to warm up, then three timed runs. Writes, per size, the median
+    * run's input MB/s and its jobs, tasks and core use (executor run
+    * time over wall time times cores), and the byte ranges `CsvSource`
+    * cut the file into. */
+  private def ingest(spark: SparkSession, out: String, sizes: Seq[Int]): Unit = {
+    val work = Files.createTempDirectory("graft-ingest-ladder")
+    val cores = spark.sparkContext.defaultParallelism
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val tasks = new java.util.concurrent.atomic.AtomicInteger
+    val runMs = new java.util.concurrent.atomic.AtomicLong
+    spark.sparkContext.addSparkListener(new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+      override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
+        tasks.incrementAndGet()
+        Option(t.taskMetrics).foreach(m => runMs.addAndGet(m.executorRunTime))
+      }
+    })
+    val json = new com.fasterxml.jackson.databind.ObjectMapper()
+    val report = json.createObjectNode()
+    report.put("command", s"graft.Dev ingest $out ${sizes.mkString(",")}")
+    report.put("cores", cores)
+    report.put("runs", 3)
+    val rows = report.putArray("sizes")
+    sizes.foreach { n =>
+      val input = work.resolve(s"in-$n.csv")
+      MakeCsv.generate(n, n, input)
+      val base = graft.config.PipelineConfig.fromJsonFile("configs/indicadores_municipios.json")
+      val cfg = base.copy(csv = base.csv.map(_.copy(path = input.toString)),
+        sink = base.sink.copy(baseDir = work.resolve("bronze").toString))
+      final case class Run(seconds: Double, jobs: Int, tasks: Int, coreUtil: Double)
+      def land(): Run = {
+        ColumnShim.drainListenerBus(spark)
+        jobs.set(0); tasks.set(0); runMs.set(0)
+        val s = seconds(graft.pipeline.CsvIngestion.run(spark, cfg))
+        ColumnShim.drainListenerBus(spark)
+        Run(s, jobs.get, tasks.get, runMs.get / 1e3 / (s * cores))
+      }
+      val warm = System.nanoTime() + 10000000000L
+      land()
+      while (System.nanoTime() < warm) land()
+      val median = Seq.fill(3)(land()).sortBy(_.seconds).apply(1)
+      val bytes = Files.size(input)
+      val row = rows.addObject()
+      row.put("rows", n)
+      row.put("input_bytes", bytes)
+      row.put("ranges", graft.sources.CsvSource.read(spark, cfg.csv.get).rdd.getNumPartitions)
+      row.put("seconds_p50", median.seconds)
+      row.put("mb_per_s", bytes / 1e6 / median.seconds)
+      row.put("jobs", median.jobs)
+      row.put("tasks", median.tasks)
+      row.put("core_util", median.coreUtil)
+      println(s"[ingest] $row")
+      Files.delete(input)
+    }
+    scala.util.Using.resource(Files.walk(work))(_.sorted(java.util.Comparator.reverseOrder()).forEach(Files.delete(_)))
+    Files.write(Paths.get(out), (json.writerWithDefaultPrettyPrinter().writeValueAsString(report) + "\n").getBytes("UTF-8"))
+    println(s"[dev] wrote $out")
   }
 }

@@ -16,7 +16,7 @@ import org.apache.spark.sql.types._
   * default ANSI mode requires `try_cast` rather than `cast`.
   *
   * No cast evaluates a regular expression per row: the string kernels
-  * are `translate`, `btrim` and prefix/suffix tests, each one scan of
+  * are `replace`, `btrim` and prefix/suffix tests, each one scan of
   * the value.
   */
 object Casts {
@@ -66,13 +66,17 @@ object Casts {
     *
     * Reference `to_float_pt` (app/utils/casting.py:13-24): remove `.`
     * thousands separators, swap decimal `,` → `.`, then coerce;
-    * unparseable → NULL. "1.234,56" → "1234.56" → 1234.56. One
-    * `translate` does both edits: it maps each input character once,
-    * deleting every `.` and turning every `,` into `.`, which is what
-    * the reference's two passes produce.
+    * unparseable → NULL. "1.234,56" → "1234.56" → 1234.56.
     */
-  def toDoublePt(c: Column): Column =
-    translate(c.cast(StringType), ",.", ".").try_cast(DoubleType)
+  def toDoublePt(c: Column): Column = ptDecimalText(c.cast(StringType)).try_cast(DoubleType)
+
+  /** The reference's two edits, in its order: delete every `.`, then
+    * turn every `,` into `.`. Each is a `replace`, a byte-level search
+    * over the UTF-8 value; `translate`, the one-call form of the same
+    * function, decodes each value and looks each character up.
+    */
+  private[cast] def ptDecimalText(s: Column): Column =
+    replace(replace(s, lit("."), lit("")), lit(","), lit("."))
 
   /** Already-numeric columns pass through `to_float_pt` unchanged in the
     * reference (app/utils/casting.py:14-16); callers on typed columns

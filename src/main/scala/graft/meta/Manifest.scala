@@ -5,7 +5,7 @@ import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.IngestShim
 import graft.cast.Casts
-import graft.sink.BronzeWriter
+import graft.sink.{BronzeFile, BronzeWriter}
 
 /** Governance manifest sidecar — the engine's dataset-stats surface.
   *
@@ -141,7 +141,7 @@ object Manifest {
 
   /** Assemble the full manifest for a written file, its DataFrame and
     * the row counts, null counts and preview observed while it was
-    * written.
+    * written; the file's size and MD5 are read from the file.
     */
   def forWrittenFile(
       spark: SparkSession,
@@ -156,13 +156,29 @@ object Manifest {
     val p = new Path(filePath)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) throw new java.io.FileNotFoundException(filePath)
-    val status = fs.getFileStatus(p)
+    forBronzeFile(df, BronzeFile(filePath, fs.getFileStatus(p).getLen, md5OfFile(spark, filePath)),
+      dataset, rows, nulls, preview, extra, clock)
+  }
+
+  /** [[forWrittenFile]] for a file whose size and MD5 its writer took
+    * (`BronzeWriter.writeFile`), so the file is not read again.
+    */
+  def forBronzeFile(
+      df: DataFrame,
+      file: BronzeFile,
+      dataset: DatasetInfo,
+      rows: Long,
+      nulls: Map[String, Long],
+      preview: Seq[String],
+      extra: Map[String, String],
+      clock: java.time.Clock): Manifest = {
+    val p = new Path(file.path)
     Manifest(
       core = CoreInfo(
         fileName = p.getName,
         directory = p.getParent.toString,
-        sizeBytes = status.getLen,
-        md5 = md5OfFile(spark, filePath),
+        sizeBytes = file.sizeBytes,
+        md5 = file.md5,
         generatedAt = nowIso(clock)),
       dataset = dataset,
       schemaStats = SchemaStats(

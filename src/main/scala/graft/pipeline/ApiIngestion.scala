@@ -113,8 +113,10 @@ object ApiIngestion {
     val partValue = Casts.todayYyyymmdd(clock)
     // manifest records the full source URL (reference passes
     // endpoint=url into write_metadata_from_df, app/ingestao_api.py:205-215)
+    // A payload is a small frame parsed on the driver: one task lands
+    // it, and its one part becomes the bronze file.
     def land(df: DataFrame, cfg: PipelineConfig, endpointKey: String, extra: Map[String, String]) =
-      CsvIngestion.land(spark, df, cfg, partValue, runId, clock,
+      CsvIngestion.land(spark, df.coalesce(1), cfg, partValue, runId, clock,
         endpoint = cfg.api.map(a => a.baseUrl + a.endpoints.getOrElse(endpointKey, endpointKey)),
         extra = extra)
     // The two landings share no output, so users lands on a fresh thread

@@ -15,8 +15,11 @@ import graft.validate.Validate
   *
   * Unlike the reference, every step up to the write is LAZY plan
   * construction, and the run is ONE Spark job: the driver reads the
-  * header (`CsvSource`), and the job that writes the bronze file also
-  * observes the manifest's row count, null counts and preview.
+  * header and proves where the file may be cut (`CsvSource`), and the
+  * job parses and writes each byte range in its own task while it
+  * observes the manifest's row count, null counts and preview. The
+  * driver then joins the tasks' parts into the bronze file, taking its
+  * size and MD5 as it goes (`BronzeWriter.writeFile`).
   */
 final case class IngestionResult(
     dataFile: String,
@@ -72,7 +75,8 @@ object CsvIngestion {
     * both pipelines end with, in one Spark job. The manifest's row
     * count, null counts and preview ride the write job as an
     * observation, so they describe exactly the rows written and cost no
-    * second pass over the source.
+    * second pass over the source; the file's size and MD5 come from
+    * the writer, so the file is not read again.
     */
   private[pipeline] def land(
       spark: SparkSession,
@@ -87,7 +91,7 @@ object CsvIngestion {
     // and Spark applies a result stage's accumulator updates once per
     // partition, however many attempts a task took.
     val stats = Observation()
-    val dataFile = BronzeWriter.write(spark, Manifest.observed(df, stats), cfg.sink, partValue)
+    val file = BronzeWriter.writeFile(spark, Manifest.observed(df, stats), cfg.sink, partValue)
     val observed = stats.get
     val (rows, nulls) = Manifest.statsOf(df.columns.toIndexedSeq, observed)
     val info = DatasetInfo(
@@ -100,8 +104,7 @@ object CsvIngestion {
       runId = runId,
       producer = "graft",
       endpoint = endpoint)
-    val manifest = Manifest.forWrittenFile(spark, df, dataFile, info, rows, nulls,
-      Manifest.previewOf(observed), extra, clock)
-    IngestionResult(dataFile, Manifest.write(spark, manifest, dataFile), rows, Nil)
+    val manifest = Manifest.forBronzeFile(df, file, info, rows, nulls, Manifest.previewOf(observed), extra, clock)
+    IngestionResult(file.path, Manifest.write(spark, manifest, file.path), rows, Nil)
   }
 }

@@ -114,8 +114,11 @@ object QueryDef {
           .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
       else Seq(fs.getFileStatus(root))
     files.map { f =>
+      // read options from `hconf`: the one-argument `open` builds (and
+      // parses the XML of) a new Hadoop Configuration per file
       val rd = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(f, hconf))
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(f, hconf),
+        org.apache.parquet.HadoopReadOptions.builder(hconf).build())
       try rd.getRecordCount finally rd.close()
     }.sum
   }

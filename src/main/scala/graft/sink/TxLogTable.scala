@@ -7,6 +7,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.io.api.Binary
@@ -2078,7 +2079,9 @@ object TxLogTable {
   private def footerStats(conf: Configuration, file: Path): Map[String, ColStats] = {
     val enc = (s: String) =>
       Base64.getEncoder.encodeToString(s.getBytes(StandardCharsets.UTF_8))
-    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf))
+    // options from `conf`: the one-argument `open` builds a fresh
+    // Hadoop Configuration, re-parsing its XML resources, per footer
+    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf), HadoopReadOptions.builder(conf).build())
     try {
       val acc = scala.collection.mutable.Map.empty[String, (String, String, String)]
       val poisoned = scala.collection.mutable.Set.empty[String]

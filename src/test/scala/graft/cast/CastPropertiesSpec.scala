@@ -37,6 +37,20 @@ class CastPropertiesSpec extends SparkSpec {
     out.foreach(r => assert(r.get(1) === r.get(2), r))
   }
 
+  test("toDoublePt's two replaces are translate(s, \",.\", \".\") on generated strings") {
+    val draw = new scala.util.Random(11)
+    val pieces = Seq(",", ".", ",,", "..", ",.,", ".,.", "1", "23", "ção", "\u20ac", "日本", "\ud83d\ude00", " ", "-")
+    val strings = Seq(null, "", ",", ".", ",.", ".,", ",,,,", "....", "\u00e9,.\u00e9") ++ Seq.fill(2000) {
+      if (draw.nextInt(40) == 0) null
+      else Seq.fill(draw.nextInt(10))(pieces(draw.nextInt(pieces.length))).mkString
+    }
+    val out = strings.toDF("s")
+      .select(col("s"), Casts.ptDecimalText(col("s")), translate(col("s"), ",.", "."))
+      .collect()
+    assert(out.count(_.isNullAt(0)) > 1)
+    out.foreach(r => assert(r.get(1) === r.get(2), r))
+  }
+
   test("toLongLenient parses any long's toString, with or without .0") {
     val longs = Seq.fill(200)(rnd.nextLong() % 1000000000L)
     val out = longs.toDF("v")
