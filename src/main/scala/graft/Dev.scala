@@ -5,7 +5,7 @@ import java.nio.file.{Files, Paths}
 import scala.collection.mutable.ArrayBuffer
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.FormattedMode
 import org.apache.spark.sql.graftshim.ColumnShim
@@ -194,7 +194,8 @@ object Dev {
     * `configs/indicadores_municipios.json`: for 10 s (at least once)
     * to warm up, then three timed runs. Writes, per size, the median
     * run's input MB/s and its jobs, tasks and core use (executor run
-    * time over wall time times cores), and the byte ranges `CsvSource`
+    * time over wall time times cores), the wall time its jobs ran (the
+    * rest is the driver's own work), and the byte ranges `CsvSource`
     * cut the file into. */
   private def ingest(spark: SparkSession, out: String, sizes: Seq[Int]): Unit = {
     val work = Files.createTempDirectory("graft-ingest-ladder")
@@ -202,8 +203,10 @@ object Dev {
     val jobs = new java.util.concurrent.atomic.AtomicInteger
     val tasks = new java.util.concurrent.atomic.AtomicInteger
     val runMs = new java.util.concurrent.atomic.AtomicLong
+    val jobMs = new java.util.concurrent.atomic.AtomicLong
     spark.sparkContext.addSparkListener(new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+      override def onJobStart(j: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); jobMs.addAndGet(-j.time) }
+      override def onJobEnd(j: SparkListenerJobEnd): Unit = jobMs.addAndGet(j.time)
       override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
         tasks.incrementAndGet()
         Option(t.taskMetrics).foreach(m => runMs.addAndGet(m.executorRunTime))
@@ -221,13 +224,13 @@ object Dev {
       val base = graft.config.PipelineConfig.fromJsonFile("configs/indicadores_municipios.json")
       val cfg = base.copy(csv = base.csv.map(_.copy(path = input.toString)),
         sink = base.sink.copy(baseDir = work.resolve("bronze").toString))
-      final case class Run(seconds: Double, jobs: Int, tasks: Int, coreUtil: Double)
+      final case class Run(seconds: Double, jobs: Int, tasks: Int, coreUtil: Double, jobSeconds: Double)
       def land(): Run = {
         ColumnShim.drainListenerBus(spark)
-        jobs.set(0); tasks.set(0); runMs.set(0)
+        jobs.set(0); tasks.set(0); runMs.set(0); jobMs.set(0)
         val s = seconds(graft.pipeline.CsvIngestion.run(spark, cfg))
         ColumnShim.drainListenerBus(spark)
-        Run(s, jobs.get, tasks.get, runMs.get / 1e3 / (s * cores))
+        Run(s, jobs.get, tasks.get, runMs.get / 1e3 / (s * cores), jobMs.get / 1e3)
       }
       val warm = System.nanoTime() + 10000000000L
       land()
@@ -242,6 +245,7 @@ object Dev {
       row.put("mb_per_s", bytes / 1e6 / median.seconds)
       row.put("jobs", median.jobs)
       row.put("tasks", median.tasks)
+      row.put("job_seconds", median.jobSeconds)
       row.put("core_util", median.coreUtil)
       println(s"[ingest] $row")
       Files.delete(input)

@@ -1,23 +1,27 @@
 package graft.cast
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.ColumnShim
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Scalar cast layer — the engine's type-coercion surface.
   *
   * Mirrors the semantics of the reference's casting utilities
   * (reference: app/utils/casting.py:5-53) re-expressed as Spark
   * `Column => Column` functions. These compose built-in Catalyst
-  * expressions only, so whole-stage codegen applies; no UDFs.
+  * expressions and one static call ([[PythonStrip]]), so whole-stage
+  * codegen applies; no UDFs.
   *
   * All casts are *permissive*: unparseable input yields NULL (the
   * reference's `errors="coerce"` behavior), which under Spark 4's
   * default ANSI mode requires `try_cast` rather than `cast`.
   *
   * No cast evaluates a regular expression per row: the string kernels
-  * are `replace`, `btrim` and prefix/suffix tests, each one scan of
-  * the value.
+  * are `replace`, [[PythonStrip]] and prefix/suffix tests, each one
+  * scan of the value.
   */
 object Casts {
 
@@ -41,7 +45,7 @@ object Casts {
   /** The characters Python's `str.isspace()` accepts, which pandas'
     * `str.strip()` removes from both ends of a value.
     */
-  private val PythonWhitespace: String =
+  private[cast] val PythonWhitespace: String =
     "\t\n\u000b\f\r\u001c\u001d\u001e\u001f \u0085\u00a0\u1680" +
       "\u2000\u2001\u2002\u2003\u2004\u2005\u2006\u2007\u2008\u2009\u200a" +
       "\u2028\u2029\u202f\u205f\u3000"
@@ -56,11 +60,17 @@ object Casts {
     * SURVEY.md §7.4 — golden data has no nulls in string fields).
     */
   def toCleanString(c: Column): Column = {
-    val stripped = btrim(c.cast(StringType), lit(PythonWhitespace))
+    val stripped = stripPython(c.cast(StringType))
     val unlead = when(stripped.startsWith("\""), stripped.substr(lit(2), length(stripped)))
       .otherwise(stripped)
     when(unlead.endsWith("\""), unlead.substr(lit(1), length(unlead) - 1)).otherwise(unlead)
   }
+
+  /** `btrim(s, PythonWhitespace)` as one codegen'd call of
+    * [[PythonStrip.strip]]: Spark's `trim` searches the 29-character
+    * set for every end character it tests. */
+  private[cast] def stripPython(s: Column): Column =
+    ColumnShim.column(StaticInvoke(PythonStrip.getClass, StringType, "strip", Seq(ColumnShim.expression(s))))
 
   /** Brazilian-locale numeric string → nullable DOUBLE.
     *
@@ -131,4 +141,62 @@ object Casts {
     */
   def todayYyyymmdd(clock: java.time.Clock = java.time.Clock.systemDefaultZone()): String =
     java.time.LocalDate.now(clock).format(java.time.format.DateTimeFormatter.BASIC_ISO_DATE)
+}
+
+/** Python's `str.strip()` on a UTF-8 value: [[Casts.PythonWhitespace]]
+  * removed from both ends. An ASCII end byte is looked up in a
+  * 128-entry table; only a multi-byte end character is decoded, and
+  * only it is compared with the set's non-ASCII members. Called from
+  * generated code through `StaticInvoke` ([[Casts.stripPython]]).
+  */
+object PythonStrip {
+
+  private val (ascii, others) = Casts.PythonWhitespace.partition(_ < 0x80)
+
+  private val AsciiSpace: Array[Boolean] = {
+    val t = new Array[Boolean](0x80)
+    ascii.foreach(c => t(c) = true)
+    t
+  }
+
+  private val OtherSpace: Array[Int] = others.map(_.toInt).toArray.sorted
+
+  def strip(s: UTF8String): UTF8String = {
+    val n = s.numBytes
+    var start = 0
+    var len = spaceAt(s, start, n)
+    while (len > 0) {
+      start += len
+      len = spaceAt(s, start, n)
+    }
+    var end = n
+    var done = false
+    while (!done && end > start) {
+      // the last character starts at most 3 continuation bytes back
+      var i = end - 1
+      while (i > start && end - i < 4 && (s.getByte(i) & 0xc0) == 0x80) i -= 1
+      if (spaceAt(s, i, n) == end - i) end = i else done = true
+    }
+    if (start == 0 && end == n) s else s.copyUTF8String(start, end - 1)
+  }
+
+  /** The byte length of the character at byte `i` when it is Python
+    * whitespace, else 0 (also at the end and for a malformed byte). */
+  private def spaceAt(s: UTF8String, i: Int, n: Int): Int =
+    if (i >= n) 0
+    else {
+      val b = s.getByte(i)
+      if (b >= 0) { if (AsciiSpace(b)) 1 else 0 }
+      else {
+        // every non-ASCII member is 2 or 3 bytes long
+        val len = if ((b & 0xe0) == 0xc0) 2 else if ((b & 0xf0) == 0xe0) 3 else 0
+        var cp = b & (0x7f >> len)
+        var k = 1
+        while (k < len && i + k < n && (s.getByte(i + k) & 0xc0) == 0x80) {
+          cp = (cp << 6) | (s.getByte(i + k) & 0x3f)
+          k += 1
+        }
+        if (len > 0 && k == len && java.util.Arrays.binarySearch(OtherSpace, cp) >= 0) len else 0
+      }
+    }
 }

@@ -1,9 +1,8 @@
 package graft.meta
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftshim.IngestShim
 import graft.cast.Casts
 import graft.sink.{BronzeFile, BronzeWriter}
 
@@ -13,12 +12,13 @@ import graft.sink.{BronzeFile, BronzeWriter}
   * DatasetInfo / SchemaStats dataclasses, app/utils/metadata.py:52-81,
   * assembled by write_metadata_from_df at :85-150), re-designed for
   * Spark: the row count, ALL per-column null counts and the head-N
-  * preview are aggregates observed on the job that writes the bronze
-  * file ([[observed]]), not N jobs. They cost no extra pass and
-  * describe exactly the rows written. [[tableStats]] runs the count
-  * expressions as one aggregate over any frame, and [[preview]] takes
-  * the preview as its own job; the landings use neither. This is what
-  * keeps manifest generation viable at 100 TB.
+  * preview are counted and rendered by the function that writes each
+  * part of the bronze file (`BronzeWriter`, `graftshim.PartWriter`),
+  * not by N jobs. They cost no extra pass and describe exactly the
+  * rows written. [[tableStats]] runs the count expressions as one
+  * aggregate over any frame, and [[preview]] takes the preview as its
+  * own job; the landings use neither. This is what keeps manifest
+  * generation viable at 100 TB.
   */
 final case class CoreInfo(
     fileName: String,
@@ -54,41 +54,15 @@ final case class Manifest(
 object Manifest {
 
   /** Row count + per-column null counts as aggregate expressions, to
-    * run in one pass: as an aggregate ([[tableStats]]) or as an
-    * `Observation` riding another job (reference computes these
-    * separately: len(df) at app/utils/metadata.py:122, isna().sum()
-    * per column at :32-33). `count` keeps every value 0, never NULL,
-    * when no rows flow.
+    * run in one pass as an aggregate ([[tableStats]]) (reference
+    * computes these separately: len(df) at app/utils/metadata.py:122,
+    * isna().sum() per column at :32-33). `count` keeps every value 0,
+    * never NULL, when no rows flow.
     */
   def statsExprs(columns: Seq[String]): Seq[Column] =
     count(lit(1)).as("rows") +: columns.zipWithIndex.map { case (c, i) =>
       count(when(Casts.literalCol(c).isNull, 1)).as(s"nulls_$i")
     }
-
-  /** `df`, unchanged, with [[statsExprs]] and a first-`n` preview
-    * observed on `obs` by the job that runs it. The preview keeps the
-    * `n` rows with the smallest `monotonically_increasing_id`, that is
-    * by partition index and then position in the partition: the rows
-    * [[preview]] returns, rendered the same way, and only those rows
-    * are rendered. The id is taken in a projection below the
-    * observation, where it sees the partition index of the scan; a
-    * coalesce above it may run several partitions in one task.
-    * [[statsOf]] and [[previewOf]] read the values.
-    */
-  def observed(df: DataFrame, obs: Observation, n: Int = 3): DataFrame = {
-    val columns = df.columns.toIndexedSeq
-    val cols = columns.map(Casts.literalCol)
-    val key = Iterator.iterate("_preview_key")(_ + "_").find(k => !columns.exists(_.equalsIgnoreCase(k))).get
-    val exprs = statsExprs(columns) :+
-      IngestShim.firstRowsJson(df.sparkSession, col(key), struct(cols: _*), n).as("preview")
-    df.withColumn(key, monotonically_increasing_id())
-      .observe(obs, exprs.head, exprs.tail: _*)
-      .select(cols: _*)
-  }
-
-  /** The preview of an [[observed]] frame, from its observed values. */
-  def previewOf(value: String => Any): Seq[String] =
-    value("preview").asInstanceOf[scala.collection.Seq[String]].toIndexedSeq
 
   /** Row count and null counts per column from the values of
     * [[statsExprs]]`(columns)`, looked up by alias. */
@@ -111,8 +85,9 @@ object Manifest {
   /** Head-N preview as JSON records (reference app/utils/metadata.py:36-38).
     * `head` plans a `CollectLimit`: one job, where `limit(n).collect()`
     * adds a shuffle and a second job under adaptive execution. The
-    * landings observe the same records on their write ([[observed]]);
-    * this stands alone for frames that are not being written.
+    * landings render the same records as they write them
+    * (`BronzeWriter`); this stands alone for frames that are not being
+    * written.
     */
   def preview(df: DataFrame, n: Int = 3): Seq[String] =
     df.toJSON.head(n).toIndexedSeq
@@ -140,8 +115,8 @@ object Manifest {
       .format(java.time.format.DateTimeFormatter.ISO_LOCAL_DATE_TIME)
 
   /** Assemble the full manifest for a written file, its DataFrame and
-    * the row counts, null counts and preview observed while it was
-    * written; the file's size and MD5 are read from the file.
+    * its row count, null counts and preview; the file's size and MD5
+    * are read from the file.
     */
   def forWrittenFile(
       spark: SparkSession,
@@ -156,20 +131,19 @@ object Manifest {
     val p = new Path(filePath)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) throw new java.io.FileNotFoundException(filePath)
-    forBronzeFile(df, BronzeFile(filePath, fs.getFileStatus(p).getLen, md5OfFile(spark, filePath)),
-      dataset, rows, nulls, preview, extra, clock)
+    forBronzeFile(df,
+      BronzeFile(filePath, fs.getFileStatus(p).getLen, md5OfFile(spark, filePath), rows, nulls, preview),
+      dataset, extra, clock)
   }
 
-  /** [[forWrittenFile]] for a file whose size and MD5 its writer took
-    * (`BronzeWriter.writeFile`), so the file is not read again.
+  /** [[forWrittenFile]] for a file whose size, MD5 and row statistics
+    * its writer took (`BronzeWriter.writeFile`), so the file is not
+    * read again.
     */
   def forBronzeFile(
       df: DataFrame,
       file: BronzeFile,
       dataset: DatasetInfo,
-      rows: Long,
-      nulls: Map[String, Long],
-      preview: Seq[String],
       extra: Map[String, String],
       clock: java.time.Clock): Manifest = {
     val p = new Path(file.path)
@@ -184,9 +158,9 @@ object Manifest {
       schemaStats = SchemaStats(
         columns = df.columns.toIndexedSeq,
         dtypes = dtypes(df),
-        rows = rows,
-        nullCounts = nulls,
-        preview = preview),
+        rows = file.rows,
+        nullCounts = file.nulls,
+        preview = file.preview),
       extra = extra)
   }
 

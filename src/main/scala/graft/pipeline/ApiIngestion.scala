@@ -20,8 +20,8 @@ import graft.sources.{ApiSource, ApiTransport}
   * the user_id is resolved on the driver and pushed into the source
   * request — the same shape as DataSource V2 filter pushdown. The
   * payloads are local frames (`ApiSource.fetchDf`), so the lookup's
-  * `head()` is evaluated by the optimizer on the driver, and a run
-  * takes two Spark jobs: the two writes.
+  * `head()` is evaluated by the optimizer on the driver, and so are the
+  * two bronze writes (`BronzeWriter`): a run takes no Spark job.
   *
   * Both frames are fetched, validated and looked up before anything
   * lands. The two landings (bronze write, manifest) then run at the
@@ -113,10 +113,10 @@ object ApiIngestion {
     val partValue = Casts.todayYyyymmdd(clock)
     // manifest records the full source URL (reference passes
     // endpoint=url into write_metadata_from_df, app/ingestao_api.py:205-215)
-    // A payload is a small frame parsed on the driver: one task lands
-    // it, and its one part becomes the bronze file.
+    // A payload is a small frame parsed on the driver, which writes it
+    // as one part: the bronze file.
     def land(df: DataFrame, cfg: PipelineConfig, endpointKey: String, extra: Map[String, String]) =
-      CsvIngestion.land(spark, df.coalesce(1), cfg, partValue, runId, clock,
+      CsvIngestion.land(spark, df, cfg, partValue, runId, clock,
         endpoint = cfg.api.map(a => a.baseUrl + a.endpoints.getOrElse(endpointKey, endpointKey)),
         extra = extra)
     // The two landings share no output, so users lands on a fresh thread

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.cast.Casts
 import graft.config.PipelineConfig
 import graft.meta.{DatasetInfo, Manifest}
@@ -16,10 +16,10 @@ import graft.validate.Validate
   * Unlike the reference, every step up to the write is LAZY plan
   * construction, and the run is ONE Spark job: the driver reads the
   * header and proves where the file may be cut (`CsvSource`), and the
-  * job parses and writes each byte range in its own task while it
-  * observes the manifest's row count, null counts and preview. The
-  * driver then joins the tasks' parts into the bronze file, taking its
-  * size and MD5 as it goes (`BronzeWriter.writeFile`).
+  * job parses and writes each byte range in its own task, which
+  * reports the manifest's row count, null counts and first rows for
+  * its part. The driver then joins the tasks' parts into the bronze
+  * file, taking its size and MD5 as it goes (`BronzeWriter.writeFile`).
   */
 final case class IngestionResult(
     dataFile: String,
@@ -72,11 +72,12 @@ object CsvIngestion {
   }
 
   /** Land `df` as one bronze file plus its manifest sidecar: the steps
-    * both pipelines end with, in one Spark job. The manifest's row
-    * count, null counts and preview ride the write job as an
-    * observation, so they describe exactly the rows written and cost no
-    * second pass over the source; the file's size and MD5 come from
-    * the writer, so the file is not read again.
+    * both pipelines end with, in at most one Spark job (none for a frame
+    * whose rows are on the driver). The manifest's row count, null
+    * counts and preview come from the parts' writers, so they describe
+    * exactly the rows written and cost no second pass over the source;
+    * the file's size and MD5 come from the join, so the file is not
+    * read again.
     */
   private[pipeline] def land(
       spark: SparkSession,
@@ -87,13 +88,9 @@ object CsvIngestion {
       clock: java.time.Clock,
       endpoint: Option[String] = None,
       extra: Map[String, String] = Map.empty): IngestionResult = {
-    // Retry-safe: the observation sits in the write job's result stage,
-    // and Spark applies a result stage's accumulator updates once per
-    // partition, however many attempts a task took.
-    val stats = Observation()
-    val file = BronzeWriter.writeFile(spark, Manifest.observed(df, stats), cfg.sink, partValue)
-    val observed = stats.get
-    val (rows, nulls) = Manifest.statsOf(df.columns.toIndexedSeq, observed)
+    // Retry-safe: the statistics come from the job's results, one per
+    // partition, from the attempt whose part is kept.
+    val file = BronzeWriter.writeFile(spark, df, cfg.sink, partValue)
     val info = DatasetInfo(
       datasetId = cfg.datasetId,
       origin = cfg.origin,
@@ -104,7 +101,7 @@ object CsvIngestion {
       runId = runId,
       producer = "graft",
       endpoint = endpoint)
-    val manifest = Manifest.forBronzeFile(df, file, info, rows, nulls, Manifest.previewOf(observed), extra, clock)
-    IngestionResult(file.path, Manifest.write(spark, manifest, file.path), rows, Nil)
+    val manifest = Manifest.forBronzeFile(df, file, info, extra, clock)
+    IngestionResult(file.path, Manifest.write(spark, manifest, file.path), file.rows, Nil)
   }
 }

@@ -3,19 +3,38 @@ package graft.sink
 import java.security.MessageDigest
 import org.apache.hadoop.fs.{ChecksumFileSystem, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.graftshim.CsvRanges
+import org.apache.spark.sql.execution.datasources.csv.CSVFileFormat
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.graftshim.{PartWriter, WrittenPart}
 import graft.config.SinkConfig
 
-/** A landed bronze file: its path, size and MD5 (hex). */
-final case class BronzeFile(path: String, sizeBytes: Long, md5: String)
+/** A landed bronze file: its path, size and MD5 (hex), and the row
+  * count, NULL count per column and first rows (as JSON records) of the
+  * rows written to it. */
+final case class BronzeFile(
+    path: String,
+    sizeBytes: Long,
+    md5: String,
+    rows: Long,
+    nulls: Map[String, Long],
+    preview: Seq[String])
 
 /** Hive-partitioned "bronze" landing writer.
   *
   * Reference layout (app/ingestao_api.py:113-130, app/ingestao_csv.py:90-113):
   * `<base>/<table>/<partition_key>=<YYYYMMDD>/<file>` — one file per
   * partition, `;`-separated CSV, header row, nulls as empty string.
-  * Spark produces the identical directory layout natively with
-  * `write.partitionBy(key)`.
+  *
+  * Every landing goes through one part writer (`graftshim.PartWriter`):
+  * it replaces the partition directory, as Spark's `overwrite` mode
+  * does, and each partition of the frame writes a part with Spark's own
+  * output writer for the format and reports its row count, NULL counts
+  * and first rows. A frame whose rows are already on the driver (a
+  * parsed API payload) is written there, with no Spark job; any other
+  * frame takes one job. The parts the write reports are kept; any other
+  * part in the directory, from a failed task attempt, is deleted. A
+  * speculative attempt that lost its race but is still writing when the
+  * clean-up runs may leave its part behind.
   *
   * Scale posture: single-file mode mirrors the reference's
   * one-file-per-partition (and gives byte-stable goldens for tests).
@@ -39,7 +58,7 @@ object BronzeWriter {
 
   /** Write one dated partition; returns the path of the written data
     * file (single-file mode, see [[writeFile]]) or the partition
-    * directory.
+    * directory, which then holds the parts.
     */
   def write(
       spark: SparkSession,
@@ -49,53 +68,61 @@ object BronzeWriter {
       singleFile: Boolean = true): String =
     if (singleFile) writeFile(spark, df, cfg, partitionValue).path
     else {
-      val partDir = dirOf(cfg, partitionValue)
-      save(df, cfg, partDir)
-      partDir
+      val dir = dirOf(cfg, partitionValue)
+      val parts = writeParts(spark, df, cfg, dir, onePart = false).flatMap(_.path)
+      keepOnly(spark, dir, parts.map(new Path(_).getName).toSet)
+      dir
     }
 
   /** Write one dated partition as the one file `cfg.fileName`, with the
-    * file's size and MD5, taken while its bytes are joined.
+    * file's size and MD5, taken while its bytes are joined, and the
+    * statistics of its rows.
     *
-    * A CSV frame keeps its partitions, and each task writes one part:
-    * the header line, then its rows. The lowest-numbered part, that of
-    * partition 0, which Spark writes even when it is empty, takes the
-    * other parts' rows appended in partition order, each part's header
-    * left out, and is then renamed to `cfg.fileName`. The file holds
-    * the bytes a one-task write of the same rows gives. A Parquet
-    * frame is written by one task, as parts of it do not join. A frame
-    * with more than one non-empty partition needs a file system that
-    * can append.
+    * A CSV frame keeps its partitions, and each writes one part;
+    * partition 0's, which is written even when it is empty, starts with
+    * the header line. That part takes the other parts' bytes appended
+    * in partition order, and is then renamed to `cfg.fileName`. The
+    * file holds the bytes a one-task write of the same rows gives. A
+    * Parquet frame is written as one part, as parts of it do not join.
+    * A frame with more than one non-empty partition needs a file system
+    * that can append.
     */
   def writeFile(spark: SparkSession, df: DataFrame, cfg: SinkConfig, partitionValue: String): BronzeFile = {
-    val partDir = dirOf(cfg, partitionValue)
-    save(if (cfg.format == "csv") df else df.coalesce(1), cfg, partDir)
-    joinParts(spark, partDir, cfg.fileName, CsvRanges.headerBytes(spark, df.schema, CsvWriteOptions))
+    val dir = dirOf(cfg, partitionValue)
+    val parts = writeParts(spark, df, cfg, dir, onePart = cfg.format != "csv")
+    val target = new Path(new Path(dir), cfg.fileName)
+    val (size, md5) = joinParts(spark, parts.flatMap(_.path).map(new Path(_)), target)
+    keepOnly(spark, dir, Set(cfg.fileName))
+    val nulls = df.columns.indices.map(i => parts.map(_.nulls(i)).sum)
+    BronzeFile(target.toString, size, md5, parts.map(_.rows).sum, df.columns.zip(nulls).toMap,
+      parts.flatMap(_.firstRows).take(3))
   }
 
   private def dirOf(cfg: SinkConfig, partitionValue: String) =
     s"${cfg.baseDir}/${cfg.table}/${cfg.partitionKey}=$partitionValue"
 
-  private def save(df: DataFrame, cfg: SinkConfig, partDir: String): Unit = {
-    val writer = df.write.mode("overwrite")
-    cfg.format match {
-      case "csv" => writer.options(CsvWriteOptions).csv(partDir)
-      case "parquet" => writer.parquet(partDir)
+  /** `df` written as parts into `dir`, which is emptied first; the
+    * frame is checked, and an unsupported format refused, before
+    * anything in `dir` is touched.
+    */
+  private def writeParts(spark: SparkSession, df: DataFrame, cfg: SinkConfig, dir: String,
+      onePart: Boolean): Seq[WrittenPart] = {
+    val writer = cfg.format match {
+      case "csv" => new PartWriter(df, new CSVFileFormat, CsvWriteOptions, onePart)
+      case "parquet" => new PartWriter(df, new ParquetFileFormat, Map.empty, onePart)
       case other => throw new IllegalArgumentException(s"unsupported bronze format: $other")
     }
+    val d = new Path(dir)
+    rawFileSystem(spark, d).delete(d, true)
+    writer.write(dir)
   }
 
-  /** Spark names its output `part-<partition>-…`; the reference names
-    * files explicitly (e.g. `users.txt`). Join the parts into the first
-    * (see [[writeFile]]; a later part must start with `header`), then
+  /** Join `parts`, in order, into the first (see [[writeFile]]), then
     * rename it via Hadoop FS for layout parity (SURVEY.md §7.4).
+    * Returns the joined file's size and MD5.
     */
-  private def joinParts(spark: SparkSession, dir: String, fileName: String, header: => Array[Byte]): BronzeFile = {
-    val d = new Path(dir)
-    val fs = rawFileSystem(spark, d)
-    val parts = fs.listStatus(d).map(_.getPath).filter(_.getName.startsWith("part-"))
-      .sortBy(p => (p.getName.stripPrefix("part-").takeWhile(_.isDigit).toLong, p.getName))
-    require(parts.nonEmpty, s"expected a part file in $dir, found none")
+  private def joinParts(spark: SparkSession, parts: Seq[Path], target: Path): (Long, String) = {
+    val fs = rawFileSystem(spark, target)
     val digest = MessageDigest.getInstance("MD5")
     val buf = new Array[Byte](1024 * 1024)
     // every byte read from `in` into the digest, and to `out` if given
@@ -113,28 +140,24 @@ object BronzeWriter {
     val first = fs.open(parts.head)
     var size = try pass(first, None) finally first.close()
     if (parts.length > 1) {
-      val head = header
       val out = fs.append(parts.head)
       try parts.tail.foreach { p =>
         val in = fs.open(p)
-        try {
-          if (!java.util.Arrays.equals(in.readNBytes(head.length), head))
-            throw new java.io.IOException(s"$p does not start with the header line of ${parts.head}")
-          size += pass(in, Some(out))
-        } finally in.close()
+        try size += pass(in, Some(out)) finally in.close()
       } finally out.close()
-      parts.tail.foreach(fs.delete(_, false))
     }
-    val target = new Path(d, fileName)
-    if (fs.exists(target)) fs.delete(target, false)
     if (!fs.rename(parts.head, target))
       throw new java.io.IOException(s"could not rename ${parts.head} to $target")
-    // drop Spark's _SUCCESS marker and crc sidecars for a clean bronze dir
-    fs.listStatus(d).foreach { s =>
-      val n = s.getPath.getName
-      if (n == "_SUCCESS" || n.endsWith(".crc")) fs.delete(s.getPath, false)
-    }
-    BronzeFile(target.toString, size, digest.digest().map("%02x".format(_)).mkString)
+    (size, digest.digest().map("%02x".format(_)).mkString)
+  }
+
+  /** Delete every entry of `dir` not named in `names`: joined parts,
+    * parts of failed task attempts and the writer's checksum sidecars,
+    * so a bronze directory holds only what the landing keeps. */
+  private def keepOnly(spark: SparkSession, dir: String, names: Set[String]): Unit = {
+    val d = new Path(dir)
+    val fs = rawFileSystem(spark, d)
+    fs.listStatus(d).map(_.getPath).filterNot(p => names(p.getName)).foreach(fs.delete(_, true))
   }
 
   /** `path`'s file system without a checksum layer. The local file
@@ -142,7 +165,7 @@ object BronzeWriter {
     * beside each file it creates, hides those from `listStatus`, and
     * reads them along with the file on `open`. A bronze directory holds
     * only the data file and its manifest, so the landing steps after
-    * the Spark write go through the raw file system. The checksum
+    * the parts are written go through the raw file system. The checksum
     * instance is cached and shared, so it is not reconfigured instead.
     */
   private[graft] def rawFileSystem(spark: SparkSession, path: Path): FileSystem =

@@ -1,6 +1,6 @@
 package org.apache.spark.sql.graftshim
 
-import java.io.{CharArrayWriter, InputStream}
+import java.io.InputStream
 import java.net.URI
 import java.util.concurrent.atomic.AtomicReference
 import scala.jdk.CollectionConverters._
@@ -12,7 +12,7 @@ import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.deploy.SparkHadoopUtil
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.csv.{CSVHeaderChecker, CSVOptions, UnivocityGenerator, UnivocityParser}
+import org.apache.spark.sql.catalyst.csv.{CSVHeaderChecker, CSVOptions, UnivocityParser}
 import org.apache.spark.sql.execution.datasources.{CodecStreams, HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.util.SerializableConfiguration
@@ -24,7 +24,7 @@ import org.apache.spark.util.SerializableConfiguration
 final case class CsvRange(path: String, start: Long, end: Long)
 
 /** Spark's multi-line CSV read, one task per byte range instead of
-  * one per file, and the header line of Spark's CSV writer. Each range
+  * one per file. Each range
   * goes through `UnivocityParser.parseStream` with the reader's own
   * options, so a range that starts at a record parses to the rows the
   * whole-file parse gives for those bytes.
@@ -54,18 +54,19 @@ object CsvRanges {
           .map(f => f.getPath.toUri.toString -> f.getLen)
     }.getOrElse(Nil)
 
-  /** The latest configuration [[frame]] broadcast, with its entries. */
-  private val lastConf =
-    new AtomicReference[(SparkContext, Map[String, String], Broadcast[SerializableConfiguration])]
+  /** The configurations broadcast last, by context and entries: a
+    * landing broadcasts one for its read and one for its write. */
+  private val recentConfs =
+    new AtomicReference(List.empty[(SparkContext, Map[String, String], Broadcast[SerializableConfiguration])])
 
-  /** `conf` broadcast on `sc`: the latest broadcast while its entries
-    * are unchanged, as serializing and storing one takes about as long
-    * as the rest of planning a read. */
-  private def broadcastConf(sc: SparkContext, conf: Configuration): Broadcast[SerializableConfiguration] = {
+  /** `conf` broadcast on `sc`: one of the last few broadcasts whose
+    * entries are the same, when there is one, as serializing and
+    * storing one takes about as long as the rest of planning a read. */
+  private[graftshim] def broadcastConf(sc: SparkContext, conf: Configuration): Broadcast[SerializableConfiguration] = {
     val entries = conf.iterator.asScala.map(e => e.getKey -> e.getValue).toMap
-    Option(lastConf.get).collect { case (`sc`, `entries`, b) => b }.getOrElse {
+    recentConfs.get.collectFirst { case (`sc`, `entries`, b) => b }.getOrElse {
       val b = sc.broadcast(new SerializableConfiguration(conf))
-      lastConf.set((sc, entries, b))
+      recentConfs.getAndUpdate(l => ((sc, entries, b) :: l).take(4))
       b
     }
   }
@@ -108,18 +109,5 @@ object CsvRanges {
     val parser = new UnivocityParser(schema, schema, options)
     val header = new CSVHeaderChecker(schema, options, s"CSV file: $path", r.start == 0)
     UnivocityParser.parseStream(in, parser, header, schema)
-  }
-
-  /** The header line Spark's CSV writer puts at the top of every part
-    * file it writes for `schema` with `options`, in the writer's
-    * encoding.
-    */
-  def headerBytes(spark: SparkSession, schema: StructType, options: Map[String, String]): Array[Byte] = {
-    val parsed = csvOptions(spark, options)
-    val text = new CharArrayWriter()
-    val gen = new UnivocityGenerator(schema, text, parsed)
-    gen.writeHeaders()
-    gen.flush()
-    text.toString.getBytes(parsed.charset)
   }
 }

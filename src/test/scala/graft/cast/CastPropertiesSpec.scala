@@ -51,6 +51,31 @@ class CastPropertiesSpec extends SparkSpec {
     out.foreach(r => assert(r.get(1) === r.get(2), r))
   }
 
+  test("stripPython equals btrim(s, PythonWhitespace) on generated strings, interpreted and codegen'd") {
+    val draw = new scala.util.Random(13)
+    val spaces = Casts.PythonWhitespace.map(_.toString)
+    assert(spaces.length === 29)
+    // neighbours of the whitespace code points, in the same UTF-8 lengths
+    val others = Seq("a", "\"", "x y", "\u00e9", "\u0086", "\u00a1", "\u1681", "\u200b", "\u2030", "\u3001",
+      "\u65e5\u672c", "\ud83d\ude00", "\u007f", "\u0000")
+    val pieces = spaces ++ others
+    val strings = Seq(null, "") ++ spaces ++ spaces.map(w => w + "a" + w) ++ Seq.fill(3000) {
+      if (draw.nextInt(40) == 0) null
+      else Seq.fill(draw.nextInt(8))(pieces(draw.nextInt(pieces.length))).mkString
+    }
+    val local = strings.toDF("s")
+    // a local frame's projection is evaluated by the optimizer; a
+    // shuffled one's by whole-stage generated code
+    for (df <- Seq(local, local.repartition(3))) {
+      val out = df.select(col("s"), Casts.stripPython(col("s")), btrim(col("s"), lit(Casts.PythonWhitespace)))
+        .collect()
+      assert(out.length === strings.length)
+      assert(out.count(_.isNullAt(0)) > 1)
+      assert(out.count(r => !r.isNullAt(0) && r.getString(0) != r.getString(1)) > 1000) // most strings lose an end
+      out.foreach(r => assert(r.get(1) === r.get(2), r))
+    }
+  }
+
   test("toLongLenient parses any long's toString, with or without .0") {
     val longs = Seq.fill(200)(rnd.nextLong() % 1000000000L)
     val out = longs.toDF("v")

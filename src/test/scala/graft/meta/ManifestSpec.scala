@@ -18,16 +18,14 @@ class ManifestSpec extends SparkSpec {
     assert(nulls === Map("i" -> 1L, "s" -> 1L))
   }
 
-  /** The preview `Manifest.observed` records on a job that writes `df`
-    * (coalesced to one partition first, as a single-file landing is). */
-  private def observedPreview(df: org.apache.spark.sql.DataFrame, coalesce: Boolean): Seq[String] = {
-    val obs = org.apache.spark.sql.Observation()
-    val observed = Manifest.observed(df, obs)
-    (if (coalesce) observed.coalesce(1) else observed).write.format("noop").mode("overwrite").save()
-    Manifest.previewOf(obs.get)
+  /** The preview `BronzeWriter.writeFile` takes from the parts it
+    * writes for `df` (coalesced to one partition first, if asked). */
+  private def landedPreview(df: org.apache.spark.sql.DataFrame, coalesce: Boolean): Seq[String] = {
+    val sink = graft.config.SinkConfig(Files.createTempDirectory("graft-preview").toString, "t", "f.txt")
+    graft.sink.BronzeWriter.writeFile(spark, if (coalesce) df.coalesce(1) else df, sink, "20251020").preview
   }
 
-  test("observed preview equals Manifest.preview on multi-partition frames, NULL fields left out") {
+  test("landed preview equals Manifest.preview on multi-partition frames, NULL fields left out") {
     val local = spark.createDataFrame(
       (1 to 9).map(i => (i, if (i % 2 == 0) None else Some(s"s$i"), if (i == 1) None else Some(i * 1.5))))
       .toDF("i", "s", "d")
@@ -41,16 +39,16 @@ class ManifestSpec extends SparkSpec {
       for (df <- Seq(local, ranged, ranged.filter("id >= 30")); coalesce <- Seq(false, true)) {
         val want = Manifest.preview(df)
         assert(want.length === 3)
-        assert(observedPreview(df, coalesce) === want)
+        assert(landedPreview(df, coalesce) === want)
       }
     } finally spark.conf.unset("spark.sql.leafNodeDefaultParallelism")
     assert(Manifest.preview(local).head === """{"i":1,"s":"s1"}""")
     assert(Manifest.preview(ranged).head === """{"id":0}""")
   }
 
-  test("observed preview of a 0-row frame is empty, and the manifest writes null") {
+  test("landed preview of a 0-row frame is empty, and the manifest writes null") {
     val empty = spark.range(0, 10, 1, 4).toDF().filter("id < 0")
-    assert(observedPreview(empty, coalesce = true) === Nil)
+    assert(landedPreview(empty, coalesce = true) === Nil)
     val m = Manifest(CoreInfo("f", "/d", 0L, "00", "2025-10-20T12:00:00"), ds,
       SchemaStats(Seq("id"), Map("id" -> "bigint"), 0L, Map("id" -> 0L), Nil))
     assert(Manifest.toJson(m).contains("\"preview\": null"))

@@ -88,7 +88,7 @@ class ApiIngestionSpec extends SparkSpec {
     assert(postsManifest.contains("\"Int64\"")) // user_id dtype, pandas name
   }
 
-  test("one run takes 2 jobs (the two writes); manifest counts match") {
+  test("one run takes 0 jobs (both payloads land on the driver); manifest counts match") {
     val tmp = Files.createTempDirectory("graft-api-jobs")
     val (uf, pf) = writeFixtures(tmp)
     val transport = new FixtureTransport(Map(
@@ -96,7 +96,7 @@ class ApiIngestionSpec extends SparkSpec {
     val (usersCfg, postsCfg) = cfgs(tmp.resolve("bronze").toString)
     val (res, jobs) = countJobs(ApiIngestion.run(spark, usersCfg, postsCfg, transport,
       targetName = "Kurtis Weissnat", runId = "run-jobs", clock = clock))
-    assert(jobs === 2)
+    assert(jobs === 0)
     assertManifestCountsMatchBronze(res.users.dataFile)
     assertManifestCountsMatchBronze(res.posts.dataFile)
   }
